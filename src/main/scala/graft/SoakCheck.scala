@@ -690,8 +690,8 @@ object SoakCheck {
       val n = pipeline.Dedup.segDelete(spark, segIdx,
         segDocs.filter(col("id") < SegDel),
         col("id"), col("text"), width = 5)
-      // the verification count below reads the whole MOR docs table (a
-      // key-windowed merge — index-sized by design) and is asserted
+      // the verification count below reads the whole MOR docs table
+      // (index-sized by design) and is asserted
       // OUTSIDE this measure; the gate prices the DELETE alone
       spark.range(0, n).toDF()
     })(_.count())

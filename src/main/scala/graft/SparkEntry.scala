@@ -90,7 +90,7 @@ object SparkEntry {
       payload(s.read.format("graft").load(Fixtures.morDir(s, d)))),
     // Partition-filtered MOR format read (r6): the pushed `=` predicate on
     // _hoodie_partition_path prunes the file-GROUP set on BOTH merge sides
-    // at metadata level before the window merge is planned.
+    // at metadata level before the merge is planned.
     "q_snapshot_format_mor_part" -> ((s, d) =>
       payload(s.read.format("graft").load(Fixtures.morDir(s, d))
         .filter(col(graft.format.MetaCols.PartitionPath) === "F"))),
@@ -504,7 +504,7 @@ object SparkEntry {
     // rows (older o_orderdate; must not apply) and half FRESH rows (newer;
     // must apply). COW resolves at write time, MOR at merge time (the
     // delta is left un-compacted so the format read plans the ordering-
-    // aware window merge).
+    // aware merge).
     "q_precombine_cow" -> ((s, d) =>
       payload(s.read.format("graft")
         .load(Fixtures.precombineDir(s, d, "cow")))),

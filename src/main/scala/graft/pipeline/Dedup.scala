@@ -293,21 +293,13 @@ object Dedup {
     }
   }
 
-  /** Candidate stage of [[winnowPairs]] (prefix index over `base`'s
-    * (id, block, fps) rows → distinct (id_a, id_b)). Shared with the
-    * WinnowStress measurement tool so candidate counts are measured on the
-    * SHIPPED plan, not a copy. All size arithmetic runs in LONG — Int
+  /** The prefix index of [[winnowPairs]]' candidate stage over `base`'s
+    * (id, block, fps) rows — split out (r17) so [[winnowPairs]] can pin it
+    * in the scoped persist set: the candidate self-join references it
+    * through both sides, and unpersisted the df-count shuffle + df join +
+    * rank window all ran twice. All size arithmetic runs in LONG — Int
     * sz·1000/sz·p would wrap for multi-million-fingerprint docs and
     * silently widen the prefix. */
-  private[graft] def winnowCandidates(base: DataFrame, minShared: Int,
-      ratioPermille: Option[Int], dfCap: Option[Int] = None): DataFrame =
-    winnowCandidatesFrom(
-      winnowPrefix(base, minShared, ratioPermille, dfCap), ratioPermille)
-
-  /** The prefix index of [[winnowCandidates]] — split out (r17) so
-    * [[winnowPairs]] can pin it in the scoped persist set: the candidate
-    * self-join references it through both sides, and unpersisted the
-    * df-count shuffle + df join + rank window all ran twice. */
   private[graft] def winnowPrefix(base: DataFrame, minShared: Int,
       ratioPermille: Option[Int], dfCap: Option[Int]): DataFrame = {
     val exploded = base.select(col("id"), col("block"),
@@ -766,9 +758,8 @@ object Dedup {
       val seen =
         if (tl.completedInstants().nonEmpty)
           // native catalog scan (r14, re-landed from the measured r13
-          // revert): the V1 MOR snapshot read merges deltas via a per-key
-          // window — one index-sized shuffle per BATCH however small the
-          // batch; the DSv2 scan merges per file group inside the task.
+          // revert): it merges per file group inside the task and its
+          // bucket partitioning feeds the storage-partitioned joins.
           // The `pt` filter is a static partition prune on the catalog
           // table's partition column (planned slices narrow to the
           // batch's clusters — spec-asserted via inputPartitions)
@@ -1501,10 +1492,9 @@ object Dedup {
       val batchRows = sigs.join(base, "id") // (id, sig, shingles)
       val tl = graft.format.Timeline(
         spark.sessionState.newHadoopConf(), indexDir)
-      // catalog read (r13): the index is MOR — the V1 snapshot path would
-      // merge its deltas with a per-key window, one INDEX-sized shuffle
-      // per batch; the catalog's native MOR scan merges per file group
-      // inside the task, so reading history costs input bytes only
+      // catalog read (r13): the index is MOR; the catalog's native MOR
+      // scan merges per file group inside the task (the same reader every
+      // snapshot read uses), so reading history costs input bytes only
       val seen =
         if (tl.completedInstants().nonEmpty)
           graft.util.CatalogMount.table(spark, indexDir)

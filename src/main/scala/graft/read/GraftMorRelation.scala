@@ -45,8 +45,8 @@ private[read] trait GraftFilteredScan extends BaseRelation
 }
 
 /** Batch `spark.read.format("graft")` relation for snapshots that NEED the
-  * MOR window merge (file groups with outstanding deltas) — the case a plain
-  * file relation cannot express, previously rejected by the format surface.
+  * MOR merge (file groups with outstanding deltas) — the case a plain file
+  * relation cannot express, previously rejected by the format surface.
   *
   * Shape: a V1 `PrunedFilteredScan`. The V1 scan contract is exactly the
   * lazy-planning point the merge needs — `buildScan` receives the user's
@@ -55,18 +55,18 @@ private[read] trait GraftFilteredScan extends BaseRelation
   *  1. **Metadata-level partition pruning on BOTH merge sides.** Predicates
   *     on `_hoodie_partition_path` provably required by the filter tree
   *     ([[GraftMorRelation.partitionValues]]) prune the file-GROUP set
-  *     before the window merge is planned. This is lossless — a partition
-  *     is a superset of its file groups, and the per-key merge window never
-  *     crosses partitions (a record key's group lives in one partition) —
-  *     and it closes the base/delta pruning asymmetry: the r5 FileIndex
+  *     before the merge is planned. This is lossless — a partition is a
+  *     superset of its file groups, and the merge never crosses file
+  *     groups (all versions of a key live in its one group) — and it
+  *     closes the base/delta pruning asymmetry: the r5 FileIndex
   *     pruned only the base-file side, deltas were row-filtered post-merge.
   *     At 100 TB this is the difference between merging one partition's
   *     un-compacted groups and merging all of them.
-  *  2. **The merge itself stays declarative.** The scan body IS
+  *  2. **One merge for every surface.** The scan body IS
   *     [[SnapshotReader.merge]]'s plan (pruning FileIndex on base-only
-  *     groups, window merge on dirty ones) with the pushed filters applied
-  *     on top — Catalyst then pushes them below the union into the parquet
-  *     scans wherever legal (everywhere except across the merge window).
+  *     groups, the shared per-file-group reader on dirty ones) with the
+  *     pushed filters applied on top — Catalyst pushes them into the
+  *     base-only parquet scan; on merged groups they apply post-merge.
   *
   * The reference serves its view as a plain `Dataset<Row>` with no
   * compaction precondition (ref: DeleteSupport.java:89-96); this relation

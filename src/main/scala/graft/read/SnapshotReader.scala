@@ -2,7 +2,6 @@ package graft.read
 
 import graft.format._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Snapshot / time-travel reader over a versioned table (COW or MOR).
@@ -14,16 +13,18 @@ import org.apache.spark.sql.functions._
   * snapshot query: latest file slice per file group as of the requested
   * instant.
   *
-  * MOR path: file groups that carry delta files are merged by
-  * `row_number() over (partition by _hoodie_record_key order by
-  * _hoodie_commit_time desc, _hoodie_commit_seqno desc) == 1` with delete
-  * markers (`_hoodie_is_deleted`) filtered out (SURVEY.md §7.2 step 4).
+  * MOR path: file groups that carry delta files are merged PER FILE GROUP
+  * inside the task by the shared MOR reader ([[MorMerge]]): the group's
+  * deltas fold into a key→winner map, the base file streams through it,
+  * delete markers (`_hoodie_is_deleted`) cut the key's history
+  * (SURVEY.md §7.2 step 4). All versions of a key live in its one file
+  * group, so the merge needs no shuffle.
   *
-  * Scale notes (100 TB): ONLY groups with outstanding deltas enter the
-  * window merge (its shuffle is bounded by un-compacted data, typically a
-  * small fraction of the table); pure-base groups stream straight from
-  * parquet and are unioned in. Regular compaction keeps the merge side
-  * small — exactly Hudi's own cost model.
+  * Scale notes (100 TB): ONLY groups with outstanding deltas go through
+  * the merge reader (its memory is bounded by un-compacted delta rows per
+  * group); pure-base groups stream straight from parquet and are unioned
+  * in. Regular compaction keeps the merge side small — exactly Hudi's own
+  * cost model.
   */
 object SnapshotReader {
 
@@ -70,7 +71,7 @@ object SnapshotReader {
     * format surface uses — so the normal user idiom
     * `snapshot().filter($"_hoodie_partition_path" === …)` prunes the
     * file-GROUP set on BOTH merge sides at metadata level before the
-    * window merge is planned (engine API ≡ format surface; r7 parity).
+    * merge is planned (engine API ≡ format surface; r7 parity).
     *
     * @param partitions non-empty → METADATA-level partition pruning: only
     *                   slices under the named partition paths are listed,
@@ -87,7 +88,7 @@ object SnapshotReader {
   /** Snapshot read with an optional READ-OPTIMIZED mode (Hudi's RO query on
     * MOR tables): serve each file group's BASE file only — the state as of
     * its last compaction/base write — skipping outstanding delta files
-    * entirely. No merge window, no shuffle: the plan is the COW fast path
+    * entirely. No merge: the plan is the COW fast path
     * (pruning FileIndex scan with stats/bucket skipping) regardless of how
     * much un-compacted delta data exists. The trade is staleness bounded
     * by compaction lag — Hudi's RO/RT dichotomy exactly. Groups that are
@@ -169,54 +170,44 @@ object SnapshotReader {
     * Schema resolution is O(1) timeline metadata when the commits recorded
     * their writer schema (newest base-commit schema for base files, newest
     * deltacommit schema for deltas, each ≤ `asOf`) — no footer job is ever
-    * planned; pre-schema-recording tables fall back to `mergeSchema`.
+    * planned; pre-schema-recording tables fall back to footer sampling.
     *
     * Base-only groups mount through the partition-pruning
     * [[GraftFileIndex]] relation, so predicates on
     * `_hoodie_partition_path` prune at LISTING time (the normal user idiom,
-    * no explicit `partitions` parameter needed). Delta-carrying groups go
-    * through the window merge, where a partition predicate cannot be pushed
-    * below the per-key window (the key, not the partition, is the window
-    * axis) — for those the explicit `partitions` parameter remains the
-    * metadata-pruning path, and compaction keeps that side small. */
-  /** @param keyFilter optional one-column `_hoodie_record_key` frame:
-    *   restrict the merged snapshot to THESE keys, with the restriction
-    *   pushed BELOW the merge window — the broadcast semi-join drops
-    *   non-matching rows before the key-partitioned exchange, so a
-    *   key-probe over a huge table shuffles only the matching rows
-    *   (batch-sized) instead of every dirty group's. Dropping whole key
-    *   groups before a key-partitioned window is semantics-preserving.
-    *   The frame must be probe-sized (it is broadcast). */
+    * no explicit `partitions` parameter needed). Delta-carrying groups are
+    * merged PER FILE GROUP inside the task by the shared MOR reader
+    * ([[MorMerge]], the same reader the catalog's native MOR scan runs):
+    * whole groups bin-packed per task, no shuffle, and no job at planning
+    * time.
+    *
+    * @param keyFilter optional one-column `_hoodie_record_key` frame:
+    *   restrict the merged snapshot to THESE keys — a broadcast semi-join on
+    *   the merged output, so a key probe over a huge table ships only the
+    *   probe keys. The frame must be probe-sized (it is broadcast). */
   private[graft] def merge(spark: SparkSession, basePath: String,
       slices: Seq[FileSlice],
       timeline: Option[Timeline] = None,
       asOf: Option[String] = None,
       keyFilter: Option[DataFrame] = None): DataFrame = {
-    def keyed(df: DataFrame): DataFrame =
-      keyFilter.fold(df)(kf => df.join(
-        org.apache.spark.sql.functions.broadcast(
-          kf.toDF(MetaCols.RecordKey)),
-        Seq(MetaCols.RecordKey), "left_semi"))
     def abs(rel: String) = s"$basePath/$rel"
     val (withDeltas, baseOnly) = slices.partition(_.deltas.nonEmpty)
     val basePaths = baseOnly.flatMap(_.relPath).map(abs)
     lazy val tl = timeline.getOrElse(
       Timeline(spark.sessionState.newHadoopConf(), basePath))
-    lazy val baseSchema =
-      tl.latestSchemaJson(asOf, Some(Instant.CommitAction))
-    lazy val deltaSchema =
-      tl.latestSchemaJson(asOf, Some(Instant.DeltaCommitAction))
+    def schemaOf(action: String) = tl.latestSchemaJson(asOf, Some(action))
+      .map(org.apache.spark.sql.types.DataType.fromJson(_)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+    lazy val baseSchema = schemaOf(Instant.CommitAction)
 
     val plainScan =
       if (basePaths.isEmpty) None
       else baseSchema match {
-        case Some(sj) =>
+        case Some(schema) =>
           val partFiles = baseOnly.filter(_.relPath.nonEmpty)
             .groupBy(_.partitionPath).toSeq.sortBy(_._1)
             .map { case (p, ss) => p -> ss.flatMap(_.relPath).map(abs) }
-          Some(GraftFileIndex.scan(spark, basePath, partFiles,
-            org.apache.spark.sql.types.DataType.fromJson(sj)
-              .asInstanceOf[org.apache.spark.sql.types.StructType],
+          Some(GraftFileIndex.scan(spark, basePath, partFiles, schema,
             // column-stats skipping index: metadata-recorded per-file
             // min/max ranges let pushed data filters drop files at
             // listing time
@@ -227,69 +218,19 @@ object SnapshotReader {
         case None => Some(evolvedRead(spark, basePaths))
       }
 
-    def baseRead(paths: Seq[String]): DataFrame =
-      baseSchema.fold(evolvedRead(spark, paths))(schemaRead(spark, paths, _))
-    def deltaRead(paths: Seq[String]): DataFrame =
-      deltaSchema.fold(evolvedRead(spark, paths))(schemaRead(spark, paths, _))
+    val merged =
+      if (withDeltas.isEmpty) None
+      else Some(MorMerge.frame(spark, basePath, withDeltas, tl, asOf,
+        baseSchema, schemaOf(Instant.DeltaCommitAction)))
 
-    val merged = if (withDeltas.nonEmpty) {
-      val mergeBase = withDeltas.flatMap(_.relPath).map(abs)
-      val deltaPaths = withDeltas.flatMap(_.deltas.map(d => abs(d.relPath)))
-      val deltas = deltaRead(deltaPaths)
-      val cols = deltas.columns.filter(_ != IsDeleted)
-      val unioned = (if (mergeBase.nonEmpty)
-        Seq(baseRead(mergeBase)
-          .withColumn(IsDeleted, lit(false))) else Seq.empty) :+ deltas
-      val all = keyed(
-        unioned.reduce(_.unionByName(_, allowMissingColumns = true)))
-      // EVENT-TIME ordering (precombine): when the table declared an
-      // ordering column, the row version with the GREATEST ordering value
-      // wins regardless of arrival order — a late-arriving stale delta
-      // cannot shadow newer data. Deletes stay ABSOLUTE (commit-ordered):
-      // the newest delete marker cuts the key's history at its commit, rows
-      // written after it resurrect, rows at/before it are dead (within one
-      // commit the marker still beats the upsert — delete-wins preserved).
-      // Both window functions share one partitioning → ONE shuffle.
-      val pcCol = tl.recordedExtraAsOf(
-        graft.write.FormatWriter.PrecombineKey, asOf)
-        .filter(all.columns.contains)
-      val resolved = pcCol match {
-        case Some(pc) =>
-          val kw = Window.partitionBy(MetaCols.RecordKey)
-          val delCut = max(when(col(IsDeleted), col(MetaCols.CommitTime)))
-            .over(kw)
-          // rank only LIVE rows (post-cut survivors): a dead stale row with
-          // the max ordering value must not steal rn=1 from a resurrected
-          // key. Both windows partition by the key → one shuffle (the
-          // filter preserves the exchange's partitioning).
-          val live = all.withColumn("__graft_delcut", delCut)
-            .filter(!col(IsDeleted) && (col("__graft_delcut").isNull ||
-              col(MetaCols.CommitTime) > col("__graft_delcut")))
-          val w = kw.orderBy(col(pc).desc_nulls_last,
-            col(MetaCols.CommitTime).desc, col(MetaCols.CommitSeqno).desc)
-          live.withColumn("__graft_rn", row_number().over(w))
-            .filter(col("__graft_rn") === 1)
-        case None =>
-          // Tiebreak: within one commit a delete marker beats an upsert of
-          // the same key (deterministic delete-wins semantics; SURVEY.md
-          // §7.5 #2 — same key written twice in one commit must not be
-          // order-dependent).
-          val w = Window.partitionBy(MetaCols.RecordKey)
-            .orderBy(col(MetaCols.CommitTime).desc, col(IsDeleted).desc,
-              col(MetaCols.CommitSeqno).desc)
-          all.withColumn("__graft_rn", row_number().over(w))
-            .filter(col("__graft_rn") === 1 && !col(IsDeleted))
-      }
-      Some(resolved.select(cols.map(col).toIndexedSeq: _*))
-    } else None
-
-    (plainScan.map(keyed).toSeq ++ merged.toSeq)
+    (plainScan.toSeq ++ merged.toSeq)
       .reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .map(df => keyFilter.fold(df)(kf => df.join(
+        broadcast(kf.toDF(MetaCols.RecordKey)), Seq(MetaCols.RecordKey),
+        "left_semi")))
       .getOrElse {
         // every slice is fileless (deletes emptied the groups): a legal
         // empty state, not an error
-        val tl = timeline.getOrElse(Timeline(
-          spark.sessionState.newHadoopConf(), basePath))
         emptyLike(spark, basePath, tl)
       }
   }

@@ -48,7 +48,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Out of scope by design (declined to the V1-fallback scan, which plans
   * the engine's full declarative frame): MOR slices with outstanding
-  * deltas (window-merge semantics), LIMIT/TopN pushdown shapes, fileless
+  * deltas (served by [[GraftMorBatchScan]]), LIMIT/TopN pushdown shapes, fileless
   * slices, and pre-metadata tables. The gate is
   * [[GraftScanBuilder]]'s `nativeEligible`, mirrored by the
   * `spark.graft.catalog.nativeScan` kill switch (default on).
@@ -259,17 +259,9 @@ private[sources] final class GraftBatchScan(
       val openCost = spark.sessionState.conf.filesOpenCostInBytes
       val files = liveSlices
         .sortBy(sl => (bucketOf(sl), sl.partitionPath)).map(fileOf)
-      val maxSplit = org.apache.spark.sql.execution.datasources.FilePartition
-        .maxSplitBytes(spark, files.map(_._2 + openCost).sum)
-      val splits = files.flatMap { case (path, len) =>
-        (0L until len by maxSplit).map(off =>
-          PartitionedFile(InternalRow.empty,
-            org.apache.spark.paths.SparkPath.fromPathString(path), off,
-            math.min(maxSplit, len - off)))
-      }
-      org.apache.spark.sql.execution.datasources.FilePartition
-        .getFilePartitions(spark, splits, maxSplit)
-        .map(fp => GraftFilePartition(fp.files): InputPartition).toArray
+      GraftFilePartition.plan(spark, files,
+        org.apache.spark.sql.execution.datasources.FilePartition
+          .maxSplitBytes(spark, files.map(_._2 + openCost).sum)).toArray
     }
   }
 
@@ -305,60 +297,9 @@ private[sources] final class GraftBatchScan(
 
   // ---- reading ---------------------------------------------------------
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val session = spark
-    val resolver = session.sessionState.conf.resolver
-    // the parquet reader must ALSO read columns referenced only by
-    // claimed predicates (Spark pruned them out of `required`)
-    // sort expressions (TopN pushdown): SortOrder wrappers whose children
-    // reference table columns — those columns must be read too
-    val sortExprs: Seq[Expression] = sortCols
-    val extraCols = (pushedExprs ++ sortExprs)
-      .flatMap(_.collect {
-        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-          a.name
-      })
-      .distinct
-      .filterNot(n => required.fields.exists(f => resolver(f.name, n)))
-      .flatMap(n => dataSchema.fields.find(f => resolver(f.name, n)))
-    val readSchema = StructType(required.fields ++ extraCols)
-    // bind claimed predicates / sort orders to the read schema and resolve
-    // session time zone (driver-side; executors just evaluate)
-    val tz = session.sessionState.conf.sessionLocalTimeZone
-    def bind(e: Expression): Expression = e.transform {
-      case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-        val i = readSchema.fields.indexWhere(f => resolver(f.name, a.name))
-        require(i >= 0, s"claimed predicate column ${a.name} unresolved")
-        BoundReference(i, readSchema.fields(i).dataType,
-          readSchema.fields(i).nullable)
-    }.transform {
-      case e: TimeZoneAwareExpression if e.timeZoneId.isEmpty =>
-        e.withTimeZone(tz)
-    }
-    val bound: Seq[Expression] = pushedExprs.map(bind)
-    val boundSort: Seq[org.apache.spark.sql.catalyst.expressions.SortOrder] =
-      sortExprs.map(bind).map {
-        case s: org.apache.spark.sql.catalyst.expressions.SortOrder => s
-        case other => throw new IllegalStateException(
-          s"pushed sort is not a SortOrder: $other")
-      }
-    val fmt = new org.apache.spark.sql.execution.datasources.parquet
-      .ParquetFileFormat()
-    // columnar passthrough when nothing row-level remains to do and the
-    // vectorized reader elects batches for this schema; the reader is
-    // TOLD which shape the consumer takes (its returning_batch contract).
-    // A plain LIMIT keeps batches (the columnar reader stops once the
-    // cumulative row count covers the limit); TopN needs rows.
-    val columnar = bound.isEmpty && extraCols.isEmpty &&
-      boundSort.isEmpty && fmt.supportBatch(session, readSchema)
-    val readFunc = org.apache.spark.sql.graft.Bridge.parquetReadFunc(
-      session, dataSchema, readSchema, pushedV1.toSeq,
-      Map(org.apache.spark.sql.graft.Bridge.returningBatchKey ->
-        columnar.toString),
-      session.sessionState.newHadoopConf())
-    GraftReaderFactory(readFunc, readSchema, required.length, bound,
-      columnar, limit, boundSort)
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    GraftReaderFactory.build(spark, dataSchema, required, pushedExprs,
+      pushedV1, sortCols, limit, allowColumnar = true)
 }
 
 /** A set of parquet files sharing one writer-stamped bucket — the
@@ -376,6 +317,91 @@ private[sources] final case class GraftBucketPartition(bucket: Int,
   * mixes buckets, and plain mode reports UnknownPartitioning anyway. */
 private[sources] final case class GraftFilePartition(
     files: Array[PartitionedFile]) extends InputPartition
+
+private[sources] object GraftFilePartition {
+  /** `files` (path, length) split at `maxSplit` byte ranges and bin-packed
+    * by Spark's own FilePartition packing. */
+  def plan(spark: SparkSession, files: Seq[(String, Long)], maxSplit: Long)
+      : Seq[InputPartition] =
+    org.apache.spark.sql.execution.datasources.FilePartition
+      .getFilePartitions(spark, files.flatMap { case (path, len) =>
+        (0L until len by maxSplit).map(off =>
+          PartitionedFile(InternalRow.empty,
+            org.apache.spark.paths.SparkPath.fromPathString(path), off,
+            math.min(maxSplit, len - off)))
+      }, maxSplit)
+      .map(fp => GraftFilePartition(fp.files))
+}
+
+private[sources] object GraftReaderFactory {
+
+  /** Bind claimed predicates / sort orders (over unresolved column names)
+    * to ordinals of `schema`, resolving the session time zone
+    * driver-side (executors just evaluate). */
+  def bind(session: SparkSession, schema: StructType)(
+      e: Expression): Expression = {
+    val resolver = session.sessionState.conf.resolver
+    val tz = session.sessionState.conf.sessionLocalTimeZone
+    e.transform {
+      case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
+        val i = schema.fields.indexWhere(f => resolver(f.name, a.name))
+        require(i >= 0, s"claimed predicate column ${a.name} unresolved")
+        BoundReference(i, schema.fields(i).dataType,
+          schema.fields(i).nullable)
+    }.transform {
+      case e: TimeZoneAwareExpression if e.timeZoneId.isEmpty =>
+        e.withTimeZone(tz)
+    }
+  }
+
+  def bindSort(session: SparkSession, schema: StructType)(
+      sort: Seq[org.apache.spark.sql.catalyst.expressions.SortOrder])
+      : Seq[org.apache.spark.sql.catalyst.expressions.SortOrder] =
+    sort.map(bind(session, schema)).map {
+      case s: org.apache.spark.sql.catalyst.expressions.SortOrder => s
+      case other => throw new IllegalStateException(
+        s"pushed sort is not a SortOrder: $other")
+    }
+
+  /** The delta-free file read: `required` plus the columns only claimed
+    * predicates or the pushed sort reference (Spark pruned them out of
+    * `required`), claimed V1 filters pushed to parquet row groups and
+    * re-verified row-exactly. Columnar passthrough (when allowed) when
+    * nothing row-level remains to do and the vectorized reader elects
+    * batches for this schema; the reader is TOLD which shape the consumer
+    * takes (its returning_batch contract). A plain LIMIT keeps batches
+    * (the columnar reader stops once the cumulative row count covers the
+    * limit); TopN needs rows. */
+  def build(session: SparkSession, dataSchema: StructType,
+      required: StructType, pushedExprs: Seq[Expression],
+      pushedV1: Array[Filter],
+      sortCols: Seq[org.apache.spark.sql.catalyst.expressions.SortOrder],
+      limit: Option[Int], allowColumnar: Boolean): GraftReaderFactory = {
+    val resolver = session.sessionState.conf.resolver
+    val extraCols = (pushedExprs ++ sortCols)
+      .flatMap(_.collect {
+        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
+          a.name
+      })
+      .distinct
+      .filterNot(n => required.fields.exists(f => resolver(f.name, n)))
+      .flatMap(n => dataSchema.fields.find(f => resolver(f.name, n)))
+    val readSchema = StructType(required.fields ++ extraCols)
+    val bound = pushedExprs.map(bind(session, readSchema))
+    val boundSort = bindSort(session, readSchema)(sortCols)
+    val columnar = allowColumnar && bound.isEmpty && extraCols.isEmpty &&
+      boundSort.isEmpty &&
+      new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetFileFormat().supportBatch(session, readSchema)
+    val readFunc = org.apache.spark.sql.graft.Bridge.parquetReadFunc(
+      session, dataSchema, readSchema, pushedV1.toSeq,
+      Map(org.apache.spark.sql.graft.Bridge.returningBatchKey ->
+        columnar.toString),
+      session.sessionState.newHadoopConf())
+    GraftReaderFactory(readFunc, readSchema, required.length, bound,
+      columnar, limit, boundSort)
+  }
+}
 
 private[sources] final case class GraftReaderFactory(
     readFunc: PartitionedFile => Iterator[InternalRow],
@@ -429,58 +455,13 @@ private[sources] final case class GraftReaderFactory(
 
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = {
-    val raw = org.apache.spark.sql.graft.Bridge.flattenBatches(
-      fileIterator(partition))
     // row-exact re-verification of claimed predicates (parquet pushdown
-    // is row-GROUP granular), then projection down to what Spark asked
-    // for when filter-only columns were read
-    val filtered =
-      if (bound.isEmpty) raw
-      else {
-        val pred = CatalystPredicate.create(
-          bound.reduce(org.apache.spark.sql.catalyst.expressions.And))
-        pred.initialize(0)
-        raw.filter(pred.eval)
-      }
-    // TopN / LIMIT pushdown, PARTIAL semantics (the builder keeps
-    // isPartiallyPushed=true, so Spark's final TakeOrderedAndProject /
-    // limit runs above): TopN keeps a bounded heap of the task's best n
-    // rows under the pushed ordering — O(n) memory, one streaming pass;
-    // plain LIMIT stops the task after n filtered rows.
-    val shaped: Iterator[InternalRow] = (limit, boundSort) match {
-      case (Some(n), sort) if sort.nonEmpty =>
-        val ord: Ordering[InternalRow] =
-          new org.apache.spark.sql.catalyst.expressions.codegen
-            .LazilyGeneratedOrdering(sort)
-        val heap = new java.util.PriorityQueue[InternalRow](
-          math.max(n, 1), ord.reverse) // peek = worst of the best n
-        filtered.foreach { r =>
-          if (heap.size < n) heap.offer(r.copy())
-          else if (n > 0 && ord.compare(r, heap.peek()) < 0) {
-            heap.poll(); heap.offer(r.copy())
-          }
-        }
-        scala.jdk.CollectionConverters.IteratorHasAsScala(heap.iterator())
-          .asScala
-      case (Some(n), _) => filtered.take(n)
-      case _ => filtered
-    }
-    val it =
-      if (readSchema.length == requiredLen) shaped
-      else {
-        val proj = UnsafeProjection.create(
-          (0 until requiredLen).map(i => BoundReference(i,
-            readSchema.fields(i).dataType,
-            readSchema.fields(i).nullable): Expression))
-        shaped.map(proj)
-      }
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) { current = it.next(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
+    // is row-GROUP granular), TopN/LIMIT, then projection down to what
+    // Spark asked for when filter-only columns were read
+    graft.read.TaskRows.reader(graft.read.TaskRows.shape(
+      org.apache.spark.sql.graft.Bridge.flattenBatches(
+        fileIterator(partition)),
+      bound, limit, boundSort, readSchema, requiredLen))
   }
 }
 

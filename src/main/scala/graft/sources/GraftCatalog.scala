@@ -47,7 +47,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   *  - reads: a [[V1Scan]] whose relation plans the same
   *    [[SnapshotReader.read]] frame every other surface uses (pruning
-  *    FileIndex, stats/bucket/bloom skipping, MOR window merge), with
+  *    FileIndex, stats/bucket/bloom skipping, per-file-group MOR merge), with
   *    pushed-down filters re-applied as Catalyst predicates INSIDE that
   *    plan (so parquet row-group pushdown and partition pruning fire
   *    exactly as on the V1 surface) and `needConversion = false` so the
@@ -230,8 +230,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   override def loadTable(ident: Identifier, version: String): Table = {
     val path = tablePath(ident)
     if (!isTableDir(path)) throw new NoSuchTableException(ident)
-    Timeline(hconf, path).validateTsParam("VERSION AS OF", version)
-    new GraftV2Table(ident.toString, path, asOf = Some(version), Some(name()))
+    val tl = Timeline(hconf, path)
+    tl.validateTsParam("VERSION AS OF", version)
+    new GraftV2Table(ident.toString, path, asOf = Some(version), Some(name()),
+      initialTimeline = Some(tl))
   }
 
   /** `TIMESTAMP AS OF <ts>` — Spark hands epoch MICROS; snapshot as of the
@@ -249,7 +251,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       .withZone(java.time.ZoneOffset.UTC)
       .format(java.time.Instant.EPOCH.plus(
         timestamp, java.time.temporal.ChronoUnit.MICROS))
-    Timeline(hconf, path).completedInstants().headOption.foreach { first =>
+    val tl = Timeline(hconf, path)
+    tl.completedInstants().headOption.foreach { first =>
       require(first.ts.length == ts.length,
         s"TIMESTAMP AS OF needs wall-clock (${ts.length}-digit) commit " +
           s"timestamps; table $ident stamps at width ${first.ts.length} " +
@@ -258,7 +261,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         s"TIMESTAMP AS OF $ts predates table $ident's first commit " +
           s"${first.ts}; no snapshot exists that early")
     }
-    new GraftV2Table(ident.toString, path, asOf = Some(ts), Some(name()))
+    new GraftV2Table(ident.toString, path, asOf = Some(ts), Some(name()),
+      initialTimeline = Some(tl))
   }
 
   override def createTable(ident: Identifier, columns: Array[V2Column],
@@ -539,21 +543,33 @@ object GraftCatalog {
   * engine's registered `graft` V1 Source/Sink — the EXACT commit-range
   * planning, offset log, schema evolution padding, CDC option, and
   * exactly-once replay gate the format path uses, with zero duplicated
-  * merge semantics. A DSv2 `MicroBatchStream` would have to re-implement
-  * the planned parquet scan and the precombine/delete-cut MOR window
-  * merge imperatively per partition — the same reason the format surface
+  * merge semantics. A DSv2 `MicroBatchStream` would have to re-plan the
+  * commit-range pruning, incremental parquet scan and MOR merge per
+  * partition — the same reason the format surface
   * chose the V1 `Source` (see [[graft.streaming.GraftSourceProvider]]
   * scaladoc); Delta Lake ships catalog streaming through this identical
   * hook. */
 private[graft] final class GraftV2Table(ident: String, val path: String,
-    asOf: Option[String], catalogName: Option[String] = None) extends Table
+    asOf: Option[String], catalogName: Option[String] = None,
+    initialTimeline: Option[Timeline] = None) extends Table
     with SupportsRead with SupportsWrite with SupportsMetadataColumns
     with SupportsDelete
     with org.apache.spark.sql.graft.V1FallbackTable {
 
   private def spark: SparkSession = SparkSession.active
-  private[sources] def timeline =
+
+  /** The Timeline every metadata read of this table shares — its schema,
+    * identity properties and scan planning — so resolving a query lists
+    * `.hoodie` once. [[newScanBuilder]] replaces it on latest-state tables
+    * (a re-planned query must see commits landed since); a time-travel
+    * table keeps it for good (history below `asOf` is immutable). */
+  @volatile private var tl: Timeline = initialTimeline.orNull
+  private def freshTimeline(): Timeline =
     Timeline(spark.sessionState.newHadoopConf(), path)
+  private[sources] def timeline: Timeline = {
+    if (tl == null) tl = freshTimeline()
+    tl
+  }
   private[sources] def asOfOpt: Option[String] = asOf
 
   /** Full table schema (meta columns + payload) from commit metadata —
@@ -975,7 +991,7 @@ private[graft] final class GraftV2Table(ident: String, val path: String,
   }
 
   /** The planned snapshot every read/delete verb roots at: the SAME frame
-    * [[GraftTable.snapshot]] serves (COW fast path / MOR window merge,
+    * [[GraftTable.snapshot]] serves (COW fast path / MOR merge,
     * skipping indexes, partition-pruning FileIndex); a created-but-empty
     * table serves zero rows of the recorded schema. */
   private[graft] def snapshotDf(spark: SparkSession): DataFrame =
@@ -985,8 +1001,10 @@ private[graft] final class GraftV2Table(ident: String, val path: String,
     else SnapshotReader.read(spark, path, asOf)
 
   override def newScanBuilder(
-      options: CaseInsensitiveStringMap): ScanBuilder =
+      options: CaseInsensitiveStringMap): ScanBuilder = {
+    if (asOf.isEmpty) tl = freshTimeline()
     new GraftScanBuilder(this, schema())
+  }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(asOf.isEmpty,
@@ -1250,9 +1268,14 @@ private final class GraftScanBuilder(table: GraftV2Table,
 
   override def build(): Scan = aggAnswer match {
     case Some((schema, rows)) => new GraftMetaAggScan(table, schema, rows)
-    case None => nativeScan().getOrElse(
-      new GraftV1FallbackScan(table, required, pushedExprs,
-        pushedSort, pushedLimit))
+    case None => nativeScan() match {
+      case Right(scan) => scan
+      case Left(reason) =>
+        GraftV2Table.log.info(
+          s"native scan declined for ${table.name()}: $reason")
+        new GraftV1FallbackScan(table, required, pushedExprs,
+          pushedSort, pushedLimit, declined = reason)
+    }
   }
 
   /** The native batch scans (reported bucket partitioning + runtime
@@ -1260,65 +1283,67 @@ private final class GraftScanBuilder(table: GraftV2Table,
     * delta-free slice sets (vectorized/columnar, byte-split), and — r11 —
     * [[GraftMorBatchScan]] on states with outstanding MOR deltas (per-
     * file-group merge tasks), so SPJ and runtime filtering survive
-    * compaction lag. Both require: no LIMIT/TopN claim, full table
-    * identity (key/partition/buckets) recorded, bucket key of a
-    * string-renderable type, parseable bucket fileIds; the MOR scan
-    * additionally requires base/delta writer schemas agreeing on every
-    * column it reads. Anything else — and any planning surprise —
-    * declines to the V1-fallback scan, which is always correct. */
-  private def nativeScan(): Option[Scan] = try {
+    * compaction lag. Both require full table identity (key/partition/
+    * buckets) recorded, a bucket key of a string-renderable type and
+    * parseable bucket fileIds; the MOR scan additionally requires
+    * base/delta writer schemas agreeing on every column it reads.
+    * Anything else — and any planning surprise — declines to the
+    * V1-fallback scan (always correct) with the reason on the Left, which
+    * the fallback shows in `explain`. */
+  private def nativeScan(): Either[String, Scan] = try {
     val session = SparkSession.active
     if (!session.conf.get("spark.graft.catalog.nativeScan", "true")
-        .toBoolean) return None
-    val v1 = pushedV1 match {
-      case Some(f) => f
-      case None => return None // a claimed predicate with no V1 form
-    }
+        .toBoolean) return Left("spark.graft.catalog.nativeScan=false")
+    val v1 = pushedV1.getOrElse(
+      return Left("a claimed predicate has no V1 filter form"))
     val tl = table.timeline
     val slices = tl.latestSlices(table.asOfOpt).values.toSeq
-    if (slices.isEmpty) return None
+    if (slices.isEmpty) return Left("no file slices")
     val resolver = session.sessionState.conf.resolver
     // shared identity gates
-    val identity = for {
-      key <- table.keyColumnName
-      part <- table.partitionColumnName
-      buckets <- table.bucketCount
-      keyField <- table.fullSchema.fields.find(f =>
-        resolver(f.name, key))
-      if GraftBucketFunction.renderable(keyField.dataType)
-      if slices.forall(sl => sl.fileId.lastIndexOf('-') > 0 &&
-        sl.fileId.drop(sl.fileId.lastIndexOf('-') + 1).toIntOption
-          .exists(b => b >= 0 && b < buckets))
-    } yield (key, part, buckets)
-    identity.flatMap { case (key, part, buckets) =>
-      if (slices.forall(s => s.deltas.isEmpty && s.relPath.nonEmpty)) {
-        // per-file sizes and row counts from the WRITE stats (r10) — exact
-        // scan statistics and split planning with zero FS RPCs on current
-        // tables; files from pre-size-recording commits fall back to one
-        // getFileStatus each at plan time
-        val stats: Map[String, WriteStat] = slices.flatMap(sl =>
-          tl.metadata(sl.commitTs).statByFileId(sl.fileId)
-            .map(sl.fileId -> _._2)).toMap
-        Some(new GraftBatchScan(table, required, pushedExprs, v1, slices,
-          key, part, buckets, table.fullSchema,
-          sizeOf = stats.flatMap { case (fid, st) =>
-            st.sizeBytes.map(fid -> _) },
-          rowsOf = stats.map { case (fid, st) => fid -> st.numWrites },
-          limit = pushedLimit, sortCols = pushedSort)
-          : Scan)
-      } else morNativeScan(slices, key, part, buckets, v1)
-    }
-  } catch { case scala.util.control.NonFatal(_) => None }
+    val key = table.keyColumnName.getOrElse(
+      return Left("no recorded key column"))
+    val part = table.partitionColumnName.getOrElse(
+      return Left("no recorded partition column"))
+    val buckets = table.bucketCount.getOrElse(
+      return Left("no recorded bucket count"))
+    val keyField = table.fullSchema.fields.find(f => resolver(f.name, key))
+      .getOrElse(return Left(s"key column `$key` is not in the schema"))
+    if (!GraftBucketFunction.renderable(keyField.dataType))
+      return Left(s"key column `$key` of type " +
+        s"${keyField.dataType.simpleString} has no bucket rendering")
+    slices.find(sl => !(sl.fileId.lastIndexOf('-') > 0 &&
+      sl.fileId.drop(sl.fileId.lastIndexOf('-') + 1).toIntOption
+        .exists(b => b >= 0 && b < buckets)))
+      .foreach(sl => return Left(s"file group ${sl.fileId} carries no " +
+        s"bucket id below $buckets"))
+    if (slices.forall(s => s.deltas.isEmpty && s.relPath.nonEmpty)) {
+      // per-file sizes and row counts from the WRITE stats (r10) — exact
+      // scan statistics and split planning with zero FS RPCs on current
+      // tables; files from pre-size-recording commits fall back to one
+      // getFileStatus each at plan time
+      val stats: Map[String, WriteStat] = slices.flatMap(sl =>
+        tl.metadata(sl.commitTs).statByFileId(sl.fileId)
+          .map(sl.fileId -> _._2)).toMap
+      Right(new GraftBatchScan(table, required, pushedExprs, v1, slices,
+        key, part, buckets, table.fullSchema,
+        sizeOf = stats.flatMap { case (fid, st) =>
+          st.sizeBytes.map(fid -> _) },
+        rowsOf = stats.map { case (fid, st) => fid -> st.numWrites },
+        limit = pushedLimit, sortCols = pushedSort))
+    } else morNativeScan(slices, key, part, buckets, v1)
+  } catch {
+    case scala.util.control.NonFatal(e) => Left(s"planning failed: $e")
+  }
 
   /** [[GraftMorBatchScan]] eligibility + construction: the scan reads
     * base files with the newest base-commit writer schema and delta files
     * with the newest deltacommit writer schema, so every column it reads
     * (required ∪ claimed-filter ∪ key/commit-time/seqno ∪ precombine)
     * must exist under the SAME type in both — a mid-evolution mismatch
-    * declines to the V1 fallback (whose unionByName merge owns that
-    * case). */
+    * declines to the V1 fallback. */
   private def morNativeScan(slices: Seq[FileSlice], key: String,
-      part: String, buckets: Int, v1: Array[Filter]): Option[Scan] = {
+      part: String, buckets: Int, v1: Array[Filter]): Either[String, Scan] = {
     val session = SparkSession.active
     val resolver = session.sessionState.conf.resolver
     val tl = table.timeline
@@ -1332,50 +1357,38 @@ private final class GraftScanBuilder(table: GraftV2Table,
       Some(graft.format.Instant.CommitAction)).map(parse)
     val deltaSchema = tl.latestSchemaJson(table.asOfOpt,
       Some(graft.format.Instant.DeltaCommitAction)).map(parse)
-    if (anyBase && baseSchema.isEmpty) return None // pre-schema table
-    if (anyDelta && deltaSchema.isEmpty) return None
+    if (anyBase && baseSchema.isEmpty)
+      return Left("base files predate schema recording")
+    if (anyDelta && deltaSchema.isEmpty)
+      return Left("delta files predate schema recording")
     if (anyDelta && !deltaSchema.exists(_.fields.exists(
-        _.name == MetaCols.IsDeleted))) return None
-    // precombine: mirror the declarative merge (ignored unless the merged
+        _.name == MetaCols.IsDeleted)))
+      return Left("delta schema records no delete marker")
+    // precombine: mirror the shared merge (ignored unless the merged
     // frame carries the column); require it on BOTH populated sides
     val allCols = (baseSchema.toSeq ++ deltaSchema.toSeq)
       .flatMap(_.fieldNames).toSet
     val pc = tl.recordedExtraAsOf(FormatWriter.PrecombineKey, table.asOfOpt)
       .filter(allCols.contains)
-    val needed: Seq[String] =
-      (required.fieldNames.toSeq ++
-        (pushedExprs ++ pushedSort).flatMap(_.collect {
-          case a: org.apache.spark.sql.catalyst.analysis
-            .UnresolvedAttribute => a.name
-        }) ++
-        Seq(MetaCols.RecordKey, MetaCols.CommitTime, MetaCols.CommitSeqno)
-        ++ pc.toSeq).distinct
     def fieldIn(s: StructType, n: String) =
       s.fields.find(f => resolver(f.name, n))
-    // every read column must exist on each populated side AND agree with
-    // the table schema's type (the merge schema types the readers by it)
-    val compatible = needed.forall { n =>
-      val full = fieldIn(table.fullSchema, n)
-      val b = baseSchema.flatMap(fieldIn(_, n))
-      val d = deltaSchema.flatMap(fieldIn(_, n))
-      full.nonEmpty &&
-        (!anyBase || b.exists(_.dataType == full.get.dataType)) &&
-        (!anyDelta || d.exists(_.dataType == full.get.dataType))
-    }
-    if (!compatible) return None
-    // recorded sizes keyed by relative path (base + delta files); missing
-    // entries fall back to one getFileStatus at plan time
-    val sizeOfPath: Map[String, Long] = live.flatMap { sl =>
-      val base = sl.relPath.flatMap(rel =>
-        tl.metadata(sl.commitTs).statByFileId(sl.fileId)
-          .flatMap(_._2.sizeBytes).map(rel -> _))
-      val deltas = sl.deltas.flatMap(d =>
-        tl.metadata(d.commitTs).statByFileId(sl.fileId)
-          .flatMap(_._2.sizeBytes).map(d.relPath -> _))
-      base.toSeq ++ deltas
-    }.toMap
-    Some(new GraftMorBatchScan(table, required, pushedExprs, v1, live,
-      key, part, buckets, baseSchema, deltaSchema, pc, sizeOfPath,
+    // every column the merge reads must exist on each populated side AND
+    // agree with the table schema's type (the merge schema types the
+    // readers by it)
+    graft.read.MorMerge.mergeSchema(session, required,
+      (pushedExprs ++ pushedSort).flatMap(_.collect {
+        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
+          a.name
+      }),
+      table.fullSchema, pc).find { full =>
+      val b = baseSchema.flatMap(fieldIn(_, full.name))
+      val d = deltaSchema.flatMap(fieldIn(_, full.name))
+      (anyBase && !b.exists(_.dataType == full.dataType)) ||
+        (anyDelta && !d.exists(_.dataType == full.dataType))
+    }.foreach(f => return Left(s"base/delta type mismatch on `${f.name}`"))
+    Right(new GraftMorBatchScan(table, required, pushedExprs, v1, live,
+      key, part, buckets, baseSchema, deltaSchema, pc,
+      graft.read.MorMerge.recordedSizes(tl, live),
       limit = pushedLimit, sortCols = pushedSort))
   }
 }
@@ -1402,16 +1415,20 @@ private final class GraftMetaAggScan(table: GraftV2Table,
     s"GraftMetaAggScan(${table.path}, groups=${rows.size})"
 }
 
-/** V1-fallback scan: execution delegates to the engine's declarative
-  * snapshot plan. `needConversion = false` + `queryExecution.toRdd` means
-  * the inner OPTIMIZED plan's UnsafeRows stream straight into the V2 exec
-  * — full pushdown/pruning/codegen, no Row materialization. */
+/** V1-fallback scan: execution delegates to the engine's snapshot plan
+  * ([[SnapshotReader.read]] — its MOR groups merge through the same
+  * per-file-group reader as the native scan). `needConversion = false` +
+  * `queryExecution.toRdd` means the inner OPTIMIZED plan's UnsafeRows
+  * stream straight into the V2 exec — full pushdown/pruning/codegen, no
+  * Row materialization. `declined` is why the native scan did not serve
+  * this query; `description()` shows it in `explain`. */
 private final class GraftV1FallbackScan(table: GraftV2Table,
     required: StructType,
     pushed: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
     sort: Seq[org.apache.spark.sql.catalyst.expressions.SortOrder] =
       Seq.empty,
-    limit: Option[Int] = None)
+    limit: Option[Int] = None,
+    declined: String = "")
     extends V1Scan
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
@@ -1430,15 +1447,12 @@ private final class GraftV1FallbackScan(table: GraftV2Table,
     new org.apache.spark.sql.connector.read.Statistics {
       private val bytes: Option[Long] = try {
         val tl = table.timeline
-        val files: Seq[(String, String)] = tl.latestSlices(table.asOfOpt)
-          .values.toSeq.flatMap(sl =>
-            sl.relPath.map(_ => sl.commitTs -> sl.fileId).toSeq ++
-              sl.deltas.map(d => d.commitTs -> sl.fileId))
-        val sizes = files.map { case (ts, fid) =>
-          tl.metadata(ts).statByFileId(fid).flatMap(_._2.sizeBytes)
-        }
-        if (sizes.nonEmpty && sizes.forall(_.isDefined))
-          Some(sizes.flatten.sum)
+        val slices = tl.latestSlices(table.asOfOpt).values.toSeq
+        val files = slices.flatMap(sl =>
+          sl.relPath.toSeq ++ sl.deltas.map(_.relPath))
+        val sizes = graft.read.MorMerge.recordedSizes(tl, slices)
+        if (files.nonEmpty && files.forall(sizes.contains))
+          Some(files.map(sizes).sum)
         else None
       } catch { case scala.util.control.NonFatal(_) => None }
       override def sizeInBytes(): java.util.OptionalLong =
@@ -1454,6 +1468,8 @@ private final class GraftV1FallbackScan(table: GraftV2Table,
       override def sqlContext: SQLContext = context
       override def schema: StructType = required
       override def needConversion: Boolean = false
+      // the physical scan node names its relation: show why we are here
+      override def toString: String = description()
       override def buildScan(): RDD[Row] = {
         val spark = context.sparkSession
         val base = table.snapshotDf(spark)
@@ -1475,7 +1491,8 @@ private final class GraftV1FallbackScan(table: GraftV2Table,
 
   override def description(): String =
     s"GraftV1FallbackScan(${table.path}, filters=${pushed.mkString(",")}" +
-      limit.fold("")(n => s", limit=$n") + ")"
+      limit.fold("")(n => s", limit=$n") +
+      (if (declined.nonEmpty) s", declined=$declined" else "") + ")"
 }
 
 /** V1-fallback write: `INSERT INTO` = upsert-by-key commit,

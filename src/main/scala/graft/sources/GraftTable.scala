@@ -70,13 +70,12 @@ final class GraftTable(spark: SparkSession, basePath: String) {
       spark.sparkContext.parallelize(rows, 1), schema)
   }
 
-  /** Latest-state snapshot (COW: pure multi-path scan; MOR: window merge of
-    * dirty groups only). Partition pruning is Catalyst-automatic on the
-    * base-file side: `snapshot().filter($"_hoodie_partition_path" === …)`
-    * prunes at listing time via [[graft.read.GraftFileIndex]]. The
-    * `partitions` parameter remains as EXPLICIT metadata-level pruning
-    * (and is the pruning path for MOR groups with outstanding deltas,
-    * where a predicate cannot push below the per-key merge window). */
+  /** Latest-state snapshot (COW: pure multi-path scan; MOR: per-file-group
+    * merge of dirty groups only). Partition pruning is metadata-level:
+    * `snapshot().filter($"_hoodie_partition_path" === …)` prunes the file
+    * groups before planning ([[graft.read.GraftMorRelation]] /
+    * [[graft.read.GraftFileIndex]]); the `partitions` parameter is the
+    * EXPLICIT form of the same pruning. */
   def snapshot(partitions: Seq[String] = Seq.empty): DataFrame =
     SnapshotReader.read(spark, basePath, None, partitions)
 
@@ -86,8 +85,8 @@ final class GraftTable(spark: SparkSession, basePath: String) {
 
   /** READ-OPTIMIZED view (Hudi RO query): base files only — each group's
     * state as of its last compaction/base write, outstanding deltas
-    * skipped. Always the COW-fast-path plan (no merge window, no
-    * shuffle); staleness bounded by compaction lag. Also reachable as
+    * skipped. Always the COW-fast-path plan (no merge); staleness
+    * bounded by compaction lag. Also reachable as
     * `spark.read.format("graft").option("readOptimized", "true")`. */
   def readOptimized(asOf: Option[String] = None,
       partitions: Seq[String] = Seq.empty): DataFrame =

@@ -26,8 +26,8 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
   * Extension-point choice: this is the same V1 `Source` interface Spark's
   * own FileStreamSource uses, NOT a DSv2 `MicroBatchStream` — deliberately.
   * A DSv2 micro-batch source must produce rows from its own
-  * `PartitionReader`, which would mean re-implementing the planned
-  * parquet scan and the MOR window merge imperatively per partition;
+  * `PartitionReader`, which would mean re-planning the commit-range
+  * pruning, parquet scan and MOR merge per partition;
   * `Source.getBatch` instead returns the incremental read's full
   * DECLARATIVE plan (pruning, pushdown, merge, schema resolution all
   * shared with the batch surface, SURVEY.md §7.2). The engine consumes
@@ -79,7 +79,7 @@ final class GraftSourceProvider extends StreamSourceProvider
     * then the partition column (the lakehouse-format layout).
     *
     * Snapshots with OUTSTANDING MOR deltas (r6) route to
-    * [[graft.read.GraftMorRelation]] — the window merge planned behind the
+    * [[graft.read.GraftMorRelation]] — the MOR merge planned behind the
     * same surface, with pushed partition predicates pruning the file-GROUP
     * set on BOTH merge sides before planning (writer-canonical column
     * order, matching `GraftTable.snapshot()`). The format surface is total:

@@ -6,13 +6,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * it through the NATIVE batch scans — the no-shuffle read path for
   * internal state tables the incremental-ingest operators maintain.
   *
-  * Why not [[graft.read.SnapshotReader]]: its V1 MOR path merges
-  * outstanding deltas with a per-key WINDOW — one table-sized shuffle per
-  * read, however small the batch consuming it. The catalog scan
-  * ([[graft.sources.GraftMorBatchScan]]) merges base + deltas PER FILE
-  * GROUP inside the task (and reports the bucket KeyGroupedPartitioning
-  * the storage-partitioned ingest joins key on), so reading the state
-  * table costs input bytes, never an exchange.
+  * Why not [[graft.read.SnapshotReader]]: both merge outstanding deltas
+  * per file group inside the task (one shared reader, no shuffle), but
+  * only the catalog scan ([[graft.sources.GraftMorBatchScan]]) reports
+  * the bucket KeyGroupedPartitioning the storage-partitioned ingest joins
+  * key on, and runtime filtering prunes its groups — so joins against
+  * the state table plan without an exchange on either side.
   *
   * The catalog instance is cached by Spark per name, so the name encodes
   * the qualified PARENT directory (the mounted warehouse) — remounting

@@ -98,19 +98,24 @@ final class CowWriter(
         sizeBytes = Some(w.sizeBytes))
     }
     saveCommit(ts, stats, totalDeleted = 0, op = "INSERT",
-      schema = data.drop(FidCol).schema, extra = withBuckets(extra),
+      schema = data.drop(FidCol).schema,
+      extra = creationExtra(keyCol, partCol, extra),
       readPoint = timeline.completedInstants().lastOption.map(_.ts),
       conflictOnAny = true)
   }
 
-  /** Every table-creating commit records the bucket count (caller-supplied
-    * extra wins — the format surface records the same resolved value): it
-    * pins the key→file-group routing for later appends AND enables exact
-    * bucket-index pruning of key lookups at read time
+  /** Every table-creating commit records the bucket count and the
+    * bare-column identity ([[FormatWriter.identityExtra]]; caller-supplied
+    * extra wins — the format surface records the same resolved values).
+    * The count pins the key→file-group routing for later appends AND
+    * enables exact bucket-index pruning of key lookups at read time
     * ([[graft.read.GraftFileIndex]] — the hash that routes a key on write
-    * identifies its one candidate file group per partition on read). */
-  private def withBuckets(extra: Map[String, String]): Map[String, String] =
-    Map(FormatWriter.BucketsKey -> numBuckets.toString) ++ extra
+    * identifies its one candidate file group per partition on read); the
+    * identity lets the catalog serve the table with its native scans. */
+  private def creationExtra(keyCol: Column, partCol: Column,
+      extra: Map[String, String]): Map[String, String] =
+    Map(FormatWriter.BucketsKey -> numBuckets.toString) ++
+      FormatWriter.identityExtra(keyCol, partCol) ++ extra
 
   /** Upsert + delete in one commit (COW: affected file groups are fully
     * rewritten as new slices).
@@ -322,7 +327,8 @@ final class CowWriter(
     // conflictOnAny: a concurrent commit's file group would survive the
     // replace and resurrect rows the overwrite never saw
     saveCommit(ts, stats, totalDeleted = 0, op = "INSERT_OVERWRITE_TABLE",
-      schema = data.drop(FidCol).schema, extra = withBuckets(extra),
+      schema = data.drop(FidCol).schema,
+      extra = creationExtra(keyCol, partCol, extra),
       readPoint = readPoint, conflictOnAny = true)
   }
 

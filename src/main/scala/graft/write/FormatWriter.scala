@@ -1,7 +1,7 @@
 package graft.write
 
-import graft.format.Timeline
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.format.{MetaCols, Timeline}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Write half of the `graft` format surface — the engine behind
@@ -85,6 +85,20 @@ private[graft] object FormatWriter {
     * options) resolve the table's identity columns from metadata. */
   val KeyColKey = "key"
   val PartColKey = "partition"
+
+  /** The identity a table-creating engine write records: `key`/`partition`
+    * for each of the two that the caller names by a bare column reference
+    * (an expression key records nothing — there is no column to name).
+    * Callers merge their own `extra` on top, so an explicit value wins. */
+  private[graft] def identityExtra(keyCol: Column, partCol: Column)
+      : Map[String, String] =
+    Seq(KeyColKey -> keyCol, PartColKey -> partCol).flatMap { case (k, c) =>
+      org.apache.spark.sql.graft.Bridge.bareColumnName(c)
+        // readers re-resolve the name with col(...), which would parse a
+        // dotted name as a nested field; meta columns are not payload
+        .filterNot(n => n.contains('.') || MetaCols.all.contains(n))
+        .map(k -> _)
+    }.toMap
 
   /** Commit-extra key recording the table's EVENT-TIME ordering column
     * (Hudi's precombine field): when declared at creation/overwrite via

@@ -85,7 +85,8 @@ final class MorWriter(
     }
     saveCommit(ts, stats, totalDeleted = 0, op = "INSERT",
       action = Instant.CommitAction, schema = data.drop(FidCol).schema,
-      extra = Map(FormatWriter.BucketsKey -> numBuckets.toString) ++ extra,
+      extra = Map(FormatWriter.BucketsKey -> numBuckets.toString) ++
+        FormatWriter.identityExtra(keyCol, partCol) ++ extra,
       readPoint = timeline.completedInstants().lastOption.map(_.ts),
       conflictOnAny = true)
   }
@@ -155,19 +156,12 @@ final class MorWriter(
         val perKey = t.groupBy(col(MetaCols.RecordKey), col(FidCol))
           .agg(max(when(col("__op") === "u", 1).otherwise(0)).as("__hasU"),
             max(when(col("__op") === "d", 1).otherwise(0)).as("__hasD"))
-        // existence probe ARRANGED FOR SCALE (r17): the r16 shape
-        // left-joined perKey against the FULL merged snapshot's keys —
-        // the MOR merge windows by record key, so every counted
-        // upsert/delete commit paid a dirty-groups-sized exchange
-        // however small the batch (measured 49 MB for a 2% delete
-        // against a 500k-key index — the exact cost class the
-        // incremental ingests' storage-partitioned join exists to
-        // avoid). The batch's key set is now pushed INTO the merge as
-        // a broadcast semi-join BELOW the merge window (`keyFilter`),
-        // so base+delta files are only SCANNED and the merge exchange
-        // carries just the matching rows — batch-sized; the surviving
-        // keys (≤ batch) broadcast back into perKey. A delete commit's
-        // cost tracks the batch.
+        // existence probe: the batch's key set is a broadcast
+        // semi-join on the merged snapshot (`keyFilter`) — the merge
+        // runs per file group inside the scan tasks, so nothing
+        // table-sized is shuffled; the surviving keys (≤ batch)
+        // broadcast back into perKey. A delete commit's cost is one
+        // scan of the table plus batch-sized joins.
         val withEx =
           if (slices.nonEmpty) {
             val exKeys = SnapshotReader
@@ -233,8 +227,8 @@ final class MorWriter(
     * file groups carrying at least `minDeltas` outstanding delta files;
     * groups below the threshold keep accumulating. At scale this bounds
     * both compaction write amplification (only genuinely dirty groups are
-    * rewritten) and snapshot merge cost (the window merge side stays
-    * small). */
+    * rewritten) and snapshot merge cost (the merge reader's per-group
+    * delta maps stay small). */
   def compactIf(ts: String, minDeltas: Int): Unit =
     compactWhere(ts, _.deltas.size >= minDeltas)
 

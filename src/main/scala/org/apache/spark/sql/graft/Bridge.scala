@@ -34,6 +34,16 @@ object Bridge {
   def columnSql(c: Column): String =
     classic.ColumnNodeToExpressionConverter(c.node).sql
 
+  /** The column name when `c` is a bare single-part column reference
+    * (`col("k")`, `$"k"`, `df("k")`); None for any expression, nested
+    * field or qualified reference. */
+  def bareColumnName(c: Column): Option[String] =
+    classic.ColumnNodeToExpressionConverter(c.node) match {
+      case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+          if a.nameParts.length == 1 => Some(a.nameParts.head)
+      case _ => None
+    }
+
   /** V2 connector Predicates → their V1 `Filter` renderings (the subset
     * that has one) — `private[sql]` in Spark; used by the DSv2 scan to
     * keep expression predicates feeding the metadata-aggregate path's

@@ -27,6 +27,23 @@ class Dsv2CatalogSpec extends SparkSpec {
     s"$cat.ns.$name"
   }
 
+  /** Catalog query `q` over table `t` answered by the test-side window
+    * merge reference instead of any engine scan: `t` is swapped for a temp
+    * view over [[graft.read.WindowMergeReference]] (`*` expands to the
+    * table's payload columns, `VERSION AS OF` becomes the reference's
+    * `asOf`), so parity checks compare two independent merges. */
+  private def reference(t: String, q: String): Seq[org.apache.spark.sql.Row] = {
+    val asOf = """ VERSION AS OF '(\d+)'""".r
+    val pinned = asOf.findFirstMatchIn(q).map(_.group(1))
+    val payload = spark.table(t).columns.mkString(", ")
+    graft.read.WindowMergeReference.read(spark,
+      s"$wh/ns/${t.split('.').last}", pinned)
+      .createOrReplaceTempView("graft_window_ref")
+    spark.sql(asOf.replaceAllIn(q, "")
+      .replace("SELECT *", s"SELECT $payload")
+      .replace(t, "graft_window_ref")).collect().toSeq
+  }
+
   test("CREATE TABLE + INSERT INTO lands upsert commits through pure DSv2") {
     val t = freshTable("t1")
     spark.sql(s"""CREATE TABLE $t (
@@ -1098,7 +1115,9 @@ class Dsv2CatalogSpec extends SparkSpec {
       s"SELECT count(*) FROM $t", // agg declines to scan on deltas
       s"SELECT * FROM $t VERSION AS OF '$midTs'")) {
       val n = spark.sql(q)
-      assert(n.collect().toSeq.toSet == fallback(q).toSet, s"mismatch: $q")
+      val ref = reference(t, q).toSet
+      assert(n.collect().toSeq.toSet == ref, s"native mismatch: $q")
+      assert(fallback(q).toSet == ref, s"fallback mismatch: $q")
     }
     // deletes and resurrection resolved exactly
     assert(spark.sql(s"SELECT v FROM $t WHERE id = 7").as[Long]
@@ -1140,7 +1159,9 @@ class Dsv2CatalogSpec extends SparkSpec {
       finally spark.conf.unset("spark.graft.catalog.nativeScan")
     }
     val q = s"SELECT id, v, pc FROM $t"
-    assert(spark.sql(q).collect().toSeq.toSet == fallback(q).toSet)
+    val ref = reference(t, q).toSet
+    assert(spark.sql(q).collect().toSeq.toSet == ref)
+    assert(fallback(q).toSet == ref)
     val got = spark.sql(s"SELECT id, v FROM $t WHERE id <= 4 ORDER BY id")
       .as[(Long, Long)].collect().toSeq
     assert(got == Seq((1L, 10L), (2L, 20L), (3L, 333L), (4L, 444L)),
@@ -1313,12 +1334,10 @@ class Dsv2CatalogSpec extends SparkSpec {
         s"expected byte splits to outnumber the $nGroups groups, " +
           s"got ${parts.length}")
       assert(parts.count(_.getClass.getSimpleName
-        == "GraftMorGroupsPartition") == 1,
+        == "MorGroupsPartition") == 1,
         "exactly one dirty-group merge task expected")
       // rows exact, merged value included, under the mixed plan
-      spark.conf.set("spark.graft.catalog.nativeScan", "false")
-      val ref = try spark.sql(s"SELECT id, v FROM $t").collect().toSet
-        finally spark.conf.unset("spark.graft.catalog.nativeScan")
+      val ref = reference(t, s"SELECT id, v FROM $t").toSet
       assert(df.collect().toSet == ref)
       assert(spark.sql(s"SELECT v FROM $t WHERE id = 7")
         .as[Long].collect().toSeq == Seq(777L))
@@ -1368,8 +1387,10 @@ class Dsv2CatalogSpec extends SparkSpec {
         }
         for (q <- Seq(s"SELECT * FROM $t",
           s"SELECT id, v FROM $t WHERE part = 'p1'")) {
-          assert(spark.sql(q).collect().toSeq.toSet == fallback(q).toSet,
-            s"seed=$seed mismatch: $q")
+          val ref = reference(t, q).toSet
+          assert(spark.sql(q).collect().toSeq.toSet == ref,
+            s"seed=$seed native mismatch: $q")
+          assert(fallback(q).toSet == ref, s"seed=$seed fallback mismatch: $q")
         }
         // the metadata count-fold must track the live set exactly
         val c = spark.sql(s"SELECT count(*) FROM $t")
@@ -1379,6 +1400,90 @@ class Dsv2CatalogSpec extends SparkSpec {
           s"seed=$seed count ${c.as[Long].head} != ${livePool.size}")
       }
     }
+  }
+
+  test("engine-written tables record identity: catalog SQL plans the " +
+      "native scans and a partition filter prunes file groups") {
+    conf()
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.ns")
+    val data = (1 to 60).map(i => (i.toLong, s"p${i % 3}", i * 10L))
+      .toDF("id", "part", "v")
+    // one task per file/group, so planned partitions count groups
+    spark.conf.set("spark.sql.files.openCostInBytes", (512L << 20).toString)
+    try for (mor <- Seq(false, true)) {
+      val name = if (mor) "eng_mor" else "eng_cow"
+      val dir = s"$wh/ns/$name"
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+      if (mor) {
+        val w = new write.MorWriter(spark, dir, numBuckets = 4)
+        w.insert(data, col("id"), col("part"), "1000001")
+        w.upsert(data.filter($"id" % 5 === 0).withColumn("v", $"v" + 1),
+          col("id"), col("part"), "1000002") // outstanding deltas
+        w.delete(data.filter($"id" === 7), col("id"), col("part"), "1000003")
+      } else new write.CowWriter(spark, dir, numBuckets = 4)
+        .insert(data, col("id"), col("part"), "1000001")
+      val tl = Timeline(spark.sessionState.newHadoopConf(), dir)
+      assert(tl.metadata("1000001").extra.get(write.FormatWriter.KeyColKey)
+        .contains("id"))
+      assert(tl.metadata("1000001").extra.get(write.FormatWriter.PartColKey)
+        .contains("part"))
+      val t = s"$cat.ns.$name"
+      val scanName = if (mor) "GraftMorBatchScan" else "GraftBatchScan("
+      def planned(q: String) = {
+        val df = spark.sql(q)
+        val scan = df.queryExecution.executedPlan.collectLeaves()
+          .collectFirst { case b: org.apache.spark.sql.execution
+              .datasources.v2.BatchScanExec => b.scan }
+        assert(scan.exists(_.description().startsWith(scanName)),
+          s"$name: $scanName expected:\n${df.queryExecution.executedPlan}")
+        (df, scan.get.toBatch.planInputPartitions().length)
+      }
+      val groups = tl.latestSlices(None).values.toSeq
+        .filter(sl => sl.relPath.nonEmpty || sl.deltas.nonEmpty)
+      val (all, nAll) = planned(s"SELECT id, v FROM $t")
+      val (p1, nP1) = planned(s"SELECT id, v FROM $t WHERE part = 'p1'")
+      assert(nAll == groups.size, s"$name: $nAll tasks for ${groups.size}")
+      assert(nP1 == groups.count(_.partitionPath == "p1") && nP1 < nAll,
+        s"$name: partition filter planned $nP1 of $nAll groups")
+      val ref = graft.read.WindowMergeReference.read(spark, dir)
+      assert(all.collect().toSet == ref.select("id", "v").collect().toSet)
+      assert(p1.collect().toSet == ref.filter($"part" === "p1")
+        .select("id", "v").collect().toSet)
+    } finally spark.conf.unset("spark.sql.files.openCostInBytes")
+  }
+
+  test("expression keys record no identity: the fallback serves equal rows " +
+      "and explain shows why the native scan declined") {
+    conf()
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.ns")
+    val dir = s"$wh/ns/eng_expr"
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+    val data = (1 to 30).map(i => (i.toLong, s"p${i % 2}", i * 10L))
+      .toDF("id", "part", "v")
+    val key = concat(lit("k"), col("id"))
+    val w = new write.MorWriter(spark, dir, numBuckets = 2)
+    w.insert(data, key, col("part"), "1000001")
+    w.upsert(data.filter($"id" % 4 === 0).withColumn("v", $"v" * 3), key,
+      col("part"), "1000002")
+    val extra = Timeline(spark.sessionState.newHadoopConf(), dir)
+      .metadata("1000001").extra
+    assert(!extra.contains(write.FormatWriter.KeyColKey))
+    assert(extra.get(write.FormatWriter.PartColKey).contains("part"))
+    val q = spark.sql(s"SELECT id, v FROM $cat.ns.eng_expr WHERE part = 'p0'")
+    val plan = q.queryExecution.executedPlan.toString
+    assert(plan.contains("GraftV1FallbackScan") &&
+      plan.contains("declined=no recorded key column"), plan)
+    assert(q.collect().toSet == graft.read.WindowMergeReference
+      .read(spark, dir).filter($"part" === "p0").select("id", "v")
+      .collect().toSet)
+    // the kill switch names itself too
+    spark.conf.set("spark.graft.catalog.nativeScan", "false")
+    try assert(spark.sql(s"SELECT id FROM $cat.ns.eng_expr")
+      .queryExecution.executedPlan.toString
+      .contains("declined=spark.graft.catalog.nativeScan=false"))
+    finally spark.conf.unset("spark.graft.catalog.nativeScan")
   }
 
   test("a format-written table in the warehouse is immediately catalog-visible") {

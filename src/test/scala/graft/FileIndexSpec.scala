@@ -99,13 +99,18 @@ class FileIndexSpec extends SparkSpec {
     // and the filter idiom serves the same rows as the explicit parameter
     assert(api.count() ==
       SnapshotReader.read(spark, dir, partitions = Seq("F")).count())
+    // and both equal the window-merge reference's rows
+    val ref = graft.read.WindowMergeReference.read(spark, dir)
+      .filter(col(MetaCols.PartitionPath) === "F")
+    val aligned = api.select(ref.columns.map(col).toIndexedSeq: _*)
+    assert(aligned.exceptAll(ref).isEmpty && ref.exceptAll(aligned).isEmpty)
   }
 
   test("MOR with outstanding deltas: filter == partitions param (merge side unpruned but exact)") {
     val dir = freshDir("orders_prune_mor")
     val w = new graft.write.MorWriter(spark, dir, numBuckets = 2)
     w.insert(orders, col("o_orderkey"), col("o_orderstatus"), Fixtures.C1)
-    // leave deltas OUTSTANDING (no compaction) so the window-merge path runs
+    // leave deltas OUTSTANDING (no compaction) so the MOR merge runs
     w.upsert(orders.filter($"o_orderkey" % 5 === 0)
         .withColumn("o_totalprice", $"o_totalprice" + 1),
       col("o_orderkey"), col("o_orderstatus"), Fixtures.C2)
@@ -115,6 +120,10 @@ class FileIndexSpec extends SparkSpec {
     assert(viaFilter.count() > 0)
     assert(viaFilter.exceptAll(viaParam).isEmpty &&
       viaParam.exceptAll(viaFilter).isEmpty)
+    val ref = graft.read.WindowMergeReference.read(spark, dir)
+      .filter(col(MetaCols.PartitionPath) === "F")
+      .select(viaFilter.columns.map(col).toIndexedSeq: _*)
+    assert(viaFilter.exceptAll(ref).isEmpty && ref.exceptAll(viaFilter).isEmpty)
   }
 
   test("snapshot planning runs NO footer job (schema from commit metadata)") {
@@ -180,7 +189,7 @@ class FileIndexSpec extends SparkSpec {
     val dir = freshDir("orders_format_mor_prune")
     val mw = new graft.write.MorWriter(spark, dir, numBuckets = 2)
     mw.insert(orders, col("o_orderkey"), col("o_orderstatus"), Fixtures.C1)
-    // leave deltas OUTSTANDING so the format read plans the window merge
+    // leave deltas OUTSTANDING so the format read plans the MOR merge
     mw.upsert(orders.filter($"o_orderkey" % 5 === 0)
         .withColumn("o_totalprice", $"o_totalprice" + 1),
       col("o_orderkey"), col("o_orderstatus"), Fixtures.C2)
@@ -192,6 +201,10 @@ class FileIndexSpec extends SparkSpec {
     assert(filtered.count() > 0)
     assert(filtered.exceptAll(viaParam).isEmpty &&
       viaParam.exceptAll(filtered).isEmpty)
+    val ref = graft.read.WindowMergeReference.read(spark, dir)
+      .filter(col(MetaCols.PartitionPath) === "F")
+      .select(df.columns.map(col).toIndexedSeq: _*)
+    assert(filtered.exceptAll(ref).isEmpty && ref.exceptAll(filtered).isEmpty)
 
     // the relation must have planned ONLY partition F's files (base AND
     // delta) — a strict subset of the unfiltered read's planning
