@@ -527,7 +527,8 @@ object Fixtures {
         // NOTE: Option.contains is WHOLE-VALUE equality — the recorded
         // value is a comma list, so membership needs the split (a bare
         // .contains silently rebuilt the fixture on every call)
-        tl.recordedExtraAsOf(graft.write.FormatWriter.StatsColsKey, None)
+        graft.write.WriteContract.recorded(tl)
+          .get(graft.write.WriteContract.StatsColsKey)
           .exists(_.split(',').map(_.trim).contains("o_price_dec")) &&
           tl.completedInstants().lastOption.exists(i =>
             tl.metadata(i.ts).allStats.forall { case (_, st) =>

@@ -348,7 +348,7 @@ final class Timeline(val fs: FileSystem, val basePath: Path,
     * missing (this commit's fields keep their order and types — it is the
     * newest writer; add-only evolution makes same-name/different-type
     * divergence a caller contract violation, resolved newest-wins). The MOR
-    * delete marker stays delta-only, as in `MorWriter.monotonicSchema`.
+    * delete marker stays delta-only, as in `TableWriter.monotonicSchema`.
     * Only reached on the disjoint-group append path: create/overwrite
     * (`conflictOnAny`) has already thrown when anything completed since. */
   private def reUnionSchema(meta: CommitMetadata, since: Seq[Instant],

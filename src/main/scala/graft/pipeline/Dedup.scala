@@ -1642,7 +1642,7 @@ object Dedup {
     * uniqueness upstream can switch it off via `assertNewDocs`. */
   /** The incremental indexes' INGEST CONTRACT, persisted in the index
     * table's CREATION commit extras exactly like `buckets`
-    * ([[graft.write.FormatWriter.BucketsKey]]) and required to MATCH on
+    * ([[graft.write.WriteContract.BucketsKey]]) and required to MATCH on
     * every post-bootstrap batch: the index keys are segment/window
     * strings OF ONE UNIT — a caller drifting on `width`/`delim`/`w`/
     * `minDupCount` between batches would silently mix units in one
@@ -1657,7 +1657,7 @@ object Dedup {
   private def assertIngestContract(tl: graft.format.Timeline,
       dir: String, contract: Map[String, String]): Unit =
     contract.foreach { case (k, got) =>
-      graft.write.FormatWriter.recordedExtra(tl, k).foreach { r =>
+      tl.recordedExtraAsOf(k, None).foreach { r =>
         if (r != got) throw new IllegalArgumentException(
           s"$k=$got contradicts the ingest contract recorded when $dir " +
             s"was bootstrapped ($k=$r): every batch must pass the same " +

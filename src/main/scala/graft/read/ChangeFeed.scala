@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   *    pre-overwrite snapshot); rows it dropped are NOT enumerated as
   *    deletes — an overwrite replaces the table rather than deleting
   *    tracked records (its delete view is empty by design, same contract
-  *    as [[graft.write.CowWriter.overwriteTable]]), and enumerating them
+  *    as [[graft.write.TableWriter.overwriteTable]]), and enumerating them
   *    would cost a full pre-overwrite snapshot scan instead of
   *    touched-group-bounded work.
   *
@@ -131,8 +131,9 @@ object ChangeFeed {
     // state's ordering value below.
     val pcOpt =
       if (i.action == Instant.DeltaCommitAction)
-        tl.recordedExtraAsOf(graft.write.FormatWriter.PrecombineKey,
-          Some(i.ts)).filter(raw.columns.contains)
+        graft.write.WriteContract.recorded(tl, Some(i.ts))
+          .get(graft.write.WriteContract.PrecombineKey)
+          .filter(raw.columns.contains)
       else None
 
     val changed =

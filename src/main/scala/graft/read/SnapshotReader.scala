@@ -162,7 +162,7 @@ object SnapshotReader {
     * before bucket recording. */
   private[graft] def recordedBuckets(tl: Timeline,
       asOf: Option[String]): Option[Int] =
-    tl.recordedExtraAsOf(graft.write.FormatWriter.BucketsKey, asOf)
+    tl.recordedExtraAsOf(graft.write.WriteContract.BucketsKey, asOf)
       .flatMap(_.toIntOption)
 
   /** Merge a concrete set of file slices into their current-state rows.

@@ -468,7 +468,7 @@ private[sources] final case class GraftReaderFactory(
 /** The engine's key→bucket layout as a catalog-loadable V2 function:
   * `bucket(numBuckets, key) = pmod(xxhash64(CAST(key AS STRING)),
   * numBuckets)` — EXACTLY the fileId arithmetic every graft writer uses
-  * ([[graft.write.CowWriter]] `fileIdCol`), so a scan-reported
+  * ([[graft.write.TableWriter]] `fileIdCol`), so a scan-reported
   * `bucket(n, key)` transform matches the physical file layout.
   * Storage-partitioned join planning resolves it by name through
   * [[GraftCatalog.loadFunction]] and compares both sides via

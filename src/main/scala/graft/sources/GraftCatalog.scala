@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.format.{FileSlice, MetaCols, Timeline, WriteStat}
 import graft.read.{GraftFileIndex, GraftMorRelation, SnapshotReader}
-import graft.write.FormatWriter
+import graft.write.{FormatWriter, WriteContract}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -298,7 +298,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         "graft tables partition by ONE identity column, got " +
           s"PARTITIONED BY (${other.mkString(", ")})")
     }
-    val part = (fromTransforms, prop(FormatWriter.PartColKey)) match {
+    val part = (fromTransforms, prop(WriteContract.PartColKey)) match {
       case (Some(a), Some(b)) if !resolver(a, b) =>
         throw new IllegalArgumentException(
           s"PARTITIONED BY ($a) contradicts TBLPROPERTIES partition=$b")
@@ -306,10 +306,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         "graft tables need a partition column: PARTITIONED BY (col) or " +
           "TBLPROPERTIES (partition 'col')"))
     }
-    val key = prop(FormatWriter.KeyColKey).getOrElse(
+    val key = prop(WriteContract.KeyColKey).getOrElse(
       throw new IllegalArgumentException(
         "graft tables need a record-key column: TBLPROPERTIES (key 'col')"))
-    Seq(FormatWriter.KeyColKey -> key, FormatWriter.PartColKey -> part)
+    Seq(WriteContract.KeyColKey -> key, WriteContract.PartColKey -> part)
       .foreach { case (what, c) =>
         require(schema.fields.exists(f => resolver(f.name, c)),
           s"$what column '$c' is not a column of the declared schema")
@@ -317,28 +317,20 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     schema.fieldNames.foreach(n =>
       require(!MetaCols.all.contains(n) && n != MetaCols.IsDeleted,
         s"column name '$n' is reserved for engine meta columns"))
-    val tpe = prop(FormatWriter.TypeKey).map(_.toLowerCase(java.util.Locale.ROOT)).getOrElse("cow")
-    require(tpe == "cow" || tpe == "mor",
-      s"""graft type must be "cow" or "mor", got "$tpe"""")
-    val buckets = prop(FormatWriter.BucketsKey).map(_.toInt).getOrElse(8)
-    require(buckets >= 1, "buckets must be >= 1")
-    prop(FormatWriter.PrecombineKey).foreach(pc =>
+    prop(WriteContract.PrecombineKey).foreach(pc =>
       require(schema.fields.exists(f => resolver(f.name, pc)),
         s"precombine column '$pc' is not a column of the declared schema"))
 
     // the creation commit: zero data, full contract — meta-prefixed schema
-    // plus every writer-resolvable table property, exactly what a first
+    // plus the resolved write contract, exactly what a first
     // `df.write.format("graft")` insert would have recorded
     val full = MetaCols.canonicalSchema(StructType(
       MetaCols.all.map(StructField(_, StringType)) ++ schema.fields))
-    val extras = Map(
-      FormatWriter.KeyColKey -> key, FormatWriter.PartColKey -> part,
-      FormatWriter.TypeKey -> tpe,
-      FormatWriter.BucketsKey -> buckets.toString) ++
-      Seq(FormatWriter.PrecombineKey, FormatWriter.StatsColsKey,
-        FormatWriter.BloomColsKey, FormatWriter.BloomBitsKey)
-        .flatMap(k => prop(k).map(k -> _))
     val tl = Timeline(hconf, path)
+    val extras = WriteContract.resolve(tl,
+      WriteContract.Keys.flatMap(k => prop(k).map(k -> _)).toMap ++
+        Map(WriteContract.KeyColKey -> key,
+          WriteContract.PartColKey -> part)).creationExtra
     val ts = FormatWriter.nextTs(tl)
     try {
       tl.saveCommitOcc(ts, graft.format.CommitMetadata(
@@ -380,10 +372,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (drops.nonEmpty)
       graft.sql.SchemaEvolution.dropColumns(spark, path,
         drops.map(d => topLevel(d.fieldNames(), "DROP COLUMN")).toSeq,
-        ifExists = drops.forall(_.ifExists()),
-        k => Timeline(spark.sessionState.newHadoopConf(), path)
-          .recordedExtraAsOf(k, None),
-        ident.toString)
+        ifExists = drops.forall(_.ifExists()), Map.empty, ident.toString)
     loadTable(ident)
   }
 
@@ -601,22 +590,21 @@ private[graft] final class GraftV2Table(ident: String, val path: String,
 
   /** The one recorded partition column (None on pre-recording tables). */
   private[sources] def partitionColumnName: Option[String] =
-    timeline.recordedExtraAsOf(FormatWriter.PartColKey, asOf)
+    timeline.recordedExtraAsOf(WriteContract.PartColKey, asOf)
 
   /** Recorded record-key column / bucket count (the native batch scan's
     * partitioning advertisement needs both). */
   private[sources] def keyColumnName: Option[String] =
-    timeline.recordedExtraAsOf(FormatWriter.KeyColKey, asOf)
+    timeline.recordedExtraAsOf(WriteContract.KeyColKey, asOf)
   private[sources] def bucketCount: Option[Int] =
-    timeline.recordedExtraAsOf(FormatWriter.BucketsKey, asOf)
+    timeline.recordedExtraAsOf(WriteContract.BucketsKey, asOf)
       .flatMap(_.toIntOption)
 
   override def properties(): JMap[String, String] =
-    (Map("path" -> path) ++
-      Seq(FormatWriter.KeyColKey, FormatWriter.PartColKey,
-        FormatWriter.TypeKey, FormatWriter.BucketsKey,
-        FormatWriter.PrecombineKey)
-        .flatMap(k => timeline.recordedExtraAsOf(k, asOf).map(k -> _))).asJava
+    (Map("path" -> path) ++ WriteContract.recorded(timeline, asOf)
+      .view.filterKeys(Set(WriteContract.KeyColKey, WriteContract.PartColKey,
+        WriteContract.TypeKey, WriteContract.BucketsKey,
+        WriteContract.PrecombineKey))).asJava
 
   override def capabilities(): java.util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,
@@ -699,7 +687,7 @@ private[graft] final class GraftV2Table(ident: String, val path: String,
     val resolver = spark.sessionState.conf.resolver
     def fieldOf(c: String): Option[StructField] =
       full.fields.find(f => resolver(f.name, c))
-    val partField = tl.recordedExtraAsOf(FormatWriter.PartColKey, asOf)
+    val partField = tl.recordedExtraAsOf(WriteContract.PartColKey, asOf)
       .flatMap(fieldOf)
     if ((groupByPartition || partFilters.nonEmpty) && partField.isEmpty)
       return None
@@ -1368,8 +1356,8 @@ private final class GraftScanBuilder(table: GraftV2Table,
     // frame carries the column); require it on BOTH populated sides
     val allCols = (baseSchema.toSeq ++ deltaSchema.toSeq)
       .flatMap(_.fieldNames).toSet
-    val pc = tl.recordedExtraAsOf(FormatWriter.PrecombineKey, table.asOfOpt)
-      .filter(allCols.contains)
+    val pc = WriteContract.recorded(tl, table.asOfOpt)
+      .get(WriteContract.PrecombineKey).filter(allCols.contains)
     def fieldIn(s: StructType, n: String) =
       s.fields.find(f => resolver(f.name, n))
     // every column the merge reads must exist on each populated side AND

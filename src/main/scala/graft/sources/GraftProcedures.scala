@@ -183,24 +183,9 @@ private[sources] object GraftProcedures {
           default = Some("1"))),
         out("commit_ts" -> StringType, "committed" -> BooleanType)) {
         (cat, r) =>
-          val path = cat.resolveTablePath(str(r, 0))
-          val tl = timeline(path)
-          val nb = graft.read.SnapshotReader.recordedBuckets(tl, None)
-            .getOrElse(throw new IllegalArgumentException(
-              s"$path records no bucket count; compaction preserves the " +
-                "key->group routing and needs it recorded"))
-          val sc = FormatWriter.recordedExtra(tl, FormatWriter.StatsColsKey)
-            .map(_.split(",").toSeq).getOrElse(Seq.empty)
-          val bc = FormatWriter.recordedExtra(tl, FormatWriter.BloomColsKey)
-            .map(_.split(",").toSeq).getOrElse(Seq.empty)
-          val bb = FormatWriter.recordedExtra(tl, FormatWriter.BloomBitsKey)
-            .map(_.toInt).getOrElse(graft.format.Bloom.DefaultBits)
-          val w = new MorWriter(spark, path, nb, statsCols = sc,
-            bloomCols = bc, bloomBits = bb)
-          withMintedTs(w.timeline) { ts =>
-            w.compactIf(ts, minDeltas = r.getInt(1))
-            Seq(row(ts, Boolean.box(w.timeline.instantAt(ts).nonEmpty)))
-          }
+          val (ts, committed) = MorWriter.compactTableAt(spark,
+            cat.resolveTablePath(str(r, 0)), minDeltas = r.getInt(1))
+          Seq(row(ts, Boolean.box(committed)))
       },
 
       proc("archive",

@@ -1,7 +1,7 @@
 package graft.sql
 
 import graft.format.{MetaCols, Timeline}
-import graft.write.{CowWriter, FormatWriter, MorWriter}
+import graft.write.{FormatWriter, WriteContract}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.CatalogTable
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression}
@@ -18,10 +18,11 @@ import org.apache.spark.sql.graft.Bridge
   *
   * The reference's whole reason to exist is DELETE tracking
   * (ref: DeleteSupport.java:89-96); these rules give deletes (and the other
-  * verbs) their natural SQL front door, wired to the SAME commit verbs the
-  * programmatic surface uses ([[CowWriter.commit]] /
-  * [[MorWriter.upsertDelta]]) — one commit per statement, delete views and
-  * incremental reads of DML commits work unchanged.
+  * verbs) their natural SQL front door, wired to the SAME commit verb the
+  * programmatic surface uses ([[graft.write.TableWriter.commit]], on the
+  * writer the table's [[WriteContract]] selects) — one commit per
+  * statement, delete views and incremental reads of DML commits work
+  * unchanged.
   *
   * Extension-point choice: an analyzer rule injected via
   * `SparkSessionExtensions.injectResolutionRule` (the Delta-lineage pattern
@@ -407,50 +408,28 @@ private[graft] object GraftDml {
       notMatchedBySourceActions = m.notMatchedBySourceActions.map(expand))
   }
 
-  /** Resolve a table property for DML: catalog-table OPTIONS first, then
-    * the value recorded in commit metadata at creation/overwrite. */
-  def tableProp(ct: CatalogTable, tl: Timeline, name: String): Option[String] =
-    ct.storage.properties.get(name)
-      .orElse(FormatWriter.recordedExtra(tl, name))
+  /** The table's [[WriteContract]] for DML, with the catalog table's
+    * OPTIONS as the declared side: an option that contradicts the recorded
+    * contract refuses exactly like the same `df.write` option would. */
+  def contract(ct: CatalogTable, tl: Timeline): WriteContract =
+    WriteContract.resolve(tl, ct.storage.properties)
 
   /** One DML commit: updates/deletes are meta-column-carrying frames rooted
     * at the table's own snapshot relation; identity re-derives from
-    * `_hoodie_record_key`/`_hoodie_partition_path`. COW rewrites the touched
-    * groups; MOR appends a delta commit (the ingest-friendly shape). */
+    * `_hoodie_record_key`/`_hoodie_partition_path`. The contract's writer
+    * keeps the table's full write contract — COW rewrites the touched
+    * groups resolving upserts by the recorded ordering column (a stale SQL
+    * UPDATE/MERGE loses exactly like a stale batch upsert), MOR appends a
+    * delta commit under the recorded counters mode, and both re-record the
+    * declared stats and bloom columns. */
   def commitOnce(spark: SparkSession, basePath: String, ct: CatalogTable,
       updates: Option[DataFrame], deletes: Option[DataFrame]): Unit = {
     val tl = Timeline(spark.sessionState.newHadoopConf(), basePath)
-    val nb = tableProp(ct, tl, FormatWriter.BucketsKey).map(_.toInt)
-      .getOrElse(throw new IllegalArgumentException(
-        s"table ${ct.identifier} has no recorded bucket count; declare " +
-          "OPTIONS (buckets 'N') matching the writer that created it"))
-    val tpe = tableProp(ct, tl, FormatWriter.TypeKey).getOrElse("cow")
-    val sc = tableProp(ct, tl, FormatWriter.StatsColsKey)
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty)
-    // DML rewrites must keep the table's full write contract: re-record
-    // per-file blooms for the declared columns and resolve upserts by the
-    // recorded event-time ordering column (a stale SQL UPDATE/MERGE loses
-    // exactly like a stale batch upsert would)
-    val bc = tableProp(ct, tl, FormatWriter.BloomColsKey)
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty)
-    val bb = tableProp(ct, tl, FormatWriter.BloomBitsKey)
-      .map(_.toInt).getOrElse(graft.format.Bloom.DefaultBits)
-    val pc = tableProp(ct, tl, FormatWriter.PrecombineKey)
+    val w = contract(ct, tl).writer(spark, basePath, tl)
     val ts = FormatWriter.nextTs(tl)
-    val k = col(MetaCols.RecordKey)
-    val p = col(MetaCols.PartitionPath)
-    try {
-      if (tpe == "mor")
-        new MorWriter(spark, basePath, nb, statsCols = sc,
-          bloomCols = bc, bloomBits = bb)
-          .upsertDelta(updates, deletes, k, p, ts)
-      else
-        new CowWriter(spark, basePath, nb, statsCols = sc,
-          bloomCols = bc, bloomBits = bb, precombine = pc)
-          .commit(updates, deletes, k, p, ts)
-    } finally tl.unreserve(ts) // no-op when the commit landed
+    try w.commit(updates, deletes, col(MetaCols.RecordKey),
+      col(MetaCols.PartitionPath), ts)
+    finally tl.unreserve(ts) // no-op when the commit landed
   }
 
   /** Drop-or-keep emptiness probe: None when the frame has no rows (the
@@ -607,15 +586,14 @@ case class GraftMergeCommand(basePath: String, ct: CatalogTable,
     }
 
     if (merge.notMatchedActions.nonEmpty) {
-      val tl = Timeline(spark.sessionState.newHadoopConf(), basePath)
-      val keyName = tableProp(ct, tl, FormatWriter.KeyColKey)
-        .getOrElse(throw new IllegalArgumentException(
-          "MERGE INSERT needs the table's record-key column name: declare " +
-            "OPTIONS (key '...', partition '...') or create the table " +
-            "through the graft format writer (which records them)"))
-      val partName = tableProp(ct, tl, FormatWriter.PartColKey)
-        .getOrElse(throw new IllegalArgumentException(
-          "MERGE INSERT needs the table's partition column name (see key)"))
+      val c = contract(ct,
+        Timeline(spark.sessionState.newHadoopConf(), basePath))
+      val keyName = c.key.getOrElse(throw new IllegalArgumentException(
+        "MERGE INSERT needs the table's record-key column name: declare " +
+          "OPTIONS (key '...', partition '...') or create the table " +
+          "through the graft format writer (which records them)"))
+      val partName = c.partition.getOrElse(throw new IllegalArgumentException(
+        "MERGE INSERT needs the table's partition column name (see key)"))
       val payloadAttrs = targetAttrs
         .filterNot(a => MetaCols.all.contains(a.name))
       val notMatched = src.join(tgt, cond, "left_anti")
@@ -765,10 +743,8 @@ case class GraftDropColumnsCommand(basePath: String, ct: CatalogTable,
   override def run(spark: SparkSession): Seq[Row] = {
     import org.apache.spark.sql.types.StructType
     val resolver = spark.sessionState.conf.resolver
-    val tl = Timeline(spark.sessionState.newHadoopConf(), basePath)
     val dropped = SchemaEvolution.dropColumns(spark, basePath, names,
-      ifExists, k => GraftDml.tableProp(ct, tl, k),
-      ct.identifier.toString).toSet
+      ifExists, ct.storage.properties, ct.identifier.toString).toSet
     if (dropped.isEmpty) return Seq.empty // IF EXISTS and nothing matched
     // alterTableDataSchema refuses narrowing ("dropping columns not
     // supported") — replace the stored schema wholesale; the commit above
@@ -831,12 +807,13 @@ private[graft] object SchemaEvolution {
     publishEvolution(tl, evolved)
   }
 
-  /** Narrowing: validate (existence unless `ifExists`, identity/index
-    * protection via `prop`) and publish the DROP COLUMNS commit; returns
-    * the column names actually dropped (empty = IF EXISTS no-op). */
+  /** Narrowing: validate (existence unless `ifExists`, protection of the
+    * columns the write contract names — recorded, or `declared` by the
+    * catalog table) and publish the DROP COLUMNS commit; returns the
+    * column names actually dropped (empty = IF EXISTS no-op). */
   def dropColumns(spark: SparkSession, basePath: String,
       names: Seq[String], ifExists: Boolean,
-      prop: String => Option[String], what: String): Seq[String] = {
+      declared: Map[String, String], what: String): Seq[String] = {
     import org.apache.spark.sql.types.{DataType, StructType}
     val resolver = spark.sessionState.conf.resolver
     val tl = Timeline(spark.sessionState.newHadoopConf(), basePath)
@@ -847,16 +824,7 @@ private[graft] object SchemaEvolution {
           "(empty or pre-schema-recording table)"))
     val protectedCols: Map[String, String] = (
       (MetaCols.all :+ MetaCols.IsDeleted).map(_ -> "engine meta column") ++
-      Seq(FormatWriter.KeyColKey -> "record-key column",
-        FormatWriter.PartColKey -> "partition column",
-        FormatWriter.PrecombineKey -> "precombine ordering column")
-        .flatMap { case (k, w) => prop(k).map(_ -> w) } ++
-      Seq(FormatWriter.StatsColsKey -> "declared stats column",
-        FormatWriter.BloomColsKey -> "declared bloom column")
-        .flatMap { case (k, w) =>
-          prop(k).toSeq
-            .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
-            .map(_ -> w) }).toMap
+      WriteContract.namedColumns(tl, declared)).toMap
     val present = names.filter { n =>
       val exists = current.fields.exists(e => resolver(e.name, n))
       require(exists || ifExists,

@@ -13,7 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * bucket column, plans with NO Exchange (asserted in BucketedJoinSpec).
   * This is Spark's native answer to co-located joins — the analog of the
   * versioned-table writers' deterministic key→fileId bucketing
-  * (CowWriter.fileIdCol), surfaced for plain analytics tables.
+  * (TableWriter.fileIdCol), surfaced for plain analytics tables.
   */
 object BucketedTables {
 

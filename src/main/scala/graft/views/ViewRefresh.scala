@@ -2,7 +2,7 @@ package graft.views
 
 import graft.format.Timeline
 import graft.read.SnapshotReader
-import graft.write.{CowWriter, FormatWriter}
+import graft.write.{CowWriter, FormatWriter, WriteContract}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -45,7 +45,7 @@ private[views] object ViewRefresh {
       try new CowWriter(spark, viewPath, buckets).insert(agg, col(groupCol),
         lit("all"), ts0,
         extra = Map(MaterializedAgg.AsOfKey -> srcHead,
-          FormatWriter.KeyColKey -> groupCol))
+          WriteContract.KeyColKey -> groupCol))
       finally viewTl.unreserve(ts0)
       return srcHead
     }

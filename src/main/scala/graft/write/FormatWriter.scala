@@ -1,7 +1,7 @@
 package graft.write
 
-import graft.format.{MetaCols, Timeline}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import graft.format.Timeline
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Write half of the `graft` format surface — the engine behind
@@ -9,21 +9,22 @@ import org.apache.spark.sql.functions.col
   * (streaming sink), both dispatched from
   * [[graft.streaming.GraftSourceProvider]].
   *
-  * Options: `key` (record-key column, REQUIRED), `partition` (partition
-  * column, REQUIRED), `operation` (`upsert` default | `delete`: Append
-  * mode removes the frame's keys instead of upserting them — COW rewrites
-  * survivors, MOR appends delete markers | `cdc`: the frame is a CHANGE
-  * feed — `_change_type`/`_change_commit_ts`-tagged rows as produced by
-  * [[graft.read.ChangeFeed]]; the newest change per key wins, deletes
-  * remove their keys, inserts/updates upsert post-images, all in ONE
-  * commit — `readStream(cdc=true) → writeStream(operation=cdc)` mirrors a
-  * table INCLUDING deletes), `type` (`cow` default | `mor`:
-  * appends are DELTA commits — no file-group rewrite; the
-  * streaming-ingest shape), `buckets`
-  * (file groups per partition; defaults to the count recorded in the
-  * table's commit metadata, else 8), `stats` (comma-separated hot payload
-  * columns for the column-stats skipping index — the record key is always
-  * tracked), `compactEvery` (MOR only: compact
+  * Options: `key`/`partition` (record-key and partition columns),
+  * `type` (`cow` default | `mor`: appends are DELTA commits — no
+  * file-group rewrite; the streaming-ingest shape), `buckets`, `stats`,
+  * `blooms`, `bloomBits`, `precombine` and `deltaCounters` are the table's
+  * WRITE CONTRACT: [[WriteContract.resolve]] resolves each against the
+  * value the table recorded at creation (a contradicting option refuses;
+  * an omitted one takes the recorded value, else the default), a creating
+  * or overwriting write records [[WriteContract.creationExtra]], and the
+  * contract picks the writer. `operation` (`upsert` default | `delete`:
+  * Append mode removes the frame's keys instead of upserting them — COW
+  * rewrites survivors, MOR appends delete markers | `cdc`: the frame is a
+  * CHANGE feed — `_change_type`/`_change_commit_ts`-tagged rows as
+  * produced by [[graft.read.ChangeFeed]]; the newest change per key wins,
+  * deletes remove their keys, inserts/updates upsert post-images, all in
+  * ONE commit — `readStream(cdc=true) → writeStream(operation=cdc)`
+  * mirrors a table INCLUDING deletes), `compactEvery` (MOR only: compact
   * file groups holding ≥ N outstanding deltas after each append — bounds
   * snapshot merge cost without a separate maintenance job), `ts` (explicit
   * commit timestamp — tests/fixtures; defaults to a wall-clock timestamp
@@ -35,9 +36,11 @@ import org.apache.spark.sql.functions.col
   * atomic commit (the INSERT_OVERWRITE_TABLE analog — history and time
   * travel across the overwrite survive; superseded slices are reclaimed
   * by [[TableMaintenance.clean]]), ErrorIfExists/Ignore behave as named.
-  * All data movement goes through [[CowWriter]]/[[MorWriter]]: one
-  * distributed job per commit, driver handles only file names and commit
-  * JSON.
+  * All data movement goes through the contract's writer
+  * ([[CowWriter]]/[[MorWriter]]): one distributed job per commit, driver
+  * handles only file names and commit JSON. One `.hoodie` listing serves
+  * the contract, the commit-ts mint and the writer's plan; the OCC check
+  * re-lists under the commit lock.
   *
   * At 100 TB the `type` choice is the write-amplification knob: a COW
   * append REWRITES every touched file group (read-optimized serving), a
@@ -73,43 +76,6 @@ private[graft] object FormatWriter {
     * makes a replay skip and a new query land. */
   val QueryIdKey = "streaming.queryId"
 
-  /** Commit-extra key pinning the table's bucket count at creation, so
-    * later appends can't silently re-bucket keys across file groups. */
-  val BucketsKey = "buckets"
-
-  /** Commit-extra key pinning the table type (`cow`/`mor`) at creation. */
-  val TypeKey = "type"
-
-  /** Commit-extra keys recording the record-key and partition COLUMN NAMES
-    * at creation/overwrite — what lets SQL DML (and appends that omit the
-    * options) resolve the table's identity columns from metadata. */
-  val KeyColKey = "key"
-  val PartColKey = "partition"
-
-  /** The identity a table-creating engine write records: `key`/`partition`
-    * for each of the two that the caller names by a bare column reference
-    * (an expression key records nothing — there is no column to name).
-    * Callers merge their own `extra` on top, so an explicit value wins. */
-  private[graft] def identityExtra(keyCol: Column, partCol: Column)
-      : Map[String, String] =
-    Seq(KeyColKey -> keyCol, PartColKey -> partCol).flatMap { case (k, c) =>
-      org.apache.spark.sql.graft.Bridge.bareColumnName(c)
-        // readers re-resolve the name with col(...), which would parse a
-        // dotted name as a nested field; meta columns are not payload
-        .filterNot(n => n.contains('.') || MetaCols.all.contains(n))
-        .map(k -> _)
-    }.toMap
-
-  /** Commit-extra key recording the table's EVENT-TIME ordering column
-    * (Hudi's precombine field): when declared at creation/overwrite via
-    * `.option("precombine", col)`, the row version with the GREATEST
-    * ordering value wins an upsert regardless of arrival order — COW
-    * resolves at write time, MOR at merge time — so late-arriving stale
-    * updates cannot shadow newer data (out-of-order ingest, replayed
-    * batches, backfills). Deletes stay ABSOLUTE (commit-ordered). Null
-    * ordering values lose to any non-null; ties go to the newer commit. */
-  val PrecombineKey = "precombine"
-
   /** Commit-extra marker a MOR delta commit carries when its write stats
     * record EXACT live-count deltas (numInserts = new live keys with
     * within-commit delete-wins applied, numDeletes = existing keys
@@ -118,133 +84,6 @@ private[graft] object FormatWriter {
     * without merging; pre-marker delta commits decline the fold (their
     * numInserts was unrecorded). */
   val DeltaCountsKey = "deltaCounts"
-
-  /** Table-property key (recorded at creation/overwrite like
-    * `buckets`/`type`): `exact` (default) maintains the per-delta live
-    * counters above; `off` skips the existence check they require — a
-    * SNAPSHOT-KEY join per delta commit, table-sized however small the
-    * batch — for DELETE-FREE deltas. The right declaration for internal
-    * high-churn state tables (dedup window/signature indexes) that are
-    * consumed by joins, not metadata COUNT(*): their delta commits then
-    * carry no [[DeltaCountsKey]] marker and every reader already declines
-    * the metadata fold for such commits (the pre-r11 commit shape).
-    * Deltas CARRYING DELETES always compute exact counters regardless —
-    * `totalRecordsDeleted` exactness is a delete-view invariant. */
-  val DeltaCountersKey = "deltaCounters"
-
-  /** Commit-extra key recording the comma-separated HOT payload columns
-    * tracked by the column-stats skipping index (the record key is always
-    * tracked). Declared at creation via `.option("stats", "c1,c2")`,
-    * resolved from metadata for later appends; may be changed per write
-    * (stats are per-file — new files simply record the new set). */
-  val StatsColsKey = "stats"
-
-  /** Commit-extra key recording the comma-separated columns tracked by the
-    * per-file BLOOM skipping index (equality/IN lookups on
-    * high-cardinality payload columns, where min/max ranges go blind —
-    * see [[graft.format.Bloom]]). Declared via `.option("blooms",
-    * "c1,c2")`; bloom columns are implicitly stats columns too. */
-  val BloomColsKey = "blooms"
-
-  /** Commit-extra key for the per-file bloom size in bits
-    * (`.option("bloomBits", n)`; size to ~7× the expected per-file
-    * distinct count — undersized blooms keep files, never drop wrongly). */
-  val BloomBitsKey = "bloomBits"
-
-  /** Hot stats columns: explicit option, else the set recorded at
-    * creation/overwrite. */
-  private def statsCols(parameters: Map[String, String],
-      timeline: Timeline): Seq[String] =
-    parameters.get(StatsColsKey)
-      .orElse(recordedExtra(timeline, StatsColsKey))
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty)
-
-  /** Bloom-tracked columns: explicit option, else the set recorded at
-    * creation/overwrite. */
-  private def bloomCols(parameters: Map[String, String],
-      timeline: Timeline): Seq[String] =
-    parameters.get(BloomColsKey)
-      .orElse(recordedExtra(timeline, BloomColsKey))
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty)
-
-  private def bloomBits(parameters: Map[String, String],
-      timeline: Timeline): Int =
-    parameters.get(BloomBitsKey)
-      .orElse(recordedExtra(timeline, BloomBitsKey))
-      .map(_.toInt).getOrElse(graft.format.Bloom.DefaultBits)
-
-  private def required(parameters: Map[String, String], name: String): String =
-    parameters.getOrElse(name, throw new IllegalArgumentException(
-      s"""graft write requires .option("$name", <column name>)"""))
-
-  /** Identity column (key/partition): explicit option, else the name
-    * recorded at creation (or the newest overwrite). A contradicting
-    * explicit option is an error — changing the record-key or partition
-    * derivation mid-table would silently split record identities. */
-  private def identityCol(parameters: Map[String, String],
-      timeline: Timeline, name: String): String = {
-    val recorded = recordedExtra(timeline, name)
-    val opt = parameters.get(name)
-    (opt, recorded) match {
-      case (Some(o), Some(r)) if o != r => throw new IllegalArgumentException(
-        s"""$name=$o contradicts the table's recorded $name column "$r"""")
-      case (o, r) => o.orElse(r).getOrElse(throw new IllegalArgumentException(
-        s"""graft write requires .option("$name", <column name>) """ +
-          "(not recorded in this table's commit metadata)"))
-    }
-  }
-
-  /** Newest commit-extra value for `key` — table properties (buckets, type)
-    * are recorded at CREATION and at every OVERWRITE (re-creation point),
-    * so the newest record is the live one. Metadata-scale walk, memoized
-    * per Timeline; stops at the first carrier. */
-  private[graft] def recordedExtra(timeline: Timeline,
-      key: String): Option[String] =
-    timeline.recordedExtraAsOf(key, None)
-
-  /** Event-time ordering column: recorded at creation/overwrite; appends
-    * resolve it from metadata. A contradicting explicit option is an
-    * error, and declaring one on an EXISTING table without a recorded
-    * column is too (rows written before the declaration would carry
-    * arbitrary ordering — re-create or overwrite to declare). */
-  private def precombineCol(parameters: Map[String, String],
-      timeline: Timeline): Option[String] = {
-    val recorded = recordedExtra(timeline, PrecombineKey)
-    val opt = parameters.get(PrecombineKey)
-    val exists = timeline.completedInstants().nonEmpty
-    (opt, recorded) match {
-      case (Some(o), Some(r)) if o != r => throw new IllegalArgumentException(
-        s"""precombine=$o contradicts the table's recorded ordering column "$r"""")
-      case (Some(_), None) if exists => throw new IllegalArgumentException(
-        "precombine is declared at table creation or overwrite; this " +
-          "table records none (existing rows would carry arbitrary ordering)")
-      case (o, r) => o.orElse(r)
-    }
-  }
-
-  /** Bucket count: explicit option, else the count recorded at table
-    * creation (or the newest overwrite), else (for a NEW table only) 8. An
-    * explicit option that CONTRADICTS the recorded count is an error, and
-    * appending to an existing table with NO recorded count (created by the
-    * raw writer APIs) without an explicit option is too — either way,
-    * re-bucketing keys across file groups would strand old row versions in
-    * groups the upsert never rewrites (silent duplicate keys). */
-  private def buckets(parameters: Map[String, String],
-      timeline: Timeline): Int = {
-    val exists = timeline.completedInstants().nonEmpty
-    val recorded = recordedExtra(timeline, BucketsKey).map(_.toInt)
-    val opt = parameters.get(BucketsKey).map(_.toInt)
-    (opt, recorded) match {
-      case (Some(o), Some(r)) if o != r => throw new IllegalArgumentException(
-        s"buckets=$o contradicts the table's recorded bucket count $r")
-      case (None, None) if exists => throw new IllegalArgumentException(
-        "appending to a table with no recorded bucket count; pass " +
-          """.option("buckets", N) matching the writer that created it""")
-      case (o, r) => o.orElse(r).getOrElse(8)
-    }
-  }
 
   /** Next commit ts: wall clock (14-digit yyyyMMddHHmmss, UTC) when it
     * sorts after the newest commit at the table's ts width; otherwise the
@@ -288,111 +127,69 @@ private[graft] object FormatWriter {
           s"graft table already exists at $basePath (mode=ErrorIfExists)")
       case SaveMode.Ignore if exists => ()
       case SaveMode.Overwrite if exists =>
-        overwrite(spark, basePath, parameters, df)
+        overwrite(spark, basePath, timeline, parameters, df)
       case _ => // Append, or first write under any mode
-        append(spark, basePath, parameters, df, Map.empty)
+        appendTo(spark, basePath, timeline, parameters, df, Map.empty)
     }
   }
 
+  private def operation(parameters: Map[String, String]): String =
+    parameters.getOrElse("operation", "upsert")
+      .toLowerCase(java.util.Locale.ROOT)
+
   /** INSERT_OVERWRITE_TABLE: replace the table's content with `df` in ONE
-    * atomic commit ([[CowWriter.overwriteTable]]) — never a directory
+    * atomic commit ([[TableWriter.overwriteTable]]) — never a directory
     * delete, so a concurrent reader sees the old snapshot or the new one
     * (never an empty table), a crash mid-write leaves the old table intact
     * (orphaned new files are reclaimed by clean), history and time travel
     * survive, and every option typo throws BEFORE anything irreversible.
     *
-    * An overwrite is the table's re-creation point: `buckets`/`type` may be
-    * CHANGED here (every group is rewritten, so re-bucketing strands
-    * nothing) and are re-recorded in the commit for later appends. */
+    * An overwrite is the table's re-creation point: every contract property
+    * — key/partition, `buckets`, `type`, `precombine` — may CHANGE here
+    * (every group is rewritten, so nothing stale survives) and the resolved
+    * [[WriteContract]] is re-recorded for later appends. */
   private def overwrite(spark: SparkSession, basePath: String,
-      parameters: Map[String, String], df: DataFrame): Unit = {
-    val timeline = Timeline(spark.sessionState.newHadoopConf(), basePath)
-    // re-creation point: key/partition (like buckets/type) may CHANGE here
-    // — every group is rewritten, so no stale identity can survive
-    val key = parameters.get(KeyColKey)
-      .orElse(recordedExtra(timeline, KeyColKey))
-      .getOrElse(required(parameters, KeyColKey))
-    val part = parameters.get(PartColKey)
-      .orElse(recordedExtra(timeline, PartColKey))
-      .getOrElse(required(parameters, PartColKey))
-    val op = parameters.getOrElse("operation", "upsert").toLowerCase(java.util.Locale.ROOT)
+      timeline: Timeline, parameters: Map[String, String],
+      df: DataFrame): Unit = {
+    val op = operation(parameters)
     require(op == "upsert",
       s"""mode=Overwrite replaces the table; operation "$op" is meaningless here""")
-    val opt = parameters.get(TypeKey).map(_.toLowerCase(java.util.Locale.ROOT))
-    opt.foreach(t => require(t == "cow" || t == "mor",
-      s"""graft type must be "cow" or "mor", got "$t""""))
-    val tpe = opt.orElse(recordedExtra(timeline, TypeKey)).getOrElse("cow")
-    val nb = parameters.get(BucketsKey).map(_.toInt)
-      .orElse(recordedExtra(timeline, BucketsKey).map(_.toInt)).getOrElse(8)
-    require(nb >= 1, "buckets must be >= 1")
+    val c = WriteContract.resolve(timeline, parameters, recreate = true)
+    val (key, part) = (c.keyCol, c.partitionCol)
     val ts = parameters.getOrElse("ts", nextTs(timeline))
-    val sc = statsCols(parameters, timeline)
-    val bc = bloomCols(parameters, timeline)
-    val bb = bloomBits(parameters, timeline)
-    // re-creation point: the ordering column may be (re)declared here
-    val pc = parameters.get(PrecombineKey)
-      .orElse(recordedExtra(timeline, PrecombineKey))
-    val dc = deltaCounters(parameters, timeline)
-    new CowWriter(spark, basePath, nb, statsCols = sc,
-      bloomCols = bc, bloomBits = bb, precombine = pc)
-      .overwriteTable(df, col(key), col(part),
-        ts, extra = Map(BucketsKey -> nb.toString, TypeKey -> tpe,
-          KeyColKey -> key, PartColKey -> part) ++
-          (if (sc.nonEmpty) Map(StatsColsKey -> sc.mkString(",")) else Map.empty) ++
-          (if (bc.nonEmpty) Map(BloomColsKey -> bc.mkString(","),
-            BloomBitsKey -> bb.toString) else Map.empty) ++
-          pc.map(PrecombineKey -> _) ++
-          (if (dc != "exact") Map(DeltaCountersKey -> dc) else Map.empty))
-  }
-
-  /** Delta-counter mode: explicit option, else the mode recorded at
-    * creation (or the newest overwrite), else `exact`. See
-    * [[DeltaCountersKey]]. */
-  private def deltaCounters(parameters: Map[String, String],
-      timeline: Timeline): String = {
-    val v = parameters.get(DeltaCountersKey)
-      .orElse(recordedExtra(timeline, DeltaCountersKey))
-      .getOrElse("exact").toLowerCase(java.util.Locale.ROOT)
-    require(v == "exact" || v == "off",
-      s"""deltaCounters must be "exact" or "off", got "$v"""")
-    v
-  }
-
-  /** Table type: explicit option, else the type recorded at creation (or
-    * the newest overwrite), else `cow`. A contradicting explicit option is
-    * an error (a COW append on a MOR table would rewrite groups the merge
-    * expects deltas for). */
-  private def tableType(parameters: Map[String, String],
-      timeline: Timeline): String = {
-    val recorded = recordedExtra(timeline, TypeKey)
-    val opt = parameters.get(TypeKey).map(_.toLowerCase(java.util.Locale.ROOT))
-    opt.foreach(t => require(t == "cow" || t == "mor",
-      s"""graft type must be "cow" or "mor", got "$t""""))
-    (opt, recorded) match {
-      case (Some(o), Some(r)) if o != r => throw new IllegalArgumentException(
-        s"""type=$o contradicts the table's recorded type "$r"""")
-      case (o, r) => o.orElse(r).getOrElse("cow")
-    }
+    try c.writer(spark, basePath, timeline)
+      .overwriteTable(df, col(key), col(part), ts, extra = c.creationExtra)
+    finally timeline.unreserve(ts)
   }
 
   /** Insert-or-upsert one commit (shared by batch Append and the streaming
     * sink). Duplicate keys WITHIN `df` are the caller's bug (Hudi's
-    * record-key uniqueness contract — same as CowWriter's). COW appends
-    * rewrite touched groups; MOR appends are delta commits, optionally
-    * followed by threshold compaction (`compactEvery`). */
+    * record-key uniqueness contract). The table's [[WriteContract]] picks
+    * the writer: COW appends rewrite touched groups; MOR appends are delta
+    * commits, optionally followed by threshold compaction
+    * (`compactEvery`). */
   def append(spark: SparkSession, basePath: String,
       parameters: Map[String, String], df: DataFrame,
+      extra: Map[String, String]): Unit =
+    appendTo(spark, basePath,
+      Timeline(spark.sessionState.newHadoopConf(), basePath),
+      parameters, df, extra)
+
+  /** [[append]] against a caller's `timeline` of the table. */
+  private[write] def appendTo(spark: SparkSession, basePath: String,
+      timeline: Timeline, parameters: Map[String, String], df: DataFrame,
       extra: Map[String, String]): Unit = {
     // OCC retry: when the commit ts is auto-minted, a lost race
     // (CommitConflictException — overlapping groups or ordering) re-plans
-    // the WHOLE append against the new table state with a fresh reserved
+    // the WHOLE append against the new table state (the conflict check
+    // re-listed the timeline under the commit lock) with a fresh reserved
     // ts; the failed attempt's data files are unreferenced and harmless.
     // An explicit .option("ts", ...) fails loudly instead (the caller
     // pinned history).
     val auto = !parameters.contains("ts")
     var attempts = 0
     while (true) {
-      try { appendOnce(spark, basePath, parameters, df, extra); return }
+      try { appendOnce(spark, basePath, timeline, parameters, df, extra); return }
       catch {
         case _: graft.format.CommitConflictException
             if auto && attempts < 4 => attempts += 1
@@ -401,29 +198,23 @@ private[graft] object FormatWriter {
   }
 
   private def appendOnce(spark: SparkSession, basePath: String,
-      parameters: Map[String, String], df: DataFrame,
+      timeline: Timeline, parameters: Map[String, String], df: DataFrame,
       extra: Map[String, String]): Unit = {
-    val timeline = Timeline(spark.sessionState.newHadoopConf(), basePath)
-    val key = identityCol(parameters, timeline, KeyColKey)
-    val part = identityCol(parameters, timeline, PartColKey)
-    val nb = buckets(parameters, timeline)
-    val tpe = tableType(parameters, timeline)
-    val ts = parameters.getOrElse("ts", nextTs(timeline))
+    val op = operation(parameters)
+    require(op == "upsert" || op == "delete" || op == "cdc",
+      s"""graft operation must be "upsert", "delete" or "cdc", got "$op"""")
+    val c = WriteContract.resolve(timeline, parameters)
     val isNew = timeline.completedInstants().isEmpty
+    require(!(isNew && op == "delete"),
+      s"cannot delete from a table that does not exist at $basePath")
     // a catalog CREATE TABLE records schema/contract as an EMPTY creation
     // commit — the table exists but holds no slices, so the first data
     // write must still take the insert branch (an upsert would plan
     // against nothing)
     val noData = isNew || timeline.latestSlices(None).isEmpty
-    val op = parameters.getOrElse("operation", "upsert").toLowerCase(java.util.Locale.ROOT)
-    require(op == "upsert" || op == "delete" || op == "cdc",
-      s"""graft operation must be "upsert", "delete" or "cdc", got "$op"""")
-    require(!(isNew && op == "delete"),
-      s"cannot delete from a table that does not exist at $basePath")
-    if (noData && !isNew && op == "delete") {
-      timeline.unreserve(ts)
-      return // deleting keys from a created-but-empty table: legal no-op
-    }
+    // deleting keys from a created-but-empty table: legal no-op
+    if (noData && op == "delete") return
+    val (key, part) = (c.keyCol, c.partitionCol)
 
     // operation=cdc: split the tagged change frame into (upserts, deletes)
     // with the NEWEST change per key winning — a multi-commit batch can
@@ -432,9 +223,8 @@ private[graft] object FormatWriter {
     // would resurrect or lose rows depending on order). Within one source
     // commit a key appears at most once (the feed's own delete-wins
     // dedupe), so ordering by _change_commit_ts is total per key.
-    val cdcSplit: Option[(DataFrame, DataFrame)] =
-      if (op != "cdc") None
-      else {
+    val (ups, dels): (Option[DataFrame], Option[DataFrame]) =
+      if (op == "cdc") {
         val ct = graft.read.ChangeFeed.ChangeType
         val cc = graft.read.ChangeFeed.ChangeCommitTs
         require(df.columns.contains(ct) && df.columns.contains(cc),
@@ -447,71 +237,33 @@ private[graft] object FormatWriter {
         val latest = df
           .withColumn("__cdc_rn", row_number().over(w))
           .filter(col("__cdc_rn") === 1).drop("__cdc_rn")
-        Some((latest.filter(col(ct) =!= "delete").drop(ct, cc),
-          latest.filter(col(ct) === "delete").drop(ct, cc)))
-      }
-    val sc = statsCols(parameters, timeline)
-    val bc = bloomCols(parameters, timeline)
-    val bb = bloomBits(parameters, timeline)
-    val pc = precombineCol(parameters, timeline)
-    val dc = deltaCounters(parameters, timeline)
-    val createExtra = extra + (BucketsKey -> nb.toString) +
-      (TypeKey -> tpe) + (KeyColKey -> key) + (PartColKey -> part) ++
-      (if (sc.nonEmpty) Map(StatsColsKey -> sc.mkString(",")) else Map.empty) ++
-      (if (bc.nonEmpty) Map(BloomColsKey -> bc.mkString(","),
-        BloomBitsKey -> bb.toString) else Map.empty) ++
-      pc.map(PrecombineKey -> _) ++
-      (if (dc != "exact") Map(DeltaCountersKey -> dc) else Map.empty)
+        (Some(latest.filter(col(ct) =!= "delete").drop(ct, cc)),
+          Some(latest.filter(col(ct) === "delete").drop(ct, cc)))
+      } else if (op == "delete") (None, Some(df))
+      else (Some(df), None)
+    val ts = parameters.getOrElse("ts", nextTs(timeline))
     // unreserve on every exit: a completed commit already cleared its
     // marker (no-op there); a no-op write (empty micro-batch) or a failed/
     // conflicted attempt releases its ts instead of orphaning the marker
     try {
-      if (tpe == "mor") {
-        // MOR needs no writer-side ordering: deltas append as written and
-        // the snapshot merge resolves by the recorded ordering column
-        val w = new MorWriter(spark, basePath, nb, statsCols = sc,
-          bloomCols = bc, bloomBits = bb,
-          exactCounters = dc == "exact")
-        if (noData) cdcSplit match {
-          // bootstrapping a mirror: deletes of keys that never existed
-          // are no-ops — only the net-surviving rows insert
-          case Some((ups, _)) =>
-            w.insert(ups, col(key), col(part), ts, extra = createExtra)
-          case None =>
-            w.insert(df, col(key), col(part), ts, extra = createExtra)
-        } else {
-          cdcSplit match {
-            case Some((ups, dels)) => // one delta commit for both effects
-              w.upsertDelta(Some(ups), Some(dels), col(key), col(part), ts,
-                extra = extra)
-            case None if op == "delete" => // delete markers, no rewrite
-              w.delete(df, col(key), col(part), ts, extra = extra)
-            case None =>
-              w.upsert(df, col(key), col(part), ts, extra = extra)
-          }
-          parameters.get("compactEvery").map(_.toInt).foreach { n =>
-            require(n >= 1, "compactEvery must be >= 1")
-            val cts = nextTs(w.timeline)
-            try w.compactIf(cts, minDeltas = n)
-            finally w.timeline.unreserve(cts) // no dirty groups → no commit
-          }
-        }
-      } else {
-        val w = new CowWriter(spark, basePath, nb, statsCols = sc,
-          bloomCols = bc, bloomBits = bb, precombine = pc)
-        if (noData) cdcSplit match {
-          case Some((ups, _)) =>
-            w.insert(ups, col(key), col(part), ts, extra = createExtra)
-          case None =>
-            w.insert(df, col(key), col(part), ts, extra = createExtra)
-        } else cdcSplit match {
-          case Some((ups, dels)) => // one commit for both effects
-            w.commit(Some(ups), Some(dels), col(key), col(part), ts,
-              extra = extra)
-          case None if op == "delete" =>
-            w.delete(df, col(key), col(part), ts, extra = extra)
-          case None =>
-            w.upsert(df, col(key), col(part), ts, extra = extra)
+      val w = c.writer(spark, basePath, timeline)
+      // bootstrapping (a cdc mirror too: deletes of keys that never
+      // existed are no-ops — only the net-surviving rows insert)
+      if (noData) w.insert(ups.get, col(key), col(part), ts,
+        extra = extra ++ c.creationExtra)
+      else {
+        // one commit for both effects: COW rewrites survivors, MOR appends
+        // upserts and delete markers as one delta
+        w.commit(ups, dels, col(key), col(part), ts, extra)
+        w match {
+          case m: MorWriter =>
+            parameters.get("compactEvery").map(_.toInt).foreach { n =>
+              require(n >= 1, "compactEvery must be >= 1")
+              val cts = nextTs(timeline)
+              try m.compactIf(cts, minDeltas = n)
+              finally timeline.unreserve(cts) // no dirty groups → no commit
+            }
+          case _ =>
         }
       }
     } finally timeline.unreserve(ts)
@@ -593,7 +345,7 @@ private[graft] final class GraftStreamSink(spark: SparkSession,
     // delta path no-ops after its write job finds no groups; the COW path
     // refuses the empty commit, caught here. Either way no commit lands, so
     // a replayed empty batch skips again.
-    try FormatWriter.append(spark, basePath, parameters, batch,
+    try FormatWriter.appendTo(spark, basePath, timeline, parameters, batch,
       extra = Map(FormatWriter.BatchIdKey -> batchId.toString) ++
         qid.map(FormatWriter.QueryIdKey -> _))
     catch {

@@ -2,94 +2,58 @@ package graft.write
 
 import graft.format._
 import graft.read.SnapshotReader
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Native Merge-On-Read table writer (the BASELINE.json north-star approach:
-  * "Spark + Hudi MergeOnRead reader").
+/** Merge-On-Read table writer (the BASELINE.json north-star approach:
+  * "Spark + Hudi MergeOnRead reader"): an upsert/delete commit APPENDS delta
+  * files `<fileId>_<ts>.delta.parquet` (timeline action `deltacommit`)
+  * carrying upserted rows plus delete markers (`_hoodie_is_deleted = true`)
+  * — no file-group rewrite. Snapshot reads merge base + deltas per file
+  * group (see [[graft.read.SnapshotReader]]); `compact()` folds outstanding
+  * deltas into fresh base slices. Creation, overwrite, routing, stats,
+  * publishing and the group rewrite behind compaction are the shared
+  * [[TableWriter]] core; callers that resolve a table's [[WriteContract]]
+  * get this writer from [[WriteContract.writer]].
   *
-  * Layout: base files `<fileId>_<ts>.parquet` written by `insert`/`compact`
-  * (timeline action `commit`), delta files `<fileId>_<ts>.delta.parquet`
-  * written by `upsertDelta` (timeline action `deltacommit`) carrying upserted
-  * rows plus delete markers (`_hoodie_is_deleted = true`). Snapshot reads
-  * merge base + deltas per file group (see
-  * [[graft.read.SnapshotReader]]); `compact()` folds outstanding deltas into
-  * fresh base slices.
+  * Scale notes (100 TB): a delta commit writes ONLY the changed rows, one
+  * distributed job per commit; stats (numDeletes per group) come from a
+  * map-side-combined aggregate. Compaction is itself a distributed merge
+  * job whose output goes through the same slice writer as COW commits.
   *
-  * Scale notes (100 TB): a delta commit writes ONLY the changed rows (no
-  * file-group rewrite — the point of MOR), one distributed job per commit;
-  * stats (numDeletes per group) come from a map-side-combined aggregate.
-  * Compaction is itself a distributed merge job whose output goes through
-  * the same slice writer as COW commits.
+  * @param exactCounters false = the table declared `deltaCounters=off`:
+  *                      DELETE-FREE delta commits skip the snapshot-key
+  *                      existence join (table-sized however small the
+  *                      batch) and carry no `deltaCounts` marker — see
+  *                      [[WriteContract.DeltaCountersKey]]
   */
-final class MorWriter(
+final class MorWriter private[write] (
     spark: SparkSession,
     basePath: String,
     numBuckets: Int,
-    statsCols: Seq[String] = Seq.empty,
-    bloomCols: Seq[String] = Seq.empty,
-    bloomBits: Int = graft.format.Bloom.DefaultBits,
-    // publish hook — see [[CowWriter]]'s parameter of the same name
-    publish: Option[MultiTableTxn.CommitPublisher] = None,
-    // false = the table declared deltaCounters=off: DELETE-FREE delta
-    // commits skip the snapshot-key existence join (table-sized however
-    // small the batch) and carry no DeltaCountsKey marker — see
-    // [[FormatWriter.DeltaCountersKey]]
-    exactCounters: Boolean = true) {
+    statsCols: Seq[String],
+    bloomCols: Seq[String],
+    bloomBits: Int,
+    publish: Option[MultiTableTxn.CommitPublisher],
+    exactCounters: Boolean,
+    sharedTimeline: Option[Timeline])
+    extends TableWriter(spark, basePath, numBuckets, statsCols, bloomCols,
+      bloomBits, publish, sharedTimeline) {
 
-  import CowWriter.FidCol
+  def this(
+      spark: SparkSession,
+      basePath: String,
+      numBuckets: Int,
+      statsCols: Seq[String] = Seq.empty,
+      bloomCols: Seq[String] = Seq.empty,
+      bloomBits: Int = graft.format.Bloom.DefaultBits,
+      // see [[TableWriter]]'s parameter of the same name
+      publish: Option[MultiTableTxn.CommitPublisher] = None,
+      exactCounters: Boolean = true) =
+    this(spark, basePath, numBuckets, statsCols, bloomCols, bloomBits,
+      publish, exactCounters, None)
 
-  private val conf = spark.sessionState.newHadoopConf()
-  private val fs: FileSystem = new Path(basePath).getFileSystem(conf)
-  val timeline: Timeline = Timeline(conf, basePath)
-
-  private def fileIdCol: Column =
-    concat(col(MetaCols.PartitionPath), lit("-"),
-      pmod(xxhash64(col(MetaCols.RecordKey)), lit(numBuckets)).cast("string"))
-
-  /** Same contract as CowWriter.withMeta: meta columns on the input are
-    * re-stamped, never duplicated into the payload (SQL DML inputs). */
-  private def withMeta(df: DataFrame, keyCol: Column, partCol: Column,
-      ts: String): DataFrame = {
-    val payloadCols = df.columns.toSeq.filterNot(MetaCols.all.contains)
-    df.withColumn(MetaCols.RecordKey, keyCol.cast("string"))
-      .withColumn(MetaCols.PartitionPath, partCol.cast("string"))
-      .withColumn(MetaCols.CommitTime, lit(ts))
-      .withColumn(MetaCols.CommitSeqno,
-        concat(lit(ts), lit("_"), xxhash64(col(MetaCols.RecordKey)).cast("string")))
-      .withColumn(FidCol, fileIdCol)
-      .withColumn(MetaCols.FileName,
-        concat(col(FidCol), lit("_"), lit(ts), lit(".parquet")))
-      .select((MetaCols.all.map(col) ++ payloadCols.map(col) :+ col(FidCol)): _*)
-  }
-
-  /** First commit: bulk insert as base file slices (same as COW insert).
-    * `extra` lands in the commit's extraMetadata (format-writer/sink use). */
-  def insert(df: DataFrame, keyCol: Column, partCol: Column, ts: String,
-      extra: Map[String, String] = Map.empty): Unit = {
-    // a catalog CREATE TABLE records an EMPTY creation commit — the table
-    // may carry schema-only commits, just no data slices yet
-    require(timeline.latestSlices(None).isEmpty,
-      s"insert() creates a table's data; $basePath already has data commits")
-    val data = withMeta(df, keyCol, partCol, ts)
-    val written = SliceFiles.write(fs, basePath, data, ts,
-      (fid, t) => s"${fid}_$t.parquet",
-      statsCols = MetaCols.RecordKey +: statsCols,
-      bloomCols = bloomCols, bloomBits = bloomBits)
-    val stats = written.toSeq.map { case ((part, fid), w) =>
-      part -> WriteStat(fid, Some(w.relPath), prevCommit = None,
-        numWrites = w.rows, numDeletes = 0, numUpdateWrites = 0,
-        numInserts = w.rows, colStats = w.colStats,
-        sizeBytes = Some(w.sizeBytes))
-    }
-    saveCommit(ts, stats, totalDeleted = 0, op = "INSERT",
-      action = Instant.CommitAction, schema = data.drop(FidCol).schema,
-      extra = Map(FormatWriter.BucketsKey -> numBuckets.toString) ++
-        FormatWriter.identityExtra(keyCol, partCol) ++ extra,
-      readPoint = timeline.completedInstants().lastOption.map(_.ts),
-      conflictOnAny = true)
-  }
+  import TableWriter.FidCol
 
   /** MOR delta commit: append upserts + delete markers as delta files —
     * no base-file rewrite.
@@ -114,10 +78,7 @@ final class MorWriter(
       .getOrElse(throw new IllegalArgumentException(
         "empty delta commit: no updates and no deletes"))
 
-    val written = SliceFiles.write(fs, basePath, deltaRows, ts,
-      (fid, t) => s"${fid}_$t.delta.parquet",
-      statsCols = MetaCols.RecordKey +: statsCols,
-      bloomCols = bloomCols, bloomBits = bloomBits)
+    val written = writeSlices(deltaRows, ts, suffix = ".delta.parquet")
     // A present-but-EMPTY frame (e.g. an empty streaming micro-batch) wrote
     // nothing: no-op, no empty deltacommit on the timeline — and the op
     // counters below are never computed. This is what lets the streaming
@@ -165,7 +126,7 @@ final class MorWriter(
         val withEx =
           if (slices.nonEmpty) {
             val exKeys = SnapshotReader
-              .merge(spark, basePath, slices.values.toSeq,
+              .merge(spark, basePath, slices.values.toSeq, Some(timeline),
                 keyFilter =
                   Some(t.select(col(MetaCols.RecordKey)).distinct()))
               .select(col(MetaCols.RecordKey))
@@ -191,17 +152,10 @@ final class MorWriter(
     val updatedPerFid = opCounts.collect { case ((f, "u"), n) => f -> n }
     val insertedPerFid = opCounts.collect { case ((f, "i"), n) => f -> n }
 
-    val stats = written.toSeq.map { case ((part, fid), w) =>
-      part -> WriteStat(fid, Some(w.relPath),
-        prevCommit = slices.get(fid).map(_.commitTs),
-        numWrites = w.rows,
-        numDeletes = deletedPerFid.getOrElse(fid, 0L),
-        numUpdateWrites = updatedPerFid.getOrElse(fid, 0L),
-        numInserts = insertedPerFid.getOrElse(fid, 0L),
-        colStats = w.colStats,
-        sizeBytes = Some(w.sizeBytes))
-    }
-    saveCommit(ts, stats, totalDeleted = deletedPerFid.values.sum,
+    saveCommit(ts, groupStats(written, slices, deleted = deletedPerFid,
+        updated = updatedPerFid,
+        inserted = (fid, _) => insertedPerFid.getOrElse(fid, 0L)),
+      totalDeleted = deletedPerFid.values.sum,
       op = "UPSERT_DELTA", action = Instant.DeltaCommitAction,
       schema = deltaRows.drop(FidCol).schema,
       extra =
@@ -210,13 +164,11 @@ final class MorWriter(
       readPoint = readPoint)
   }
 
-  def upsert(updates: DataFrame, keyCol: Column, partCol: Column, ts: String,
-      extra: Map[String, String] = Map.empty): Unit =
-    upsertDelta(Some(updates), None, keyCol, partCol, ts, extra)
-
-  def delete(rows: DataFrame, keyCol: Column, partCol: Column, ts: String,
-      extra: Map[String, String] = Map.empty): Unit =
-    upsertDelta(None, Some(rows), keyCol, partCol, ts, extra)
+  /** A MOR commit is a delta commit ([[upsertDelta]]). */
+  override def commit(updates: Option[DataFrame], deletes: Option[DataFrame],
+      keyCol: Column, partCol: Column, ts: String,
+      extra: Map[String, String]): Unit =
+    upsertDelta(updates, deletes, keyCol, partCol, ts, extra)
 
   /** Compaction: fold every file group with outstanding deltas into a fresh
     * base slice at `ts` (timeline action `commit`, like Hudi compaction).
@@ -234,62 +186,8 @@ final class MorWriter(
 
   private def compactWhere(ts: String,
       shouldCompact: FileSlice => Boolean): Unit = {
-    // OCC read point: a delta landing in a group AFTER this merge planned
-    // would be silently swallowed by the compacted slice — group-overlap
-    // conflict detection makes the compaction lose instead
-    val readPoint = timeline.completedInstants().lastOption.map(_.ts)
-    val slices = timeline.latestSlices(None)
-    val dirty = slices.values.filter(shouldCompact).toSeq
-    if (dirty.isEmpty) return
-    val merged = SnapshotReader.merge(spark, basePath, dirty)
-      .withColumn(FidCol, fileIdCol)
-      .withColumn(MetaCols.FileName,
-        concat(col(FidCol), lit("_"), lit(ts), lit(".parquet")))
-    val written = SliceFiles.write(fs, basePath, merged, ts,
-      (fid, t) => s"${fid}_$t.parquet",
-      statsCols = MetaCols.RecordKey +: statsCols,
-      bloomCols = bloomCols, bloomBits = bloomBits)
-    // A group whose rows were all deleted writes no file: record a 0-row
-    // stat so the slice is still superseded on the timeline.
-    val writtenFids = written.keys.map(_._2).toSet
-    val emptied = dirty.filterNot(s => writtenFids.contains(s.fileId))
-    val stats = written.toSeq.map { case ((part, fid), w) =>
-      part -> WriteStat(fid, Some(w.relPath),
-        prevCommit = slices.get(fid).map(_.commitTs),
-        numWrites = w.rows, numDeletes = 0, numUpdateWrites = 0,
-        numInserts = 0, colStats = w.colStats,
-        sizeBytes = Some(w.sizeBytes))
-    } ++ emptied.map { s =>
-      s.partitionPath -> WriteStat(s.fileId, None,
-        prevCommit = Some(s.commitTs),
-        numWrites = 0, numDeletes = 0, numUpdateWrites = 0, numInserts = 0)
-    }
-    saveCommit(ts, stats, totalDeleted = 0, op = "COMPACT",
-      action = Instant.CommitAction, schema = merged.drop(FidCol).schema,
-      readPoint = readPoint)
-  }
-
-  private def saveCommit(ts: String, stats: Iterable[(String, WriteStat)],
-      totalDeleted: Long, op: String, action: String,
-      schema: org.apache.spark.sql.types.StructType,
-      extra: Map[String, String] = Map.empty,
-      readPoint: Option[String] = None,
-      conflictOnAny: Boolean = false): Unit = {
-    val byPart = stats.groupBy(_._1).view
-      .mapValues(_.map(_._2).toSeq.sortBy(_.fileId)).toMap
-    val meta = CommitMetadata(
-      partitionToWriteStats = byPart,
-      operationType = op,
-      totalRecordsDeleted = totalDeleted,
-      totalRecordsWritten = stats.map(_._2.numWrites).sum,
-      schemaJson = Some(MetaCols.canonicalSchema(
-        MorWriter.monotonicSchema(timeline, action, schema)).json),
-      extra = extra)
-    publish match {
-      case Some(p) => p(ts, meta, action, readPoint, conflictOnAny)
-      case None => timeline.saveCommitOcc(ts, meta, action,
-        readPoint = readPoint, conflictOnAny = conflictOnAny)
-    }
+    val dirty = timeline.latestSlices(None).values.filter(shouldCompact).toSeq
+    if (dirty.nonEmpty) rewriteGroups(ts, dirty, "COMPACT")
   }
 }
 
@@ -302,55 +200,20 @@ object MorWriter {
     * schedule (post-ingest, off the write path). Identity on table
     * content; no-op (no commit) when nothing qualifies. */
   def compactTable(spark: SparkSession, path: String,
-      minDeltas: Int = 1): Unit = {
-    val tl = Timeline(spark.sessionState.newHadoopConf(), path)
-    val nb = graft.read.SnapshotReader.recordedBuckets(tl, None)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$path records no bucket count; compaction preserves the " +
-          "key->group routing and needs it recorded"))
-    val sc = FormatWriter.recordedExtra(tl, FormatWriter.StatsColsKey)
-      .map(_.split(",").toSeq).getOrElse(Seq.empty)
-    val bc = FormatWriter.recordedExtra(tl, FormatWriter.BloomColsKey)
-      .map(_.split(",").toSeq).getOrElse(Seq.empty)
-    val bb = FormatWriter.recordedExtra(tl, FormatWriter.BloomBitsKey)
-      .map(_.toInt).getOrElse(graft.format.Bloom.DefaultBits)
-    val w = new MorWriter(spark, path, nb, statsCols = sc,
-      bloomCols = bc, bloomBits = bb)
-    val ts = FormatWriter.nextTs(w.timeline)
-    try w.compactIf(ts, minDeltas = minDeltas)
-    finally w.timeline.unreserve(ts) // no dirty groups -> no commit
-  }
+      minDeltas: Int = 1): Unit = { compactTableAt(spark, path, minDeltas); () }
 
-  /** Schema recorded with a commit: the UNION of the newest previously
-    * recorded schema (ANY action) and the new frame's schema — new fields'
-    * order first, previous-only fields appended, and the MOR delete marker
-    * kept only on delta records (base files never carry it, and leaking it
-    * into a base-commit record would surface a phantom null column on
-    * snapshot reads).
-    *
-    * Unioning across actions makes the newest recorded schema a superset
-    * of EVERY live file's schema by induction — including the first
-    * deltacommit after an insert (a same-action union would let a narrow
-    * first delta record a schema missing base columns, and the snapshot's
-    * merged branch would project them away) and compaction commits on
-    * partially-compacted tables. Readers can therefore resolve the table
-    * schema from the single newest record. Same-name fields keep the NEW
-    * writer's type — diverging types are outside the add-only contract. */
-  private[graft] def monotonicSchema(timeline: Timeline, action: String,
-      schema: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType = {
-    val unioned = timeline.latestSchemaJson(None) match {
-      case None => schema
-      case Some(prevJson) =>
-        val prev = org.apache.spark.sql.types.DataType.fromJson(prevJson)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-        val newNames = schema.fieldNames.toSet
-        org.apache.spark.sql.types.StructType(
-          schema.fields ++ prev.fields.filterNot(f => newNames(f.name)))
-    }
-    if (action == Instant.CommitAction)
-      org.apache.spark.sql.types.StructType(
-        unioned.filterNot(_.name == graft.read.SnapshotReader.IsDeleted))
-    else unioned
+  /** [[compactTable]] reporting the commit ts it minted and whether a
+    * compaction commit landed there. */
+  private[graft] def compactTableAt(spark: SparkSession, path: String,
+      minDeltas: Int): (String, Boolean) = {
+    val tl = Timeline(spark.sessionState.newHadoopConf(), path)
+    val c = WriteContract.resolve(tl, Map.empty)
+    val w = new MorWriter(spark, path, c.buckets, c.statsCols, c.bloomCols,
+      c.bloomBits, None, exactCounters = true, Some(tl))
+    val ts = FormatWriter.nextTs(tl)
+    try {
+      w.compactIf(ts, minDeltas = minDeltas)
+      (ts, tl.instantAt(ts).nonEmpty)
+    } finally tl.unreserve(ts) // no dirty groups -> no commit
   }
 }

@@ -12,10 +12,10 @@ import org.apache.spark.sql.functions.col
   *
   * Protocol — standard OCC with the expensive part outside any lock:
   *
-  *  1. STAGE (lock-free): per table, resolve the write contract from the
-  *     table's own commit metadata (key/partition/buckets/type/precombine/
-  *     index columns — same resolution as `FormatWriter`), reserve a commit
-  *     ts, and run the writer's FULL distributed data jobs with a capturing
+  *  1. STAGE (lock-free): per table, resolve the [[WriteContract]] from the
+  *     table's own commit metadata (nothing is declared — a transaction
+  *     writes existing tables), reserve a commit ts, and run the
+  *     contract's writer's FULL distributed data jobs with a capturing
   *     publish hook: data files land on storage, the completed
   *     `CommitMetadata` is captured, nothing becomes visible (a graft data
   *     file is dead weight until a commit JSON references it).
@@ -97,43 +97,16 @@ object MultiTableTxn {
         require(tl.completedInstants().nonEmpty,
           s"transaction target ${w.basePath} does not exist (transactions " +
             "write EXISTING tables; create tables outside the txn)")
-        def recorded(k: String): Option[String] =
-          FormatWriter.recordedExtra(tl, k)
-        val key = recorded(FormatWriter.KeyColKey).getOrElse(
-          throw new IllegalArgumentException(
-            s"${w.basePath} records no key column; transactions need " +
-              "metadata-resolvable table identity"))
-        val part = recorded(FormatWriter.PartColKey).getOrElse(
-          throw new IllegalArgumentException(
-            s"${w.basePath} records no partition column"))
-        val nb = recorded(FormatWriter.BucketsKey).map(_.toInt).getOrElse(
-          throw new IllegalArgumentException(
-            s"${w.basePath} records no bucket count"))
-        val sc = recorded(FormatWriter.StatsColsKey)
-          .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-          .getOrElse(Seq.empty)
-        val bc = recorded(FormatWriter.BloomColsKey)
-          .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-          .getOrElse(Seq.empty)
-        val bb = recorded(FormatWriter.BloomBitsKey).map(_.toInt)
-          .getOrElse(graft.format.Bloom.DefaultBits)
-        val pc = recorded(FormatWriter.PrecombineKey)
-        val tpe = recorded(FormatWriter.TypeKey).getOrElse("cow")
+        // one listing of tl serves the contract, the ts mint and the
+        // writer's plan; the conflict check re-lists under the lock
+        val c = WriteContract.resolve(tl, Map.empty)
+        val (key, part) = (c.keyCol, c.partitionCol)
         val ts = FormatWriter.nextTs(tl)
         reserved += (tl -> ts)
         val capture: CommitPublisher = (cts, meta, action, rp, coa) =>
           staged += Staged(tl, w.basePath, cts, meta, action, rp, coa)
-        if (tpe == "mor")
-          new MorWriter(spark, w.basePath, nb, statsCols = sc,
-            bloomCols = bc, bloomBits = bb, publish = Some(capture),
-            exactCounters = !recorded(FormatWriter.DeltaCountersKey)
-              .contains("off"))
-            .upsertDelta(w.updates, w.deletes, col(key), col(part), ts)
-        else
-          new CowWriter(spark, w.basePath, nb, statsCols = sc,
-            bloomCols = bc, bloomBits = bb, precombine = pc,
-            publish = Some(capture))
-            .commit(w.updates, w.deletes, col(key), col(part), ts)
+        c.writer(spark, w.basePath, tl, Some(capture))
+          .commit(w.updates, w.deletes, col(key), col(part), ts)
         // a no-op member never invoked the publish hook (the MOR delta
         // path returns silently on empty frames; COW throws): refuse the
         // WHOLE transaction loudly before anything publishes, instead of
@@ -264,17 +237,23 @@ object MultiTableTxn {
         if (!fs.exists(dir)) Seq.empty
         else fs.listStatus(dir).toSeq
           .filter(_.getPath.getName.endsWith(".txn"))
-          .map { st =>
-            val in = fs.open(st.getPath)
-            val body = try new String(
-              org.apache.commons.io.IOUtils.toByteArray(in),
-              java.nio.charset.StandardCharsets.UTF_8)
-            finally in.close()
-            val members = body.linesIterator.filter(_.nonEmpty).map { l =>
-              val Array(mp, ts, act) = l.split('\t')
-              Member(mp, ts, act)
-            }.toSeq
-            st.getPath.getName.stripSuffix(".txn") -> members
+          .flatMap { st =>
+            // a journal cleared between the listing and this read belongs
+            // to a publish that finished meanwhile: it is no longer open
+            val body = try {
+              val in = fs.open(st.getPath)
+              try Some(new String(
+                org.apache.commons.io.IOUtils.toByteArray(in),
+                java.nio.charset.StandardCharsets.UTF_8))
+              finally in.close()
+            } catch { case _: java.io.FileNotFoundException => None }
+            body.map { b =>
+              val members = b.linesIterator.filter(_.nonEmpty).map { l =>
+                val Array(mp, ts, act) = l.split('\t')
+                Member(mp, ts, act)
+              }.toSeq
+              st.getPath.getName.stripSuffix(".txn") -> members
+            }
           }
       }.distinctBy(_._1)
     // One observation BRACKETS the instant listings with two journal

@@ -21,7 +21,7 @@ import org.apache.spark.sql.types._
   * no extra job.
   */
 private[write] object SliceFiles {
-  import CowWriter.FidCol
+  import TableWriter.FidCol
   private val PartDirCol = "__graft_part"
 
   /** Per-written-file result: relative path, row count, column stats,

@@ -271,91 +271,35 @@ object TableMaintenance {
       newBuckets: Int): Seq[String] = {
     require(newBuckets >= 1, "buckets must be >= 1")
     layoutCommit(spark, basePath, ts, Seq.empty, _ => Seq.empty,
-      buckets = Some(newBuckets),
-      extraMeta = Map(FormatWriter.BucketsKey -> newBuckets.toString))
+      buckets = Some(newBuckets))
   }
 
-  /** Shared body of the layout rewrites: plan the current snapshot, keep
-    * bucket routing (fileIds) intact — or re-route by `buckets` when a
-    * rescale overrides it — rewrite every live group sorted within each
-    * file by `sortBy(merged)`, land ONE `CLUSTER` commit carrying
-    * `extraMeta`. `statCols` are validated as table columns and recorded
-    * in the file-stats index alongside the record key and the table's
-    * declared hot columns. */
+  /** Shared body of the layout rewrites: rewrite every live group from its
+    * merged current state ([[TableWriter.rewriteGroups]], the routine MOR
+    * compaction uses) sorted within each file by `sortBy(merged)`, keeping
+    * the table's bucket routing — or re-routing by `buckets`, a rescale
+    * re-recorded in the commit — and land ONE `CLUSTER` commit. `statCols`
+    * are validated as table columns and recorded in the file-stats index
+    * alongside the record key and the table's declared hot columns. */
   private def layoutCommit(spark: SparkSession, basePath: String,
       ts: String, statCols: Seq[String],
       sortBy: org.apache.spark.sql.DataFrame =>
         Seq[org.apache.spark.sql.Column],
-      buckets: Option[Int] = None,
-      extraMeta: Map[String, String] = Map.empty): Seq[String] = {
-    import graft.format._
-    import org.apache.spark.sql.functions._
+      buckets: Option[Int] = None): Seq[String] = {
     val tl = Timeline(spark.sessionState.newHadoopConf(), basePath)
-    val readPoint = tl.completedInstants().lastOption.map(_.ts)
-    val n = buckets.orElse(
-      graft.read.SnapshotReader.recordedBuckets(tl, None)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$basePath records no bucket count; a layout rewrite preserves " +
-          "the key→group routing and needs it recorded (re-create the " +
-          "table with a bucket-recording writer, or rebucket)"))
+    val rescale = buckets.map(WriteContract.BucketsKey -> _.toString).toMap
+    val contract = WriteContract.resolve(tl, rescale,
+      recreate = buckets.nonEmpty)
     val slices = tl.latestSlices(None).values
       .filter(sl => sl.relPath.nonEmpty || sl.deltas.nonEmpty).toSeq
     require(slices.nonEmpty, s"empty table at $basePath")
-    val merged = graft.read.SnapshotReader
-      .merge(spark, basePath, slices, Some(tl))
-    statCols.foreach(c => require(merged.columns.contains(c),
-      s"layout column '$c' is not a table column"))
-    val sortExprs = sortBy(merged)
-    val data = merged
-      .withColumn(CowWriter.FidCol,
-        concat(col(MetaCols.PartitionPath), lit("-"),
-          pmod(xxhash64(col(MetaCols.RecordKey)), lit(n)).cast("string")))
-      .withColumn(MetaCols.FileName,
-        concat(col(CowWriter.FidCol), lit("_"), lit(ts), lit(".parquet")))
-    val fs = tl.fs
-    val statsCols = MetaCols.RecordKey +: (statCols ++
-      FormatWriter.recordedExtra(tl, FormatWriter.StatsColsKey)
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        .getOrElse(Seq.empty)).distinct
-    // a layout rewrite must not LOSE the bloom index: rewritten files
-    // re-record blooms for the table's declared bloom columns
-    val bloomCols = FormatWriter.recordedExtra(tl, FormatWriter.BloomColsKey)
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty)
-    val bloomBits = FormatWriter.recordedExtra(tl, FormatWriter.BloomBitsKey)
-      .map(_.toInt).getOrElse(graft.format.Bloom.DefaultBits)
-    val written = SliceFiles.write(fs, basePath, data, ts,
-      (fid, t) => s"${fid}_$t.parquet",
-      statsCols = statsCols, sortBy = sortExprs,
-      bloomCols = bloomCols, bloomBits = bloomBits)
-    val prior = slices.map(sl => sl.fileId -> sl).toMap
-    val writtenFids = written.keys.map(_._2).toSet
-    // groups whose every current row was a delete marker write no file:
-    // superseded with an empty stat, exactly like compaction
-    val emptied = slices.filterNot(sl => writtenFids.contains(sl.fileId))
-    val stats = written.toSeq.map { case ((part, fid), w) =>
-      part -> WriteStat(fid, Some(w.relPath),
-        prevCommit = prior.get(fid).map(_.commitTs),
-        numWrites = w.rows, numDeletes = 0, numUpdateWrites = 0,
-        numInserts = 0, colStats = w.colStats,
-        sizeBytes = Some(w.sizeBytes))
-    } ++ emptied.map { sl =>
-      sl.partitionPath -> WriteStat(sl.fileId, None,
-        prevCommit = Some(sl.commitTs),
-        numWrites = 0, numDeletes = 0, numUpdateWrites = 0, numInserts = 0)
-    }
-    val byPart = stats.groupBy(_._1).view
-      .mapValues(_.map(_._2).toSeq.sortBy(_.fileId)).toMap
-    tl.saveCommitOcc(ts, CommitMetadata(
-      partitionToWriteStats = byPart,
-      operationType = "CLUSTER",
-      totalRecordsDeleted = 0,
-      totalRecordsWritten = written.values.map(_.rows).sum,
-      schemaJson = Some(MetaCols.canonicalSchema(
-        data.drop(CowWriter.FidCol).schema).json),
-      extra = extraMeta),
-      readPoint = readPoint)
-    written.keys.map(_._2).toSeq.sorted
+    contract.writer(spark, basePath, tl).rewriteGroups(ts, slices, "CLUSTER",
+      sortBy = { merged =>
+        statCols.foreach(c => require(merged.columns.contains(c),
+          s"layout column '$c' is not a table column"))
+        sortBy(merged)
+      },
+      extraStats = statCols, extra = rescale)
   }
 
   /** Archive the timeline: relocate all but the newest `keepActive`

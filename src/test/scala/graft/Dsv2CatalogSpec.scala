@@ -44,6 +44,26 @@ class Dsv2CatalogSpec extends SparkSpec {
       .replace(t, "graft_window_ref")).collect().toSeq
   }
 
+  test("catalog MOR table records deltaCounters; delete-free UPDATE honours it") {
+    val t = freshTable("dc_off")
+    spark.sql(s"""CREATE TABLE $t (
+      id BIGINT, part STRING, v BIGINT) PARTITIONED BY (part)
+      TBLPROPERTIES (key 'id', buckets '2', type 'mor',
+        deltaCounters 'off')""")
+    val tl = Timeline(spark.sessionState.newHadoopConf(), s"$wh/ns/dc_off")
+    assert(tl.metadata(tl.completedInstants().head.ts).extra
+      .get(write.WriteContract.DeltaCountersKey).contains("off"))
+    spark.sql(s"INSERT INTO $t VALUES (1, 'a', 10), (2, 'b', 20), (3, 'a', 30)")
+    spark.sql(s"UPDATE $t SET v = v + 1 WHERE id <= 2")
+    tl.refresh()
+    val last = tl.completedInstants().last
+    assert(last.action == graft.format.Instant.DeltaCommitAction)
+    assert(!tl.metadata(last.ts).extra
+      .contains(write.FormatWriter.DeltaCountsKey),
+      "deltaCounters=off: a delete-free delta carries no exact-counts marker")
+    assert(spark.sql(s"SELECT sum(v) FROM $t").head().getLong(0) == 62L)
+  }
+
   test("CREATE TABLE + INSERT INTO lands upsert commits through pure DSv2") {
     val t = freshTable("t1")
     spark.sql(s"""CREATE TABLE $t (
@@ -1424,9 +1444,9 @@ class Dsv2CatalogSpec extends SparkSpec {
       } else new write.CowWriter(spark, dir, numBuckets = 4)
         .insert(data, col("id"), col("part"), "1000001")
       val tl = Timeline(spark.sessionState.newHadoopConf(), dir)
-      assert(tl.metadata("1000001").extra.get(write.FormatWriter.KeyColKey)
+      assert(tl.metadata("1000001").extra.get(write.WriteContract.KeyColKey)
         .contains("id"))
-      assert(tl.metadata("1000001").extra.get(write.FormatWriter.PartColKey)
+      assert(tl.metadata("1000001").extra.get(write.WriteContract.PartColKey)
         .contains("part"))
       val t = s"$cat.ns.$name"
       val scanName = if (mor) "GraftMorBatchScan" else "GraftBatchScan("
@@ -1469,8 +1489,8 @@ class Dsv2CatalogSpec extends SparkSpec {
       col("part"), "1000002")
     val extra = Timeline(spark.sessionState.newHadoopConf(), dir)
       .metadata("1000001").extra
-    assert(!extra.contains(write.FormatWriter.KeyColKey))
-    assert(extra.get(write.FormatWriter.PartColKey).contains("part"))
+    assert(!extra.contains(write.WriteContract.KeyColKey))
+    assert(extra.get(write.WriteContract.PartColKey).contains("part"))
     val q = spark.sql(s"SELECT id, v FROM $cat.ns.eng_expr WHERE part = 'p0'")
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("GraftV1FallbackScan") &&

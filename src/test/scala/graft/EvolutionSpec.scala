@@ -78,6 +78,30 @@ class EvolutionSpec extends SparkSpec {
     assert(snap.count() == orders.count())
   }
 
+  test("COW: a narrow upsert touching only NEW groups must not drop table columns") {
+    // every group the upsert touches is new (a new partition), so no old
+    // slice is read: the recorded schema must still be the union with the
+    // table's, or every later snapshot loses o_orderpriority
+    val dir = freshDir("orders_evo_cow_narrow_new_groups")
+    val w = new CowWriter(spark, dir, numBuckets = 2)
+    w.insert(orders, col("o_orderkey"), col("o_orderstatus"), C1)
+    val fresh = orders.limit(20)
+      .withColumn("o_orderkey", $"o_orderkey" + 10000000L)
+      .withColumn("o_orderstatus", lit("pNEW"))
+      .drop("o_orderpriority")
+    w.upsert(fresh, col("o_orderkey"), col("o_orderstatus"), C2)
+
+    val snap = SnapshotReader.read(spark, dir)
+    assert(snap.columns.contains("o_orderpriority"),
+      "table column vanished after a narrow upsert into new groups")
+    assert(snap.count() == orders.count() + 20)
+    val isNew = $"o_orderstatus" === "pNEW"
+    assert(snap.filter(!isNew && $"o_orderpriority".isNull).isEmpty,
+      "untouched rows must keep their o_orderpriority values")
+    assert(snap.filter(isNew && $"o_orderpriority".isNotNull).isEmpty,
+      "narrow-frame rows read the missing column as null")
+  }
+
   test("MOR: a NARROWER later delta must not drop an earlier delta's added column") {
     // deltacommit C2 adds o_note; deltacommit C3 upserts DIFFERENT keys with
     // the ORIGINAL (narrower) schema. All delta files resolve their schema

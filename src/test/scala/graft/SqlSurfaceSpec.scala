@@ -334,6 +334,38 @@ class SqlSurfaceSpec extends SparkSpec {
     (tbl, dir)
   }
 
+  test("SQL DML refuses catalog OPTIONS contradicting the recorded contract") {
+    // the same declaration a df.write append refuses: re-bucketing (or a
+    // MOR delta into a COW table) would strand old row versions — at
+    // buckets 2 over a 4-bucket table the UPDATE duplicated keys
+    val orders = spark.read.parquet(s"$sf0001/orders.parquet")
+    val rows = orders.count()
+    for ((opt, v) <- Seq("buckets" -> "2", "type" -> "mor")) {
+      val dir = freshDir(s"sqldml_contradict_$opt")
+      orders.write.format("graft")
+        .option("key", "o_orderkey").option("partition", "o_orderstatus")
+        .option("buckets", "4").option("ts", Fixtures.C1).save(dir)
+      val tbl = s"g_dml_contradict_$opt"
+      spark.sql(s"DROP TABLE IF EXISTS $tbl")
+      spark.sql(
+        s"CREATE TABLE $tbl USING graft OPTIONS (path '$dir', $opt '$v')")
+      try {
+        val err = intercept[Exception](spark.sql(s"UPDATE $tbl SET " +
+          "o_totalprice = o_totalprice + 1000 WHERE o_orderkey % 10 = 3"))
+        def causes(t: Throwable): Seq[Throwable] =
+          t +: Option(t.getCause).toSeq.flatMap(causes)
+        assert(causes(err).exists(e => Option(e.getMessage)
+          .exists(_.contains(s"$opt=$v contradicts"))), s"$opt: $err")
+        val snap = graft.read.SnapshotReader.read(spark, dir)
+        assert(snap.count() == rows, s"$opt: row count changed")
+        assert(snap.select("o_orderkey").distinct().count() == rows,
+          s"$opt: key count changed")
+        assert(graft.format.Timeline(spark.sessionState.newHadoopConf(), dir)
+          .completedInstants().map(_.ts) == Seq(Fixtures.C1))
+      } finally spark.sql(s"DROP TABLE $tbl")
+    }
+  }
+
   test("SQL DELETE FROM: one delete commit; delete view reconstructs the rows") {
     val (tbl, dir) = dmlTable("del")
     val orders = spark.read.parquet(s"$sf0001/orders.parquet")

@@ -3,7 +3,7 @@ package graft.read
 import graft.{SparkSpec, TestSpark}
 import graft.deleteview.DeleteView
 import graft.format.{CommitMetadata, Instant, MetaCols, Timeline, WriteStat}
-import graft.write.{FormatWriter, MorWriter}
+import graft.write.{MorWriter, WriteContract}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -156,7 +156,7 @@ class MorMergeSpec extends SparkSpec {
       var evolved = false
       w.insert(frame(1L to 24L, extraCol = false), col("id"), col("part"),
         "1000000", extra =
-          if (precombine) Map(FormatWriter.PrecombineKey -> "pc")
+          if (precombine) Map(WriteContract.PrecombineKey -> "pc")
           else Map.empty)
       var nextId = 25L
       for (step <- 1 to 7) {

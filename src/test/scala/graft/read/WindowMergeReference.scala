@@ -58,7 +58,7 @@ object WindowMergeReference {
         else Seq.empty) :+ deltas)
         .reduce(_.unionByName(_, allowMissingColumns = true))
       val pcCol = tl.recordedExtraAsOf(
-        graft.write.FormatWriter.PrecombineKey, asOf)
+        graft.write.WriteContract.PrecombineKey, asOf)
         .filter(all.columns.contains)
       val kw = Window.partitionBy(MetaCols.RecordKey)
       val resolved = pcCol match {
