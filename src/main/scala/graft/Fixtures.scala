@@ -524,12 +524,8 @@ object Fixtures {
       def statsDeclared = {
         val tl = graft.format.Timeline(
           spark.sessionState.newHadoopConf(), dir)
-        // NOTE: Option.contains is WHOLE-VALUE equality — the recorded
-        // value is a comma list, so membership needs the split (a bare
-        // .contains silently rebuilt the fixture on every call)
-        graft.write.WriteContract.recorded(tl)
-          .get(graft.write.WriteContract.StatsColsKey)
-          .exists(_.split(',').map(_.trim).contains("o_price_dec")) &&
+        graft.write.WriteContract.resolve(tl, Map.empty).statsCols
+          .contains("o_price_dec") &&
           tl.completedInstants().lastOption.exists(i =>
             tl.metadata(i.ts).allStats.forall { case (_, st) =>
               st.path.isEmpty ||

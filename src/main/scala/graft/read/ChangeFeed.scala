@@ -131,8 +131,7 @@ object ChangeFeed {
     // state's ordering value below.
     val pcOpt =
       if (i.action == Instant.DeltaCommitAction)
-        graft.write.WriteContract.recorded(tl, Some(i.ts))
-          .get(graft.write.WriteContract.PrecombineKey)
+        graft.write.WriteContract.precombine(tl, Some(i.ts))
           .filter(raw.columns.contains)
       else None
 

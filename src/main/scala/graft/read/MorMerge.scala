@@ -439,8 +439,8 @@ object MorMerge {
     val out = StructType(delta.filterNot(_.name == MetaCols.IsDeleted)
       .map(_.copy(nullable = true)))
     val allCols = (base.toSeq.flatMap(_.fieldNames) ++ delta.fieldNames).toSet
-    val pc = graft.write.WriteContract.recorded(tl, asOf)
-      .get(graft.write.WriteContract.PrecombineKey).filter(allCols.contains)
+    val pc = graft.write.WriteContract.precombine(tl, asOf)
+      .filter(allCols.contains)
     val sizes = recordedSizes(tl, slices)
     val groups = slices.map(groupFiles(basePath, _, sizes,
       spark.sessionState.newHadoopConf()))

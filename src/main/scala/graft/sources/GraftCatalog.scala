@@ -1356,8 +1356,8 @@ private final class GraftScanBuilder(table: GraftV2Table,
     // frame carries the column); require it on BOTH populated sides
     val allCols = (baseSchema.toSeq ++ deltaSchema.toSeq)
       .flatMap(_.fieldNames).toSet
-    val pc = WriteContract.recorded(tl, table.asOfOpt)
-      .get(WriteContract.PrecombineKey).filter(allCols.contains)
+    val pc = WriteContract.precombine(tl, table.asOfOpt)
+      .filter(allCols.contains)
     def fieldIn(s: StructType, n: String) =
       s.fields.find(f => resolver(f.name, n))
     // every column the merge reads must exist on each populated side AND

@@ -408,15 +408,12 @@ private[graft] object GraftDml {
       notMatchedBySourceActions = m.notMatchedBySourceActions.map(expand))
   }
 
-  /** The table's [[WriteContract]] for DML, with the catalog table's
-    * OPTIONS as the declared side: an option that contradicts the recorded
-    * contract refuses exactly like the same `df.write` option would. */
-  def contract(ct: CatalogTable, tl: Timeline): WriteContract =
-    WriteContract.resolve(tl, ct.storage.properties)
-
   /** One DML commit: updates/deletes are meta-column-carrying frames rooted
     * at the table's own snapshot relation; identity re-derives from
-    * `_hoodie_record_key`/`_hoodie_partition_path`. The contract's writer
+    * `_hoodie_record_key`/`_hoodie_partition_path`. The commit follows the
+    * table's [[WriteContract]] with the catalog table's OPTIONS as the
+    * declared side, so an option that contradicts the recorded contract
+    * refuses exactly like the same `df.write` option would. Its writer
     * keeps the table's full write contract — COW rewrites the touched
     * groups resolving upserts by the recorded ordering column (a stale SQL
     * UPDATE/MERGE loses exactly like a stale batch upsert), MOR appends a
@@ -425,7 +422,8 @@ private[graft] object GraftDml {
   def commitOnce(spark: SparkSession, basePath: String, ct: CatalogTable,
       updates: Option[DataFrame], deletes: Option[DataFrame]): Unit = {
     val tl = Timeline(spark.sessionState.newHadoopConf(), basePath)
-    val w = contract(ct, tl).writer(spark, basePath, tl)
+    val w = WriteContract.resolve(tl, ct.storage.properties)
+      .writer(spark, basePath, tl)
     val ts = FormatWriter.nextTs(tl)
     try w.commit(updates, deletes, col(MetaCols.RecordKey),
       col(MetaCols.PartitionPath), ts)
@@ -586,8 +584,9 @@ case class GraftMergeCommand(basePath: String, ct: CatalogTable,
     }
 
     if (merge.notMatchedActions.nonEmpty) {
-      val c = contract(ct,
-        Timeline(spark.sessionState.newHadoopConf(), basePath))
+      val c = WriteContract.resolve(
+        Timeline(spark.sessionState.newHadoopConf(), basePath),
+        ct.storage.properties)
       val keyName = c.key.getOrElse(throw new IllegalArgumentException(
         "MERGE INSERT needs the table's record-key column name: declare " +
           "OPTIONS (key '...', partition '...') or create the table " +

@@ -237,23 +237,24 @@ object MultiTableTxn {
         if (!fs.exists(dir)) Seq.empty
         else fs.listStatus(dir).toSeq
           .filter(_.getPath.getName.endsWith(".txn"))
-          .flatMap { st =>
-            // a journal cleared between the listing and this read belongs
-            // to a publish that finished meanwhile: it is no longer open
-            val body = try {
+          .map { st =>
+            // a journal cleared between the listing and this read keeps
+            // its id with no members: the id still makes the two scans of
+            // an observation differ when only one of them listed it (a
+            // publish that finished while the instants were listed), and
+            // with no members it caps no pin
+            val members = try {
               val in = fs.open(st.getPath)
-              try Some(new String(
+              val body = try new String(
                 org.apache.commons.io.IOUtils.toByteArray(in),
-                java.nio.charset.StandardCharsets.UTF_8))
+                java.nio.charset.StandardCharsets.UTF_8)
               finally in.close()
-            } catch { case _: java.io.FileNotFoundException => None }
-            body.map { b =>
-              val members = b.linesIterator.filter(_.nonEmpty).map { l =>
+              body.linesIterator.filter(_.nonEmpty).map { l =>
                 val Array(mp, ts, act) = l.split('\t')
                 Member(mp, ts, act)
               }.toSeq
-              st.getPath.getName.stripSuffix(".txn") -> members
-            }
+            } catch { case _: java.io.FileNotFoundException => Seq.empty }
+            st.getPath.getName.stripSuffix(".txn") -> members
           }
       }.distinctBy(_._1)
     // One observation BRACKETS the instant listings with two journal

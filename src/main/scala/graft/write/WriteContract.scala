@@ -138,22 +138,18 @@ object WriteContract {
   private def columns(v: String): Seq[String] =
     v.split(",").map(_.trim).filter(_.nonEmpty).toSeq
 
-  /** The newest recorded value of every contract key at or before `asOf`:
-    * the properties are recorded at creation and at every overwrite, so
-    * the newest carrier is the era every slice of that snapshot was
-    * written under. One newest-first walk over the timeline's memoized
-    * commit decodes, stopping once every key has been seen. */
+  /** The newest recorded value of every contract key at or before `asOf`
+    * ([[Timeline.recordedExtraAsOf]] per key): the properties are recorded
+    * at creation and at every overwrite, so the newest carrier is the era
+    * every slice of that snapshot was written under. */
   def recorded(tl: Timeline, asOf: Option[String] = None)
-      : Map[String, String] = {
-    val found = scala.collection.mutable.Map.empty[String, String]
-    val it = tl.completedInstants().reverseIterator
-      .filter(i => asOf.forall(i.ts <= _))
-    while (found.size < Keys.size && it.hasNext) {
-      val extra = tl.metadata(it.next().ts).extra
-      Keys.foreach(k => if (!found.contains(k)) extra.get(k).foreach(found(k) = _))
-    }
-    found.toMap
-  }
+      : Map[String, String] =
+    Keys.flatMap(k => tl.recordedExtraAsOf(k, asOf).map(k -> _)).toMap
+
+  /** The recorded event-time ordering column at or before `asOf` — what a
+    * snapshot merge or change feed of that era orders row versions by. */
+  def precombine(tl: Timeline, asOf: Option[String]): Option[String] =
+    tl.recordedExtraAsOf(PrecombineKey, asOf)
 
   /** Resolve the contract a write to `tl`'s table follows: each property
     * is the `declared` value (format options, SQL `OPTIONS`/TBLPROPERTIES)

@@ -20,6 +20,24 @@ class TxnSpec extends SparkSpec {
     read.SnapshotReader.read(spark, dir).select("id", "v")
       .as[(Long, Long)].collect().toMap
 
+  private def vOf(df: org.apache.spark.sql.DataFrame): Long =
+    df.select("v").as[Long].collect().head
+
+  /** Run the writer's data jobs for `(1, "x", v)` at `ts` and capture the
+    * commit it would publish: (ts, metadata, action, ...). Nothing becomes
+    * visible. */
+  private def captured(d: String, ts: String, v: Long)
+      : (String, graft.format.CommitMetadata, String, Option[String],
+        Boolean) = {
+    var c: Option[(String, graft.format.CommitMetadata, String,
+      Option[String], Boolean)] = None
+    new CowWriter(spark, d, 2, publish = Some(
+      (cts, m, act, rp, coa) => c = Some((cts, m, act, rp, coa))))
+      .commit(Some(Seq((1L, "x", v)).toDF("id", "part", "v")), None,
+        col("id"), col("part"), ts)
+    c.get
+  }
+
   test("two-table txn: both commits land, reader sees both effects") {
     val a = freshDir("txn_a"); val b = freshDir("txn_b")
     mkTable(a, Seq((1L, "x", 10L), (2L, "y", 20L)))
@@ -119,18 +137,9 @@ class TxnSpec extends SparkSpec {
     // --- simulate a crash AFTER table a promoted, before b did ---------
     // stage both commit bodies + journal on both, promote only a
     val (tsA, tsB) = ("3000", "3001")
-    val metaFor = (d: String, ts: String, v: Long) => {
-      // build a real staged commit by running the writer with a capturing
-      // publisher, then hand-stage it
-      var captured: Option[(String, graft.format.CommitMetadata, String,
-        Option[String], Boolean)] = None
-      new CowWriter(spark, d, 2, publish = Some(
-        (cts, m, act, rp, coa) => captured = Some((cts, m, act, rp, coa))))
-        .commit(Some(Seq((1L, "x", v)).toDF("id", "part", "v")), None,
-          col("id"), col("part"), ts)
-      captured.get
-    }
-    val ca = metaFor(a, tsA, 11L); val cb = metaFor(b, tsB, 101L)
+    // build real staged commits by running the writer with a capturing
+    // publisher, then hand-stage them
+    val ca = captured(a, tsA, 11L); val cb = captured(b, tsB, 101L)
     tl(a).stageCommitLocked(ca._1, ca._2, ca._3)
     tl(b).stageCommitLocked(cb._1, cb._2, cb._3)
     val members = Seq(MultiTableTxn.Member(a, tsA, ca._3),
@@ -147,7 +156,7 @@ class TxnSpec extends SparkSpec {
 
     // --- simulate a crash BEFORE any promote: roll back ----------------
     val (tsA2, tsB2) = ("4000", "4001")
-    val ca2 = metaFor(a, tsA2, 12L); val cb2 = metaFor(b, tsB2, 102L)
+    val ca2 = captured(a, tsA2, 12L); val cb2 = captured(b, tsB2, 102L)
     tl(a).stageCommitLocked(ca2._1, ca2._2, ca2._3)
     tl(b).stageCommitLocked(cb2._1, cb2._2, cb2._3)
     val members2 = Seq(MultiTableTxn.Member(a, tsA2, ca2._3),
@@ -213,8 +222,6 @@ class TxnSpec extends SparkSpec {
     val a = freshDir("txn_s1"); val b = freshDir("txn_s2")
     mkTable(a, Seq((1L, "x", 10L)))
     mkTable(b, Seq((1L, "x", 100L)))
-    def vOf(df: org.apache.spark.sql.DataFrame): Long =
-      df.select("v").as[Long].collect().head
 
     // clean state: both snapshots are the current state, pinned
     val s0 = MultiTableTxn.snapshotAll(spark, Seq(a, b))
@@ -235,16 +242,7 @@ class TxnSpec extends SparkSpec {
     val hconf = spark.sessionState.newHadoopConf()
     def tl(d: String) = Timeline(hconf, d)
     val (tsA, tsB) = ("5000", "5001")
-    val metaFor = (d: String, ts: String, v: Long) => {
-      var captured: Option[(String, graft.format.CommitMetadata, String,
-        Option[String], Boolean)] = None
-      new CowWriter(spark, d, 2, publish = Some(
-        (cts, m, act, rp, coa) => captured = Some((cts, m, act, rp, coa))))
-        .commit(Some(Seq((1L, "x", v)).toDF("id", "part", "v")), None,
-          col("id"), col("part"), ts)
-      captured.get
-    }
-    val ca = metaFor(a, tsA, 12L); val cb = metaFor(b, tsB, 102L)
+    val ca = captured(a, tsA, 12L); val cb = captured(b, tsB, 102L)
     tl(a).stageCommitLocked(ca._1, ca._2, ca._3)
     tl(b).stageCommitLocked(cb._1, cb._2, cb._3)
     val members = Seq(MultiTableTxn.Member(a, tsA, ca._3),
@@ -291,4 +289,84 @@ class TxnSpec extends SparkSpec {
     val sF = MultiTableTxn.snapshotAll(spark, Seq(a, b))
     assert(vOf(sF(a)) == 15L && vOf(sF(b)) == 105L)
   }
+
+  test("snapshotAll: a journal cleared between its listing and its read " +
+    "still forces a re-observation") {
+    val a = freshDir("txn_v1"); val b = freshDir("txn_v2")
+    mkTable(a, Seq((1L, "x", 10L)))
+    mkTable(b, Seq((1L, "x", 100L)))
+    val hconf = spark.sessionState.newHadoopConf()
+    def tl(d: String) = Timeline(hconf, d)
+    val (tsA, tsB) = ("5000", "5001")
+    val ca = captured(a, tsA, 11L); val cb = captured(b, tsB, 101L)
+    tl(a).stageCommitLocked(ca._1, ca._2, ca._3)
+    tl(b).stageCommitLocked(cb._1, cb._2, cb._3)
+    // the reader sees both tables through JournalRaceFs, which lets the
+    // whole publish run inside its first observation
+    val (ra, rb) = (s"${JournalRaceFs.Scheme}://$a",
+      s"${JournalRaceFs.Scheme}://$b")
+    val members = Seq(MultiTableTxn.Member(ra, tsA, ca._3),
+      MultiTableTxn.Member(rb, tsB, cb._3))
+    var published = false
+    var cleared = false
+    // journal and promote both members right after the listing of a's
+    // instants: a's listing misses its member, b's (next) holds its own
+    JournalRaceFs.afterInstantListing = dir =>
+      if (!published && dir.getParent.toUri.getPath == a) {
+        published = true
+        MultiTableTxn.writeManifest(hconf, tl(a), "race", members)
+        MultiTableTxn.writeManifest(hconf, tl(b), "race", members)
+        tl(a).promoteStagedLocked(tsA, ca._3)
+        tl(b).promoteStagedLocked(tsB, cb._3)
+      }
+    // the second journal scan lists the journal; clear it before the read
+    JournalRaceFs.beforeJournalOpen = _ =>
+      if (published && !cleared) {
+        cleared = true
+        MultiTableTxn.clearManifest(hconf, tl(a), "race")
+        MultiTableTxn.clearManifest(hconf, tl(b), "race")
+      }
+    spark.conf.set(s"fs.${JournalRaceFs.Scheme}.impl",
+      classOf[JournalRaceFs].getName)
+    try {
+      val s = MultiTableTxn.snapshotAll(spark, Seq(ra, rb))
+      assert(published && cleared, "the publish never raced the reader")
+      // the torn read pins a before the txn (10) and b after it (101)
+      assert(vOf(s(ra)) == 11L && vOf(s(rb)) == 101L,
+        s"torn cross-table read: a=${vOf(s(ra))} b=${vOf(s(rb))}")
+    } finally {
+      JournalRaceFs.afterInstantListing = _ => ()
+      JournalRaceFs.beforeJournalOpen = _ => ()
+      spark.conf.unset(s"fs.${JournalRaceFs.Scheme}.impl")
+    }
+  }
+}
+
+/** Local file system under its own scheme with two hooks, so a test can
+  * interleave a transaction's publish with a reader's listings: one runs
+  * after each `.hoodie` listing (a timeline's instant listing), the other
+  * before each transaction journal is opened. */
+final class JournalRaceFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI =
+    java.net.URI.create(s"${JournalRaceFs.Scheme}:///")
+  override def getScheme: String = JournalRaceFs.Scheme
+  override def listStatus(f: org.apache.hadoop.fs.Path)
+      : Array[org.apache.hadoop.fs.FileStatus] = {
+    val listed = super.listStatus(f)
+    if (f.getName == Timeline.MetaDir) JournalRaceFs.afterInstantListing(f)
+    listed
+  }
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
+      : org.apache.hadoop.fs.FSDataInputStream = {
+    if (f.getName.endsWith(".txn")) JournalRaceFs.beforeJournalOpen(f)
+    super.open(f, bufferSize)
+  }
+}
+
+object JournalRaceFs {
+  val Scheme = "journalrace"
+  @volatile var afterInstantListing: org.apache.hadoop.fs.Path => Unit =
+    _ => ()
+  @volatile var beforeJournalOpen: org.apache.hadoop.fs.Path => Unit =
+    _ => ()
 }
