@@ -1322,7 +1322,7 @@ object Dedup {
       if (!boot && assertNewDocs)
         assertUningested(spark, docsDir, toks.select(col("doc_id")))
       // materialized ONCE: read again by the dup filter and the txn's
-      // touched/write/stats passes (see the ingest-soak job-count note)
+      // touched/write passes (see the ingest-soak job-count note)
       val totals =
         if (boot)
           bCounts.select(col("win"), col("bcnt").as("cnt"))
@@ -1518,15 +1518,13 @@ object Dedup {
       val drops = verifyJaccardArrays(cand,
           union.select(col("id"), col("shingles")), thresholdPermille)
         .select(col("id_b").as("__drop")).distinct()
-      // materialized ONCE (r13): the writer re-reads its input frame for
-      // the touched/write/stats passes — unscoped, each pass re-ran the
-      // MinHash aggregation, the banding union, and the verify join
+      // not materialized: the delete-free, counter-free delta append below
+      // reads its frame exactly once (its write measures the files itself)
       val out = batchRows
         .join(drops, col("id") === col("__drop"), "left")
         .select(col("id").as("doc_id"), col("sig"), col("shingles"),
           col("__drop").isNull.as("kept"))
         .withColumn("pt", lit("all"))
-        .localCheckpoint(true)
       // MOR + deltaCounters=off (r13): every batch's ids hash across all
       // buckets, so COW appends rewrote the WHOLE index per batch and the
       // exact-live-count existence join re-read it — this is an internal

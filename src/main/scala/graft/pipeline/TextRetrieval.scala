@@ -665,15 +665,14 @@ object TextRetrieval {
       create(dlFrame, s"$dir/doclen")
       create(postFrame, s"$dir/postings")
     } else {
-      // the tokenize→aggregate frames are re-read by the txn's
-      // touched-group, write, and stats passes — materialize each ONCE
-      // (r11; the ingest soak measured the re-executions as the
-      // dominant per-batch job count)
+      // not materialized: each table's delete-free, counter-free delta
+      // append reads its tokenize→aggregate frame exactly once (its write
+      // measures the files itself)
       graft.write.MultiTableTxn.commit(spark, Seq(
         graft.write.MultiTableTxn.TableWrite(s"$dir/postings",
-          updates = Some(postFrame.localCheckpoint(true))),
+          updates = Some(postFrame)),
         graft.write.MultiTableTxn.TableWrite(s"$dir/doclen",
-          updates = Some(dlFrame.localCheckpoint(true))))): Unit
+          updates = Some(dlFrame)))): Unit
     }
     refreshViews(spark, dir)
   }

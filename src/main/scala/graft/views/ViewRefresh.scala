@@ -36,11 +36,9 @@ private[views] object ViewRefresh {
     val viewTl = Timeline(conf, viewPath)
 
     if (viewTl.completedInstants().isEmpty) {
-      // eager checkpoint: the insert's touched/write/stats passes would
-      // otherwise re-run the SOURCE-SIZED bootstrap scan ~3×; the
-      // materialized aggregate is group-count-sized
+      // the insert reads its frame once (its write measures the files
+      // itself), so the bootstrap aggregate streams straight into it
       val agg = bootstrap(SnapshotReader.read(spark, srcPath))
-        .localCheckpoint(true)
       val ts0 = FormatWriter.nextTs(viewTl)
       try new CowWriter(spark, viewPath, buckets).insert(agg, col(groupCol),
         lit("all"), ts0,
@@ -64,11 +62,11 @@ private[views] object ViewRefresh {
     val (ups0, dels0) = diff(viewSnap, structural, asOf, srcHead)
 
     // one execution per diff side (r14 job/byte budget): the two isEmpty
-    // gates below plus CowWriter.commit's touched/write/stats passes
-    // would otherwise re-run each diff plan — CDC read + view join +
-    // the retraction re-aggregate of the source — up to 5×. The
-    // materialized diff is churn-sized (touched groups), never
-    // source-sized
+    // gates below plus CowWriter.commit's touched and write passes (and,
+    // with both sides, its delete-key existence join) would otherwise
+    // re-run each diff plan — CDC read + view join + the retraction
+    // re-aggregate of the source — up to 4×. The materialized diff is
+    // churn-sized (touched groups), never source-sized
     val ups = Option(ups0).map(_.localCheckpoint(true)).orNull
     val dels = Option(dels0).map(_.localCheckpoint(true)).orNull
 

@@ -10,11 +10,14 @@ import org.apache.spark.sql.functions._
   * shared [[TableWriter]] core; callers that resolve a table's
   * [[WriteContract]] get this writer from [[WriteContract.writer]].
   *
-  * Scale notes (100 TB): the data path is one distributed job per commit —
-  * a hash `repartition` on (partition, fileId) followed by a partitioned
-  * parquet write; per-group row counts come from a map-side-combined
-  * `groupBy(...).count()` (metadata-sized result). No data ever moves
-  * through the driver.
+  * Scale notes (100 TB): a commit runs two SQL executions — the
+  * touched-groups list (metadata-sized) and the rewrite itself, a hash
+  * `repartition` on (partition, fileId) followed by a partitioned parquet
+  * write that also returns each file's row counts and column stats
+  * ([[SliceFiles]]). The op counters follow from those counts and the
+  * previous slices' recorded ones; only a commit carrying both updates
+  * and deletes adds a third, key-only existence join for its deletes. No
+  * data ever moves through the driver.
   *
   * @param numBuckets file groups per partition (deterministic bucketing of
   *                   record keys via xxhash64)
@@ -65,14 +68,19 @@ final class CowWriter private[write] (
     // (the memoized listing latestSlices below reads from)
     val readPoint = timeline.completedInstants().lastOption.map(_.ts)
 
-    val up = updates.map(withMeta(_, keyCol, partCol, ts))
+    val incoming = updates.map(withMeta(_, keyCol, partCol, ts))
     val del = deletes.map(withMeta(_, keyCol, partCol, ts)
       .select(col(MetaCols.RecordKey), col(MetaCols.PartitionPath), col(FidCol)))
+    // Delete wins: a key this commit both updates and deletes is deleted
+    // (the MOR merge resolves the same pair the same way).
+    val up = del.fold(incoming)(d => incoming.map(_.join(
+      d.select(MetaCols.RecordKey).distinct(), Seq(MetaCols.RecordKey),
+      "left_anti")))
 
     // Affected file groups — metadata-sized driver list (same scale Hudi
     // plans at); the data itself never reaches the driver.
     val touched: Seq[(String, String)] =
-      (up.map(_.select(col(MetaCols.PartitionPath), col(FidCol)))
+      (incoming.map(_.select(col(MetaCols.PartitionPath), col(FidCol)))
         .toSeq ++ del.map(_.select(col(MetaCols.PartitionPath), col(FidCol))))
         .reduceOption(_ unionByName _)
         .map(_.distinct().collect().map(r => (r.getString(0), r.getString(1))).toSeq)
@@ -96,7 +104,7 @@ final class CowWriter private[write] (
     else None
 
     // Keys being replaced or removed in this commit.
-    val changeKeys = (up.map(_.select(MetaCols.RecordKey)).toSeq ++
+    val changeKeys = (incoming.map(_.select(MetaCols.RecordKey)).toSeq ++
       del.map(_.select(MetaCols.RecordKey))).reduce(_ unionByName _).distinct()
 
     // EVENT-TIME resolution (precombine declared, and this commit carries
@@ -104,9 +112,9 @@ final class CowWriter private[write] (
     // version with the GREATEST ordering value — ties go to the incoming
     // row (newer commit). An old row that wins is carried over with its
     // ORIGINAL meta columns, exactly like a survivor; a losing incoming
-    // row lands nowhere. Deletes stay absolute (anti-joined out first).
-    // Costs one window shuffle over the touched groups' rows — only paid
-    // on tables that opted into ordering.
+    // row lands nowhere. Deletes stay absolute (anti-joined out of both
+    // sides first). Costs one window shuffle over the touched groups' rows
+    // — only paid on tables that opted into ordering.
     val resolvedPc: Option[DataFrame] = (precombine, old, up) match {
       case (Some(pc), Some(o), Some(u)) =>
         require(u.columns.contains(pc),
@@ -119,15 +127,14 @@ final class CowWriter private[write] (
         val cand = oldKept
           .unionByName(u.withColumn(NewCol, lit(1)),
             allowMissingColumns = true)
-        val kw = org.apache.spark.sql.expressions.Window
+        val w = org.apache.spark.sql.expressions.Window
           .partitionBy(MetaCols.RecordKey)
-        val w = kw.orderBy(col(pc).desc_nulls_last, col(NewCol).desc,
-          col(MetaCols.CommitSeqno).desc)
+          .orderBy(col(pc).desc_nulls_last, col(NewCol).desc,
+            col(MetaCols.CommitSeqno).desc)
         Some(cand
-          .withColumn(HadOldCol,
-            max(when(col(NewCol) === 0, 1).otherwise(0)).over(kw))
           .withColumn(RnCol, row_number().over(w))
-          .filter(col(RnCol) === 1))
+          .filter(col(RnCol) === 1)
+          .drop(RnCol, NewCol))
       case _ => None
     }
 
@@ -138,52 +145,50 @@ final class CowWriter private[write] (
 
     // allowMissingColumns: an upsert may ADD payload columns (schema
     // evolution) — carried-over survivors read them as null.
-    val newData = resolvedPc match {
-      case Some(r) => r.drop(RnCol, NewCol, HadOldCol)
-      case None => (survivors.toSeq ++ up.toSeq)
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-    }
+    val newData = resolvedPc.getOrElse((survivors.toSeq ++ up.toSeq)
+      .reduce(_.unionByName(_, allowMissingColumns = true)))
 
     val written = writeSlices(newData, ts)
 
-    // Per-group delete/update counters in ONE job (the old slices are 100 TB
-    // scale — every extra stats pass is a full re-read): tag the change keys
-    // with their op, inner-join once against old keys, count by (fid, op).
-    // Distinct per (key, op): duplicate keys in the user-supplied frames must
-    // not inflate the counters (survivors already use distinct changeKeys).
-    // Ref invariant: totalRecordsDeleted must be exact (DeleteView.java:186).
-    // precombine mode: update counts come from the resolved winners below
-    // (a losing incoming row is NOT an update — the snapshot is unchanged),
-    // so only deletes go through the existence join.
-    val tagged = (del.map(_.select(col(MetaCols.RecordKey))
-        .withColumn(OpCol, lit("d"))).toSeq ++
-      (if (resolvedPc.isEmpty) up else None)
-        .map(_.select(col(MetaCols.RecordKey)).withColumn(OpCol, lit("u"))))
-      .reduceOption(_ unionByName _)
-      .map(_.distinct())
-    val opCounts: Map[(String, String), Long] = (old, tagged) match {
-      case (Some(o), Some(t)) =>
-        o.select(col(MetaCols.RecordKey), col(MetaCols.PartitionPath))
-          .join(t, Seq(MetaCols.RecordKey))
-          .withColumn(FidCol, fileIdCol)
-          .groupBy(col(FidCol), col(OpCol)).count().collect()
-          .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-      case _ => Map.empty
+    // Per-group op counters from metadata and the write itself — no pass
+    // over the old slices. Every row the write carried over from a group's
+    // previous slice keeps its old commit time, so the previous slice's
+    // recorded row count (numWrites — exact, the metadata COUNT(*) fold
+    // trusts it) minus the carried rows is what this commit REMOVED from
+    // the group: its deleted rows plus the old versions its updates
+    // replaced (a losing precombine row replaces nothing). A one-sided
+    // commit books the removal as its side; only a commit carrying both
+    // runs an existence join, over the delete keys alone, and books the
+    // rest as updates. Ref invariant: totalRecordsDeleted must be exact
+    // (DeleteView.java:186).
+    val prevRows: Map[String, Long] =
+      prevByFid.values.groupBy(_.commitTs).flatMap { case (cts, ss) =>
+        val rows = timeline.metadata(cts).allStats
+          .map { case (_, st) => st.fileId -> st.numWrites }.toMap
+        ss.map(s => s.fileId -> rows.getOrElse(s.fileId, 0L))
+      }
+    val writtenByFid = written.map { case ((_, fid), w) => fid -> w }
+    val removed: Map[String, Long] = prevRows.map { case (fid, n) =>
+      fid -> (n - writtenByFid.get(fid).fold(0L)(w => w.rows - w.fresh))
     }
-    val deletedPerFid = opCounts.collect { case ((f, "d"), n) => f -> n }
-    val updatedPerFid: Map[String, Long] = resolvedPc match {
-      case Some(r) => r
-        .filter(col(NewCol) === 1 && col(HadOldCol) === 1)
-        .groupBy(col(FidCol)).count().collect()
-        .map(x => x.getString(0) -> x.getLong(1)).toMap
-      case None => opCounts.collect { case ((f, "u"), n) => f -> n }.toMap
+    val (deletedPerFid, updatedPerFid) = (up, del, old) match {
+      case (Some(_), Some(d), Some(o)) =>
+        val deleted = o.select(col(MetaCols.RecordKey),
+            col(MetaCols.PartitionPath))
+          .join(d.select(MetaCols.RecordKey), Seq(MetaCols.RecordKey),
+            "left_semi")
+          .groupBy(fileIdCol).count().collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        (deleted, removed.map { case (fid, n) =>
+          fid -> (n - deleted.getOrElse(fid, 0L)) })
+      case (None, _, _) => (removed, Map.empty[String, Long])
+      case _ => (Map.empty[String, Long], removed)
     }
 
     // Groups fully emptied by deletes produce no file: a 0-row stat keeps
     // their prevCommit + numDeletes visible to the delete view.
-    val writtenFids = written.keys.map(_._2).toSet
     saveCommit(ts, groupStats(written, prevByFid,
-        superseded = prevByFid.values.filterNot(s => writtenFids(s.fileId)),
+        superseded = prevByFid.values.filterNot(s => writtenByFid.contains(s.fileId)),
         deleted = deletedPerFid, updated = updatedPerFid),
       totalDeleted = deletedPerFid.values.sum,
       op = "UPSERT", schema = newData.drop(FidCol).schema, extra = extra,
@@ -192,11 +197,7 @@ final class CowWriter private[write] (
 }
 
 object CowWriter {
-  /** Helper column tagging change rows with their operation (d/u). */
-  private val OpCol = "__graft_op"
-  /** Precombine-resolution helper columns (incoming flag, window rank,
-    * key-had-an-old-row flag). */
+  /** Precombine-resolution helper columns (incoming flag, window rank). */
   private val NewCol = "__graft_new"
   private val RnCol = "__graft_rn"
-  private val HadOldCol = "__graft_had_old"
 }

@@ -37,8 +37,9 @@ import org.apache.spark.sql.functions.col
   * travel across the overwrite survive; superseded slices are reclaimed
   * by [[TableMaintenance.clean]]), ErrorIfExists/Ignore behave as named.
   * All data movement goes through the contract's writer
-  * ([[CowWriter]]/[[MorWriter]]): one distributed job per commit, driver
-  * handles only file names and commit JSON. One `.hoodie` listing serves
+  * ([[CowWriter]]/[[MorWriter]]): one write execution per commit (a COW
+  * commit also lists its touched groups first), the driver handles only
+  * file names and commit JSON. One `.hoodie` listing serves
   * the contract, the commit-ts mint and the writer's plan; the OCC check
   * re-lists under the commit lock.
   *

@@ -16,10 +16,13 @@ import org.apache.spark.sql.functions._
   * [[TableWriter]] core; callers that resolve a table's [[WriteContract]]
   * get this writer from [[WriteContract.writer]].
   *
-  * Scale notes (100 TB): a delta commit writes ONLY the changed rows, one
-  * distributed job per commit; stats (numDeletes per group) come from a
-  * map-side-combined aggregate. Compaction is itself a distributed merge
-  * job whose output goes through the same slice writer as COW commits.
+  * Scale notes (100 TB): a delta commit writes ONLY the changed rows, in
+  * one write execution that also returns each file's stats
+  * ([[SliceFiles]]); the exact op counters (numDeletes etc. per group)
+  * add one existence join against the snapshot, skipped by a
+  * `deltaCounters=off` table's delete-free deltas. Compaction is itself a
+  * distributed merge job whose output goes through the same slice writer
+  * as COW commits.
   *
   * @param exactCounters false = the table declared `deltaCounters=off`:
   *                      DELETE-FREE delta commits skip the snapshot-key

@@ -1,32 +1,45 @@
 package graft.write
 
-import graft.format.{ColStat, MetaCols}
+import graft.format.{Bloom, ColStat, MetaCols}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression}
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
+import org.apache.spark.sql.execution.datasources.{WriteJobStatsTracker,
+  WriteTaskStats, WriteTaskStatsTracker}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** Shared file-slice materialization for the COW and MOR writers.
   *
-  * Writes one parquet file per (partition, fileId) group in a single
-  * distributed job: hash-repartition on the group columns, partitioned write
-  * to a temp dir, then driver-side renames (metadata-only FS ops, one per
+  * Writes one parquet file per (partition, fileId) group in ONE Spark SQL
+  * execution: hash-repartition on the group columns, partitioned write to
+  * a temp dir, then driver-side renames (metadata-only FS ops, one per
   * written group — the same O(#touched file groups) driver scale Hudi plans
   * at) into `<part>/<fileName(fid, ts)>`.
   *
-  * The same job's stats aggregate (map-side combined, metadata-sized
-  * result) also records per-file min/max/null-count for the record key and
-  * any writer-declared hot columns — the column-stats skipping index
-  * consumed by [[graft.read.GraftFileIndex]]. One pass over the data,
-  * no extra job.
+  * The write job itself measures every file it writes: a write stats
+  * tracker ([[SliceStats]]) sees each row as it goes into its file and
+  * records the file's row count, how many of its rows carry this commit's
+  * `_hoodie_commit_time`, its size, and min/max/null-count (plus sum and
+  * bloom where they apply) for the record key and any writer-declared hot
+  * columns — the column-stats skipping index consumed by
+  * [[graft.read.GraftFileIndex]]. Delta Lake gathers its per-file stats
+  * the same way; the data is never read a second time for them.
   */
 private[write] object SliceFiles {
   import TableWriter.FidCol
   private val PartDirCol = "__graft_part"
 
-  /** Per-written-file result: relative path, row count, column stats,
-    * and the written file's size in bytes. */
-  final case class Written(relPath: String, rows: Long,
+  /** Per-written-file result: relative path, row count, the rows stamped
+    * with the writing commit's ts (`fresh` — the rest were carried over
+    * from an older slice), column stats, and the file's size in bytes. */
+  final case class Written(relPath: String, rows: Long, fresh: Long,
       colStats: Map[String, ColStat], sizeBytes: Long)
 
   /** Column types the stats index can order and round-trip through a
@@ -51,7 +64,9 @@ private[write] object SliceFiles {
     case _ => false
   }
 
-  /** Returns (partition, fileId) -> Written.
+  /** Returns (partition, fileId) -> Written. A null or empty partition
+    * value is keyed (and its directory named) `__HIVE_DEFAULT_PARTITION__`,
+    * as Spark's partitioned writer names it.
     *
     * @param statsCols columns of `data` to record min/max/nulls for; names
     *                  not present in `data` or of unsupported type are
@@ -67,18 +82,17 @@ private[write] object SliceFiles {
     *                  parquet reader's row-group min/max pruning effective
     *                  on the sort columns — the layout half of data
     *                  skipping, complementing the file-level stats index.
-    */
-  /** @param bloomCols columns to ALSO record a per-file bloom filter for
-    *                   (each is implicitly a stats column too — a bloom
-    *                   without min/max would read as "all null" to the
-    *                   skipping index); see [[graft.format.Bloom]].
-    *  @param bloomBits bloom bitset size in bits per file per column. */
+    * @param bloomCols columns to ALSO record a per-file bloom filter for
+    *                  (each is implicitly a stats column too — a bloom
+    *                  without min/max would read as "all null" to the
+    *                  skipping index); see [[graft.format.Bloom]].
+    * @param bloomBits bloom bitset size in bits per file per column. */
   def write(fs: FileSystem, basePath: String, data: DataFrame, ts: String,
       fileName: (String, String) => String,
       statsCols: Seq[String] = Seq.empty,
       sortBy: Seq[org.apache.spark.sql.Column] = Seq.empty,
       bloomCols: Seq[String] = Seq.empty,
-      bloomBits: Int = graft.format.Bloom.DefaultBits)
+      bloomBits: Int = Bloom.DefaultBits)
       : Map[(String, String), Written] = {
     // Unique per ATTEMPT, not just per ts: concurrent writers that raced to
     // the same ts (possible across drivers on stores without atomic
@@ -89,9 +103,10 @@ private[write] object SliceFiles {
       s".tmp_${ts}_${java.util.UUID.randomUUID().toString.take(8)}")
     fs.delete(tmp, true)
 
-    val blooms = bloomCols.distinct.filter(c =>
-      data.schema.fields.exists(f =>
-        f.name == c && statsSupported(f.dataType)))
+    def statsable(c: String): Boolean = data.schema.fields.exists(f =>
+      f.name == c && statsSupported(f.dataType))
+    val blooms = bloomCols.distinct.filter(statsable)
+    val tracked = (statsCols ++ blooms).distinct.filter(statsable)
     val repart = data
       .withColumn(PartDirCol, col(MetaCols.PartitionPath))
       // FidCol doubles as the partitionBy column; it is dropped from file
@@ -118,98 +133,220 @@ private[write] object SliceFiles {
     // materializes on the plain-encoding fallback — precisely the
     // high-cardinality regime where membership pruning needs it.
     val nativeBloomNdv = math.max(64L, bloomBits.toLong / 7L)
-    val writer = blooms.foldLeft(withDirs.write) { (w, c) =>
-      w.option(s"parquet.bloom.filter.enabled#$c", "true")
-        .option(s"parquet.bloom.filter.expected.ndv#$c",
-          nativeBloomNdv.toString)
-    }
-    writer
-      .partitionBy(PartDirCol, FidCol)
-      .parquet(tmp.toString)
+    val options = blooms.flatMap(c => Seq(
+      s"parquet.bloom.filter.enabled#$c" -> "true",
+      s"parquet.bloom.filter.expected.ndv#$c" -> nativeBloomNdv.toString))
+      .toMap
 
-    // Row counts + column stats per group — ONE distributed agg with
-    // map-side combine; result is metadata-sized (#groups rows). min/max
-    // compute on the NATIVE type (string ordering of numerics would be
-    // wrong) and only the result is cast to string for storage.
-    val tracked = (statsCols ++ blooms).distinct.filter(c =>
-      data.schema.fields.exists(f =>
-        f.name == c && statsSupported(f.dataType)))
-    // exact-numeric stats columns additionally record their per-file SUM
-    // (integral/decimal only — see [[sumSupported]]) for the DSv2 SUM/AVG
-    // metadata pushdown to fold. The input is widened to precision-38
-    // decimal BEFORE summing so the recorded value is the TRUE per-file
-    // sum (no long wrap, no ANSI overflow error inside an unrelated
-    // write) — string round trip is exact for decimals.
-    val summed = tracked.filter(c => data.schema.fields.exists(f =>
-      f.name == c && sumSupported(f.dataType))).toSet
-    def sumWide(c: String): DataType = {
-      val dt = data.schema.fields.find(_.name == c).get.dataType
-      dt match {
-        case d: DecimalType => DecimalType(38, d.scale)
-        case _ => DecimalType(38, 0)
-      }
-    }
-    val aggs = (count(lit(1L)).as("__graft_cnt") +: tracked.flatMap { c =>
-      Seq(min(col(c)).cast("string").as(s"__min__$c"),
-        max(col(c)).cast("string").as(s"__max__$c"),
-        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"__nul__$c")) ++
-        (if (summed(c))
-          Seq(sum(col(c).cast(sumWide(c))).cast("string")
-            .as(s"__sum__$c")) else Seq.empty)
-    }) ++ blooms.map { c =>
-      graft.functions.BloomAgg.bloom(col(c).cast("string"), bloomBits,
-        graft.format.Bloom.DefaultHashes).as(s"__blm__$c")
-    }
-    val counts = data.groupBy(MetaCols.PartitionPath, FidCol)
-      .agg(aggs.head, aggs.tail: _*)
-      .collect().map { r =>
-        val bloomSet = blooms.toSet
-        val stats = tracked.map { c =>
-          c -> ColStat(
-            min = Option(r.getAs[String](s"__min__$c")),
-            max = Option(r.getAs[String](s"__max__$c")),
-            nulls = Some(r.getAs[Long](s"__nul__$c")),
-            bloom = if (bloomSet(c))
-              Some(graft.format.Bloom.encode(
-                r.getAs[Array[Byte]](s"__blm__$c")))
-            else None,
-            sum = if (summed(c)) Option(r.getAs[String](s"__sum__$c"))
-              else None)
-        }.toMap
-        (r.getString(0), r.getString(1)) ->
-          (r.getAs[Long]("__graft_cnt"), stats)
-      }.toMap
+    val conf = data.sparkSession.sessionState.conf
+    val stats = new SliceStats(
+      StructType(data.schema.filterNot(_.name == FidCol)), tracked,
+      blooms.toSet, bloomBits, ts, conf.sessionLocalTimeZone,
+      conf.ansiEnabled, new SerializableConfiguration(
+        data.sparkSession.sessionState.newHadoopConf()))
+    Bridge.writeParquet(withDirs, tmp.toString, Seq(PartDirCol, FidCol),
+      options, Seq(stats))
 
-    val out = scala.collection.mutable.Map.empty[(String, String), Written]
-    val partDirs = if (fs.exists(tmp)) fs.listStatus(tmp).filter(_.isDirectory)
-      else Array.empty[org.apache.hadoop.fs.FileStatus]
-    partDirs.foreach { pd =>
-      val part = dirValue(pd.getPath.getName)
-      fs.listStatus(pd.getPath).filter(_.isDirectory).foreach { fd =>
-        val fid = dirValue(fd.getPath.getName)
-        val files = fs.listStatus(fd.getPath)
-          .filter(f => f.getPath.getName.startsWith("part-"))
+    val out = stats.files.groupBy(_._1).map {
+      case (key @ (part, fid), files) =>
         require(files.length == 1,
           s"expected exactly 1 file for group $fid, got ${files.length}")
-        val destDir = if (part.isEmpty) new Path(basePath)
-          else new Path(basePath, part)
+        val staged = files.head._2
+        val destDir = new Path(basePath, part)
         fs.mkdirs(destDir)
         val name = fileName(fid, ts)
         val dest = new Path(destDir, name)
         fs.delete(dest, false)
-        require(fs.rename(files.head.getPath, dest), s"rename to $dest failed")
-        val rel = if (part.isEmpty) name else s"$part/$name"
-        val (n, stats) = counts.getOrElse((part, fid),
-          (0L, Map.empty[String, ColStat]))
-        out((part, fid)) = Written(rel, n, stats, files.head.getLen)
-      }
+        require(fs.rename(new Path(tmp, staged.relPath), dest),
+          s"rename to $dest failed")
+        key -> staged.copy(relPath = s"$part/$name")
     }
     fs.delete(tmp, true)
-    out.toMap
+    out
+  }
+}
+
+/** A write task's files, each keyed by its group (the rendered partition
+  * values) with its path relative to the write's output dir. */
+private[write] final case class SliceTaskStats(
+    files: Seq[((String, String), SliceFiles.Written)]) extends WriteTaskStats
+
+/** The slice write's stats tracker. Built on the driver and shipped with
+  * the write job; each write task counts the rows of every file it writes
+  * and folds the tracked columns, and the driver receives every file's
+  * stats when the job commits ([[files]]).
+  *
+  * The values match Spark's own `min`/`max`/`sum`/`count` over the same
+  * rows: min/max compare with the type's Catalyst ordering and keep the
+  * first of equal values (as `least`/`greatest` do), integral and decimal
+  * sums are exact at decimal(38, scale) with Spark's overflow rule, and
+  * every value is rendered through Spark's `CAST(… AS STRING)` in the
+  * session time zone. Blooms hash the same rendering ([[Bloom.add]]).
+  *
+  * @param dataSchema the written rows' layout (the frame minus the
+  *                   directory columns) — the row `newRow` receives */
+private[write] final class SliceStats(dataSchema: StructType,
+    tracked: Seq[String], blooms: Set[String], bloomBits: Int, ts: String,
+    timeZoneId: String, ansi: Boolean, hadoopConf: SerializableConfiguration)
+    extends WriteJobStatsTracker {
+  import SliceStats._
+
+  private val cols: Array[Col] = tracked.map { c =>
+    val i = dataSchema.fieldIndex(c)
+    val dt = dataSchema(i).dataType
+    val sumScale = dt match {
+      case d: DecimalType => Some(d.scale)
+      case _ if SliceFiles.sumSupported(dt) => Some(0)
+      case _ => None
+    }
+    Col(c, i, dt, render(dt),
+      sumScale.map(s => (s, render(DecimalType(38, s)))), blooms(c))
+  }.toArray
+  private val commitTimeAt = dataSchema.fieldIndex(MetaCols.CommitTime)
+  private val tsUtf8 = UTF8String.fromString(ts)
+
+  private def render(dt: DataType): Expression =
+    Cast(BoundReference(0, dt, nullable = true), StringType, Some(timeZoneId))
+
+  @transient private var collected: Seq[((String, String), SliceFiles.Written)] =
+    Nil
+
+  /** Every file the job wrote, keyed by group, its `relPath` relative to
+    * the write's output dir (driver side, after the write). */
+  def files: Seq[((String, String), SliceFiles.Written)] = collected
+
+  override def newTaskInstance(): WriteTaskStatsTracker = new Task
+
+  override def processStats(stats: Seq[WriteTaskStats],
+      jobCommitTime: Long): Unit =
+    collected = stats.flatMap { case s: SliceTaskStats => s.files }
+
+  private final class Task extends WriteTaskStatsTracker {
+    private val open = scala.collection.mutable.LinkedHashMap.empty[String, File]
+    private var group: (String, String) = _
+    private var lastPath: String = _
+    private var last: File = _
+
+    override def newPartition(values: InternalRow): Unit =
+      group = (groupValue(values, 0), groupValue(values, 1))
+
+    override def newFile(path: String): Unit =
+      open(path) = new File(group)
+
+    override def newRow(path: String, row: InternalRow): Unit = {
+      if (!(path eq lastPath)) { last = open(path); lastPath = path }
+      last.add(row)
+    }
+
+    override def closeFile(path: String): Unit = {
+      val p = new Path(path)
+      open(path).sizeBytes =
+        p.getFileSystem(hadoopConf.value).getFileStatus(p).getLen
+    }
+
+    override def getFinalStats(taskCommitTime: Long): WriteTaskStats =
+      SliceTaskStats(open.toSeq.map { case (path, f) => f.result(path) })
   }
 
-  private def dirValue(dirName: String): String = {
-    val v = dirName.substring(dirName.indexOf('=') + 1)
-    java.net.URLDecoder.decode(v, "UTF-8")
+  private final class File(group: (String, String)) {
+    private var rows = 0L
+    private var fresh = 0L
+    var sizeBytes = 0L
+    private val accs = cols.map(new Acc(_))
+
+    def add(row: InternalRow): Unit = {
+      rows += 1
+      if (!row.isNullAt(commitTimeAt) &&
+          row.getUTF8String(commitTimeAt) == tsUtf8) fresh += 1
+      var i = 0
+      while (i < accs.length) { accs(i).add(row); i += 1 }
+    }
+
+    /** `path` is the task's file; its last three components (the two
+      * group directories and the file name) are its place under the
+      * write's output dir once the job commits. */
+    def result(path: String): ((String, String), SliceFiles.Written) = {
+      val p = new Path(path)
+      val rel = s"${p.getParent.getParent.getName}/${p.getParent.getName}/" +
+        p.getName
+      group -> SliceFiles.Written(rel, rows, fresh,
+        accs.map(a => a.c.name -> a.result(rows)).toMap, sizeBytes)
+    }
   }
+
+  private final class Acc(val c: Col) {
+    private val ord = PhysicalDataType.ordering(c.dt)
+    private var min: Any = null
+    private var max: Any = null
+    private var nulls = 0L
+    // exact unscaled sum: a Long while it fits, the overflow carried here
+    private var sumL = 0L
+    private var sumCarry = java.math.BigInteger.ZERO
+    private val bloom =
+      if (c.bloom) Bloom.empty(bloomBits, Bloom.DefaultHashes) else null
+
+    def add(row: InternalRow): Unit =
+      if (row.isNullAt(c.ordinal)) nulls += 1
+      else {
+        val v = row.get(c.ordinal, c.dt)
+        if (min == null || ord.lt(v, min)) min = InternalRow.copyValue(v)
+        if (max == null || ord.gt(v, max)) max = InternalRow.copyValue(v)
+        if (c.sum.isDefined) addSum(v)
+        if (bloom != null) Bloom.add(bloom, v match {
+          case s: UTF8String => s
+          case _ => c.render.eval(InternalRow(v)).asInstanceOf[UTF8String]
+        })
+      }
+
+    private def addSum(v: Any): Unit = v match {
+      case d: Decimal if d.precision > Decimal.MAX_LONG_DIGITS =>
+        sumCarry = sumCarry.add(d.toJavaBigDecimal.unscaledValue)
+      case d: Decimal => addLong(d.toUnscaledLong)
+      case n: java.lang.Number => addLong(n.longValue)
+    }
+
+    private def addLong(x: Long): Unit = {
+      val r = sumL + x
+      if (((sumL ^ r) & (x ^ r)) < 0) {
+        sumCarry = sumCarry.add(java.math.BigInteger.valueOf(sumL))
+          .add(java.math.BigInteger.valueOf(x))
+        sumL = 0L
+      } else sumL = r
+    }
+
+    private def str(e: Expression, v: Any): String =
+      e.eval(InternalRow(v)).toString
+
+    def result(rows: Long): ColStat = ColStat(
+      min = Option(min).map(str(c.render, _)),
+      max = Option(max).map(str(c.render, _)),
+      nulls = Some(nulls),
+      bloom = Option(bloom).map(Bloom.encode),
+      sum = c.sum.filter(_ => nulls < rows).flatMap { case (scale, r) =>
+        val exact = new java.math.BigDecimal(
+          sumCarry.add(java.math.BigInteger.valueOf(sumL)), scale)
+        val d = Decimal(exact)
+        // Spark's sum rule: null on overflow, or an error under ANSI
+        if (d.changePrecision(38, scale)) Some(str(r, d))
+        else if (ansi) throw new ArithmeticException(
+          s"sum of ${c.name} overflows decimal(38, $scale)")
+        else None
+      })
+  }
+}
+
+private[write] object SliceStats {
+  /** A tracked column: its ordinal in the written row, type, string
+    * rendering, (scale, rendering) of its decimal(38) sum when summed,
+    * and whether it carries a bloom. */
+  final case class Col(name: String, ordinal: Int, dt: DataType,
+      render: Expression, sum: Option[(Int, Expression)], bloom: Boolean)
+
+  /** A partition value as the writer names its directory. */
+  def groupValue(values: InternalRow, i: Int): String =
+    if (values.isNullAt(i)) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+    else {
+      val v = values.getUTF8String(i).toString
+      if (v.isEmpty) ExternalCatalogUtils.DEFAULT_PARTITION_NAME else v
+    }
 }

@@ -196,8 +196,9 @@ abstract class TableWriter private[write] (
     writtenFids.toSeq.sorted
   }
 
-  /** One distributed job writing a slice file per (partition, file group)
-    * of `data`; the record key is always in the stats index. */
+  /** One write execution producing a slice file per (partition, file
+    * group) of `data`, with each file's counts and column stats; the
+    * record key is always in the stats index. */
   protected def writeSlices(data: DataFrame, ts: String,
       suffix: String = ".parquet", sortBy: Seq[Column] = Seq.empty,
       extraStats: Seq[String] = Seq.empty)

@@ -1,10 +1,16 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.internal.io.FileCommitProtocol
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileFormatWriter,
+  V1WriteCommand, V1WritesUtils, WriteJobStatsTracker}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 
 /** Re-export of the `private[sql]` V1-streaming-fallback table hook: a
   * DSv2 Table implementing this resolves `readStream.table(...)` /
@@ -54,6 +60,22 @@ object Bridge {
     org.apache.spark.sql.internal.connector.PredicateUtils.toV1(ps)
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `df.write.partitionBy(partitionBy: _*).parquet(path)` with extra
+    * write stats `trackers`: the same planned write (sort on the partition
+    * columns unless `df` already orders by them, empty-string partition
+    * values written as nulls, the write's SQL metrics) in one SQL
+    * execution, with the trackers handed to `FileFormatWriter.write`
+    * beside Spark's basic one. `options` are parquet write options. */
+  def writeParquet(df: DataFrame, path: String, partitionBy: Seq[String],
+      options: Map[String, String],
+      trackers: Seq[WriteJobStatsTracker]): Unit = {
+    val query = df.queryExecution.analyzed
+    ofRows(df.sparkSession, ParquetWriteCommand(query, path,
+      partitionBy.map(c => query.output.find(_.name == c).getOrElse(
+        throw new IllegalArgumentException(s"no column $c to partition by"))),
+      options, trackers, query.output.map(_.name)))
+  }
 
   /** Tag a batch plan's rows as a streaming micro-batch — the V1
     * Source.getBatch contract (the same internalCreateDataFrame path
@@ -153,4 +175,39 @@ object Bridge {
     s.internalCreateDataFrame(df.queryExecution.toRdd.map(_.copy()),
       df.schema, isStreaming = false)
   }
+}
+
+/** The write command behind [[Bridge.writeParquet]]: a plain partitioned
+  * parquet write (what `InsertIntoHadoopFsRelationCommand` runs for a new
+  * path) whose `FileFormatWriter.write` also carries the caller's stats
+  * trackers. */
+private[graft] case class ParquetWriteCommand(
+    query: LogicalPlan,
+    outputPath: String,
+    partitionColumns: Seq[Attribute],
+    options: Map[String, String],
+    trackers: Seq[WriteJobStatsTracker],
+    outputColumnNames: Seq[String]) extends V1WriteCommand {
+
+  override val fileFormat: FileFormat = new ParquetFileFormat
+  override def staticPartitions: Map[String, String] = Map.empty
+  override def bucketSpec: Option[BucketSpec] = None
+  override def requiredOrdering: Seq[SortOrder] =
+    V1WritesUtils.getSortOrder(outputColumns, partitionColumns, bucketSpec,
+      options)
+
+  override def run(spark: classic.SparkSession, child: SparkPlan): Seq[Row] = {
+    val hadoopConf = spark.sessionState.newHadoopConfWithOptions(options)
+    val committer = FileCommitProtocol.instantiate(
+      spark.sessionState.conf.fileCommitProtocolClass,
+      jobId = java.util.UUID.randomUUID().toString, outputPath = outputPath)
+    FileFormatWriter.write(spark, child, fileFormat, committer,
+      FileFormatWriter.OutputSpec(outputPath, Map.empty, outputColumns),
+      hadoopConf, partitionColumns, bucketSpec,
+      basicWriteJobStatsTracker(hadoopConf) +: trackers, options)
+    Seq.empty
+  }
+
+  override protected def withNewChildInternal(
+      newChild: LogicalPlan): ParquetWriteCommand = copy(query = newChild)
 }
