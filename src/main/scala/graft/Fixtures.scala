@@ -61,13 +61,15 @@ object Fixtures {
   }
 
   // A cached table is reusable only if it has all n commits AND was built
-  // by a schema-recording writer (r5) AND a column-stats-recording writer
-  // (r7) AND a bucket-recording writer (r7 tail) — stale tables from an
-  // earlier build would silently exercise the legacy footer-merge path /
-  // skip-free / bucket-prune-free planning.
+  // by a schema-recording writer (r5; readers refuse a table without) AND a
+  // column-stats-recording writer (r7) AND a bucket-recording writer (r7
+  // tail) — stale tables from an earlier build are rebuilt, never read, and
+  // would otherwise exercise skip-free / bucket-prune-free planning.
   private def complete(spark: SparkSession, dir: String, n: Int): Boolean = {
     val tl = Timeline(spark.sessionState.newHadoopConf(), dir)
-    tl.completedInstants().size == n && tl.latestSchemaJson(None).nonEmpty &&
+    def recordsSchema = try tl.schema(None).nonEmpty
+      catch { case _: IllegalStateException => false }
+    tl.completedInstants().size == n && recordsSchema &&
       tl.recordedExtraAsOf("buckets", None).nonEmpty &&
       tl.completedInstants().headOption.exists(i =>
         tl.metadata(i.ts).allStats.forall { case (_, s) =>

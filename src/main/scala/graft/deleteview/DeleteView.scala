@@ -87,8 +87,11 @@ final class DeleteView private[graft] (spark: SparkSession,
 
   /** Build the delete-view plan (no materialization). COW rewrites diff the
     * previous slice against the new one; MOR delta commits semi-join the
-    * pre-commit state against the commit's delete markers. */
+    * pre-commit state against the commit's delete markers. A commit that
+    * deleted nothing is zero rows of the table schema as of `ts`. */
   private[graft] def plan(): DataFrame = {
+    if (meta.totalRecordsDeleted == 0)
+      return graft.read.SnapshotReader.emptyLike(spark, timeline, Some(ts))
     val deleted =
       if (timeline.instantAt(ts).exists(_.action == Instant.DeltaCommitAction))
         planMorDelta()
@@ -105,14 +108,12 @@ final class DeleteView private[graft] (spark: SparkSession,
     val pairs = slicePairs
     val oldPaths = pairs.map(_._1)
     val newPaths = pairs.flatMap(_._2)
-    // Schema of the PRE-commit slices from commit metadata (O(1); the
-    // newest commit before `ts` bounds every old slice's schema under
-    // add-only evolution) — footer merge only for pre-schema tables.
-    val prevTs = timeline.completedInstants().map(_.ts).filter(_ < ts)
-      .lastOption
-    val old = prevTs.flatMap(p => timeline.latestSchemaJson(Some(p)))
-      .fold(graft.read.SnapshotReader.evolvedRead(spark, oldPaths))(
-        sj => graft.read.SnapshotReader.schemaRead(spark, oldPaths, sj))
+    // Schema of the PRE-commit slices from commit metadata (the newest
+    // commit before `ts` bounds every old slice's schema under add-only
+    // evolution; a deleting commit always has one before it)
+    val prevTs = timeline.completedInstants().map(_.ts).filter(_ < ts).last
+    val old = graft.read.SnapshotReader.schemaRead(spark, oldPaths,
+      timeline.tableSchema(Some(prevTs)))
     if (newPaths.isEmpty) old // every touched group was fully emptied
     else {
       // Probe side projects ONLY the key column → Parquet column pruning;
@@ -162,14 +163,7 @@ final class DeleteView private[graft] (spark: SparkSession,
   /** Materialize (if needed) and serve the delete view
     * (ref: getDeleteDataset, DeleteSupport.java:89-96). */
   def toDF(): DataFrame = {
-    if (meta.totalRecordsDeleted == 0) {
-      // Commit deleted nothing: empty view with the table schema.
-      val slices = timeline.latestSlices(Some(ts))
-      val anyPath = slices.values.flatMap(_.relPath).headOption
-        .map(rp => s"$basePath/$rp")
-        .getOrElse(throw new IllegalStateException(s"empty table $basePath"))
-      return spark.read.parquet(anyPath).limit(0)
-    }
+    if (meta.totalRecordsDeleted == 0) return plan() // nothing to cache
     if (!cacheValid()) {
       plan().write.mode(SaveMode.Overwrite).parquet(cachePath)
       val n = spark.read.parquet(cachePath).count()

@@ -2,6 +2,7 @@ package graft.format
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.types.StructType
 import java.nio.charset.StandardCharsets
 import scala.collection.mutable
 
@@ -342,31 +343,28 @@ final class Timeline(val fs: FileSystem, val basePath: Path,
     * computed BEFORE the lock, from the writer's (possibly stale) timeline
     * memo — a conflict-FREE concurrent writer that added a different column
     * would otherwise be erased from the "newest schema is a superset of
-    * every live slice" invariant the readers rely on
-    * ([[latestSchemaJson]]). Inside the lock the since-completed instants
-    * are known exactly: append any of their fields this commit's schema is
-    * missing (this commit's fields keep their order and types — it is the
-    * newest writer; add-only evolution makes same-name/different-type
-    * divergence a caller contract violation, resolved newest-wins). The MOR
-    * delete marker stays delta-only, as in `TableWriter.monotonicSchema`.
+    * every live slice" invariant the readers rely on ([[schema]]). Inside
+    * the lock the since-completed instants are known exactly: append any of
+    * their fields this commit's schema is missing (this commit's fields
+    * keep their order and types — it is the newest writer; add-only
+    * evolution makes same-name/different-type divergence a caller contract
+    * violation, resolved newest-wins). The MOR delete marker stays
+    * delta-only, as in `TableWriter.monotonicSchema`.
     * Only reached on the disjoint-group append path: create/overwrite
     * (`conflictOnAny`) has already thrown when anything completed since. */
   private def reUnionSchema(meta: CommitMetadata, since: Seq[Instant],
-      action: String): CommitMetadata = meta.schemaJson match {
-    case Some(sj) if since.nonEmpty =>
-      def parse(j: String) = org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      val mine = parse(sj)
+      action: String): CommitMetadata = meta.schema match {
+    case Some(mine) if since.nonEmpty =>
       val mineNames = mine.fieldNames.toSet
-      val missing = since.flatMap(i => metadata(i.ts).schemaJson)
-        .flatMap(parse(_).fields)
+      val missing = since.flatMap(i => metadata(i.ts).schema)
+        .flatMap(_.fields)
         .filterNot(f => mineNames(f.name) ||
           (action != Instant.DeltaCommitAction && f.name == MetaCols.IsDeleted))
         .groupBy(_.name).toSeq.sortBy(_._1)
         .map(_._2.last.copy(nullable = true))
       if (missing.isEmpty) meta
       else meta.copy(schemaJson = Some(MetaCols.canonicalSchema(
-        org.apache.spark.sql.types.StructType(mine.fields ++ missing)).json))
+        StructType(mine.fields ++ missing)).json))
     case _ => meta
   }
 
@@ -586,19 +584,34 @@ final class Timeline(val fs: FileSystem, val basePath: Path,
       .map(i => metadata(i.ts).extra.get(key))
       .collectFirst { case Some(v) => v }
 
-  /** Writer schema (StructType JSON) of the NEWEST completed instant ≤
-    * `asOf` (optionally restricted to one action) that recorded one — O(1)
-    * metadata resolution of the table schema: under add-only evolution the
-    * newest writer schema is a superset of every older slice's, so readers
-    * can skip per-file footer sampling entirely. None when no commit in
-    * range carries a schema (pre-schema-recording tables). */
-  def latestSchemaJson(asOf: Option[String],
-      action: Option[String] = None): Option[String] =
+  /** THE table-schema resolver: the writer schema recorded by the NEWEST
+    * completed instant ≤ `asOf` (of `action`, when given), parsed once per
+    * decoded commit. Every commit records its writer schema, and the
+    * writers keep the newest record a superset of every live file's
+    * (add-only evolution, `TableWriter.monotonicSchema`), so this one
+    * record is the table schema — no reader samples file footers. None
+    * only when no such instant exists; a commit that recorded no schema is
+    * refused with one [[IllegalStateException]] naming the table. */
+  def schema(asOf: Option[String],
+      action: Option[String] = None): Option[StructType] =
     completedInstants().reverseIterator
-      .filter(i => asOf.forall(i.ts <= _))
-      .filter(i => action.forall(_ == i.action))
-      .map(i => metadata(i.ts).schemaJson)
-      .collectFirst { case Some(s) => s }
+      .find(i => asOf.forall(i.ts <= _) && action.forall(_ == i.action))
+      .map(i => metadata(i.ts).schema.getOrElse(
+        throw new IllegalStateException(s"graft table at $basePath has a " +
+          "commit that records no schema (schemaJson); readers take the " +
+          "table schema from commit metadata only. Rewrite the table with " +
+          "an overwrite commit (TableWriter.overwriteTable or INSERT " +
+          "OVERWRITE), which records its schema.")))
+
+  /** The reader-facing table schema as of `asOf`: [[schema]] minus the MOR
+    * delete marker (an implementation detail of delta files, never served
+    * to users). Throws on a table with no commit ≤ `asOf`. */
+  def tableSchema(asOf: Option[String]): StructType = {
+    val writer = schema(asOf).getOrElse(throw new IllegalArgumentException(
+      s"empty table (no commits) at $basePath" +
+        asOf.fold("")(t => s" as of $t")))
+    StructType(writer.filterNot(_.name == MetaCols.IsDeleted))
+  }
 
   /** The latest file slice per file group as of `asOf` (inclusive); all
     * completed commits when `asOf` is None. Pure metadata walk: base-writing

@@ -80,12 +80,12 @@ final case class ColStat(
   *
   * @param schemaJson Spark StructType JSON of the data files THIS commit
   *                   wrote (Hudi records the same thing as an Avro schema in
-  *                   its commit extraMetadata). Lets readers resolve the
-  *                   table schema from O(1) timeline metadata instead of
-  *                   footer-sampling every planned file — under add-only
-  *                   evolution the newest writer schema is a superset of all
-  *                   older slices'. None on commits written before schema
-  *                   recording (readers fall back to footer merge).
+  *                   its commit extraMetadata). Every graft writer records
+  *                   it, and readers take the table schema from it alone
+  *                   ([[Timeline.schema]]) — under add-only evolution the
+  *                   newest writer schema is a superset of all older
+  *                   slices'. Optional in the codec only: readers refuse a
+  *                   commit that lacks it.
   * @param extra      free-form writer annotations (Hudi's commit
   *                   `extraMetadata` analog). Used by the streaming format
   *                   sink to record the micro-batch id each commit belongs
@@ -110,6 +110,12 @@ final case class CommitMetadata(
     * DeleteView.java:132-142). */
   def statByFileId(fileId: String): Option[(String, WriteStat)] =
     allStats.find(_._2.fileId == fileId)
+
+  /** [[schemaJson]] parsed, once per decoded commit (a [[Timeline]]
+    * decodes each commit once). */
+  lazy val schema: Option[org.apache.spark.sql.types.StructType] =
+    schemaJson.map(org.apache.spark.sql.types.DataType.fromJson(_)
+      .asInstanceOf[org.apache.spark.sql.types.StructType])
 }
 
 /** A commit lost the optimistic-concurrency race: an instant that COMPLETED

@@ -107,10 +107,12 @@ object TextAnalysis {
     // null text folds to the single empty-string gram there, so W
     // coalesces to 1 and the kernel reports 1 distinct (permille 0,
     // exactly the HOF result).
+    // the repeat count is widened to long before the per-mille scaling:
+    // past ~2.15M repeated windows the int product overflows
     val toks = tokens(text)
     val w = coalesce(greatest(size(toks) - n, lit(0)) + lit(1), lit(1))
-    floor((w - graft.functions.NgramRepetition.distinctShortTail(toks, n)) *
-      lit(1000) / w).cast("long")
+    floor((w - graft.functions.NgramRepetition.distinctShortTail(toks, n))
+      .cast("long") * lit(1000L) / w).cast("long")
   }
 
   /** REFERENCE form of [[dupNgramPermille]] (the pure-`functions._` HOF
@@ -120,8 +122,8 @@ object TextAnalysis {
     val grams = transform(
       sequence(lit(0), greatest(size(toks) - n, lit(0))),
       i => concat_ws(" ", slice(toks, i + 1, lit(n))))
-    floor((size(grams) - size(array_distinct(grams))) * lit(1000) /
-      size(grams)).cast("long")
+    floor((size(grams) - size(array_distinct(grams))).cast("long") *
+      lit(1000L) / size(grams)).cast("long")
   }
 
   /** PII pattern → replacement token, applied in this order. Patterns stay

@@ -5,6 +5,7 @@ import graft.format.{Instant, MetaCols, Timeline}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Change-data feed: every row-level change committed in
   * `(fromExclusive, toInclusive]`, tagged `_change_type` ∈
@@ -48,6 +49,13 @@ object ChangeFeed {
   val ChangeType = "_change_type"
   val ChangeCommitTs = "_change_commit_ts"
 
+  /** The feed's schema for a range ending at `toInclusive`: the table
+    * schema as of `to`, then the two change tags. */
+  private[graft] def schema(tl: Timeline, toInclusive: String): StructType =
+    StructType(tl.tableSchema(Some(toInclusive)).fields.toSeq :+
+      StructField(ChangeType, StringType) :+
+      StructField(ChangeCommitTs, StringType))
+
   /** @param preImages also emit an `update_preimage` row for every
     *                  `update` — the updated key's full PRE-commit row,
     *                  stamped with the updating commit (Delta CDF's
@@ -87,20 +95,9 @@ object ChangeFeed {
 
     val unioned = frames
       .reduceOption(_.unionByName(_, allowMissingColumns = true))
-      .getOrElse {
-        // empty range: the table payload schema as of `to`, zero rows
-        val base = tl.latestSchemaJson(Some(toInclusive))
-          .map(SnapshotReader.tableSchemaFromJson)
-          .getOrElse(SnapshotReader
-            .emptyLike(spark, basePath, tl).schema)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(base.fields.toSeq :+
-            org.apache.spark.sql.types.StructField(ChangeType,
-              org.apache.spark.sql.types.StringType) :+
-            org.apache.spark.sql.types.StructField(ChangeCommitTs,
-              org.apache.spark.sql.types.StringType)))
-      }
+      .getOrElse(spark.createDataFrame( // empty range: zero rows
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        schema(tl, toInclusive)))
     // canonical column order: meta + payload first, CDC tags last
     val cols = unioned.columns.filterNot(c =>
       c == ChangeType || c == ChangeCommitTs) :+ ChangeType :+ ChangeCommitTs
@@ -119,9 +116,8 @@ object ChangeFeed {
     val paths = meta.allStats.flatMap(_._2.path).map(rp => s"$basePath/$rp")
     if (paths.isEmpty) return None
 
-    val raw = meta.schemaJson
-      .fold(SnapshotReader.evolvedRead(spark, paths))(
-        SnapshotReader.schemaRead(spark, paths, _))
+    // the commit's own writer schema (the newest instant ≤ its ts is it)
+    val raw = SnapshotReader.schemaRead(spark, paths, tl.schema(Some(i.ts)).get)
 
     // EVENT-TIME ordering tables (precombine): a stale delta row LOSES the
     // merge and changes nothing — it must not surface as a change either.

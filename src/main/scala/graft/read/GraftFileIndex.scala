@@ -363,7 +363,8 @@ object GraftFileIndex {
     * computed through the SAME Catalyst hash the writers' `fileIdCol`
     * evaluates ([[graft.write.CowWriter]]), so driver-side routing is
     * bit-identical to the distributed write (identity pinned in
-    * BucketPruningSpec). */
+    * BucketPruningSpec). The one bucket arithmetic of every reader: file
+    * pruning here, the catalog's `bucket` function and runtime filters. */
   private[graft] def keyBucket(key: UTF8String, n: Int): Int = {
     val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function
       .hash(key, StringType, 42L)

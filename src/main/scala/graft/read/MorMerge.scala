@@ -423,19 +423,10 @@ object MorMerge {
     * planning runs no job and execution no exchange. Output schema: the
     * delta writer schema minus the delete marker, all fields nullable (the
     * shape the snapshot's union expects). Writer schemas come from commit
-    * metadata; pre-schema-recording tables sample the files' footers
-    * instead. */
+    * metadata: `base` is None on a table with no base commit yet. */
   private[read] def frame(spark: SparkSession, basePath: String,
       slices: Seq[FileSlice], tl: Timeline, asOf: Option[String],
-      baseSchema: Option[StructType],
-      deltaSchema: Option[StructType]): DataFrame = {
-    def abs(rel: String) = s"$basePath/$rel"
-    def sampled(paths: Seq[String]): Option[StructType] =
-      if (paths.isEmpty) None
-      else Some(SnapshotReader.evolvedRead(spark, paths).schema)
-    val base = baseSchema.orElse(sampled(slices.flatMap(_.relPath).map(abs)))
-    val delta = deltaSchema.getOrElse(sampled(
-      slices.flatMap(_.deltas.map(d => abs(d.relPath)))).get)
+      base: Option[StructType], delta: StructType): DataFrame = {
     val out = StructType(delta.filterNot(_.name == MetaCols.IsDeleted)
       .map(_.copy(nullable = true)))
     val allCols = (base.toSeq.flatMap(_.fieldNames) ++ delta.fieldNames).toSet

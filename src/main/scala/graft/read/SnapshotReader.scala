@@ -3,6 +3,7 @@ package graft.read
 import graft.format._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Snapshot / time-travel reader over a versioned table (COW or MOR).
   *
@@ -31,37 +32,13 @@ object SnapshotReader {
   /** Standard Hudi delete-marker column carried by MOR delta files. */
   val IsDeleted: String = MetaCols.IsDeleted
 
-  /** Decode a recorded writer-schema JSON to the READER-facing table
-    * schema: the struct minus the MOR delete marker (an implementation
-    * detail of delta files, never served to users). One definition for
-    * every surface that resolves schemas from commit metadata. */
-  private[graft] def tableSchemaFromJson(sj: String)
-      : org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.DataType.fromJson(sj)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-        .filterNot(_.name == IsDeleted))
-
-  /** Multi-path parquet read that survives ADD-COLUMN schema evolution:
-    * `mergeSchema` unions the footers' schemas (files written before the
-    * column appeared read as null). Cost is driver-side footer sampling —
-    * only paid on PRE-schema-recording tables: commits now carry the writer
-    * schema ([[graft.format.CommitMetadata.schemaJson]]), so current-format
-    * reads resolve schema from O(1) timeline metadata via
-    * [[schemaRead]]/[[graft.format.Timeline.latestSchemaJson]] instead. */
-  private[graft] def evolvedRead(spark: SparkSession,
-      paths: Seq[String]): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(paths: _*)
-
-  /** Multi-path parquet read with a commit-metadata-resolved schema: no
-    * footer job at planning time (files written before an added column
-    * appeared still read as null — same evolution semantics as
-    * [[evolvedRead]], the schema superset just comes from the timeline). */
+  /** Multi-path parquet read with the table schema resolved from commit
+    * metadata ([[graft.format.Timeline.schema]]): no footer job at
+    * planning time, and files written before an added column appeared read
+    * it as null. */
   private[graft] def schemaRead(spark: SparkSession, paths: Seq[String],
-      schemaJson: String): DataFrame =
-    spark.read.schema(org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType])
-      .parquet(paths: _*)
+      schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(paths: _*)
 
   /** Snapshot (or time-travel, via `asOf`) read.
     *
@@ -108,52 +85,26 @@ object SnapshotReader {
       asOf.fold("")(t => s" as of $t") +
       (if (partitions.nonEmpty) s" partitions=${partitions.mkString(",")}"
        else ""))
-    val schemaJson =
-      if (slices.exists(_.deltas.nonEmpty)) timeline.latestSchemaJson(asOf)
-      else None
-    schemaJson match {
-      case Some(sj) => // outstanding deltas: lazy merge behind the relation
-        org.apache.spark.sql.graft.Bridge.ofRows(spark,
-          org.apache.spark.sql.execution.datasources.LogicalRelation(
-            new GraftMorRelation(spark, basePath, asOf,
-              tableSchemaFromJson(sj), presetPartitions = partitions,
-              initialTimeline = Some(timeline))))
-      case None => // delta-free (or legacy pre-schema table): direct plan
-        merge(spark, basePath, slices, Some(timeline), asOf)
-    }
+    if (slices.exists(_.deltas.nonEmpty)) // lazy merge behind the relation
+      org.apache.spark.sql.graft.Bridge.ofRows(spark,
+        org.apache.spark.sql.execution.datasources.LogicalRelation(
+          new GraftMorRelation(spark, basePath, asOf,
+            timeline.tableSchema(asOf), presetPartitions = partitions,
+            initialTimeline = Some(timeline))))
+    else merge(spark, basePath, slices, Some(timeline), asOf)
   }
 
-  /** Empty relation carrying the table's schema, for states where every
-    * file group is FILELESS (deletes emptied the whole table/slice set —
-    * a legal state: the groups' stats record `path = None`). The schema
-    * comes from the newest still-existing file any commit ever wrote
-    * (commit metadata records historical paths; prior slices survive until
-    * cleaned). Hudi parity: an emptied table reads as zero rows, not an
+  /** Zero rows of the table schema as of `asOf` — the one empty answer
+    * of every read surface: a state whose file groups are all FILELESS
+    * (deletes emptied them — a legal state: the groups' stats record
+    * `path = None`), an empty incremental range, a commit that deleted
+    * nothing. Hudi parity: an emptied table reads as zero rows, not an
     * error. */
-  private[read] def emptyLike(spark: SparkSession, basePath: String,
-      timeline: Timeline): DataFrame = {
-    val schema = timeline.latestSchemaJson(None) match {
-      // O(1): the newest commit's recorded writer schema (marker stripped
-      // below together with the footer-sampled fallback's)
-      case Some(sj) => org.apache.spark.sql.types.DataType.fromJson(sj)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      case None => // pre-schema-recording table: sample a historical footer
-        val conf = spark.sessionState.newHadoopConf()
-        val fs = new org.apache.hadoop.fs.Path(basePath).getFileSystem(conf)
-        val sample = timeline.completedInstants().reverse.iterator
-          .flatMap(i => timeline.metadata(i.ts).allStats.flatMap(_._2.path))
-          .map(rel => s"$basePath/$rel")
-          .find(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-          .getOrElse(throw new IllegalStateException(
-            s"empty slice set at $basePath and no historical file to derive " +
-              "a schema from (all prior slices cleaned)"))
-        evolvedRead(spark, Seq(sample)).schema
-    }
+  private[graft] def emptyLike(spark: SparkSession, timeline: Timeline,
+      asOf: Option[String]): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(
-        schema.filterNot(_.name == IsDeleted)))
-  }
+      timeline.tableSchema(asOf))
 
   /** The table's pinned bucket count as of `asOf` — an overwrite may
     * re-declare the count, but it also supersedes every older slice, so
@@ -167,10 +118,9 @@ object SnapshotReader {
 
   /** Merge a concrete set of file slices into their current-state rows.
     *
-    * Schema resolution is O(1) timeline metadata when the commits recorded
-    * their writer schema (newest base-commit schema for base files, newest
-    * deltacommit schema for deltas, each ≤ `asOf`) — no footer job is ever
-    * planned; pre-schema-recording tables fall back to footer sampling.
+    * Schemas come from commit metadata ([[Timeline.schema]]: the newest
+    * base-commit schema for base files, the newest deltacommit schema for
+    * deltas, each ≤ `asOf`) — no footer job is ever planned.
     *
     * Base-only groups mount through the partition-pruning
     * [[GraftFileIndex]] relation, so predicates on
@@ -195,44 +145,36 @@ object SnapshotReader {
     val basePaths = baseOnly.flatMap(_.relPath).map(abs)
     lazy val tl = timeline.getOrElse(
       Timeline(spark.sessionState.newHadoopConf(), basePath))
-    def schemaOf(action: String) = tl.latestSchemaJson(asOf, Some(action))
-      .map(org.apache.spark.sql.types.DataType.fromJson(_)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    lazy val baseSchema = schemaOf(Instant.CommitAction)
+    // a base file implies a base commit ≤ asOf, a delta file a deltacommit
+    lazy val baseSchema = tl.schema(asOf, Some(Instant.CommitAction))
 
     val plainScan =
       if (basePaths.isEmpty) None
-      else baseSchema match {
-        case Some(schema) =>
-          val partFiles = baseOnly.filter(_.relPath.nonEmpty)
-            .groupBy(_.partitionPath).toSeq.sortBy(_._1)
-            .map { case (p, ss) => p -> ss.flatMap(_.relPath).map(abs) }
-          Some(GraftFileIndex.scan(spark, basePath, partFiles, schema,
-            // column-stats skipping index: metadata-recorded per-file
-            // min/max ranges let pushed data filters drop files at
-            // listing time
-            fileStats = tl.fileColStats(baseOnly),
-            // bucket-index pruning: the pinned count of the era every
-            // planned slice was written under (creation/overwrite ≤ asOf)
-            buckets = recordedBuckets(tl, asOf)))
-        case None => Some(evolvedRead(spark, basePaths))
+      else {
+        val partFiles = baseOnly.filter(_.relPath.nonEmpty)
+          .groupBy(_.partitionPath).toSeq.sortBy(_._1)
+          .map { case (p, ss) => p -> ss.flatMap(_.relPath).map(abs) }
+        Some(GraftFileIndex.scan(spark, basePath, partFiles, baseSchema.get,
+          // column-stats skipping index: metadata-recorded per-file
+          // min/max ranges let pushed data filters drop files at
+          // listing time
+          fileStats = tl.fileColStats(baseOnly),
+          // bucket-index pruning: the pinned count of the era every
+          // planned slice was written under (creation/overwrite ≤ asOf)
+          buckets = recordedBuckets(tl, asOf)))
       }
 
     val merged =
       if (withDeltas.isEmpty) None
       else Some(MorMerge.frame(spark, basePath, withDeltas, tl, asOf,
-        baseSchema, schemaOf(Instant.DeltaCommitAction)))
+        baseSchema, tl.schema(asOf, Some(Instant.DeltaCommitAction)).get))
 
     (plainScan.toSeq ++ merged.toSeq)
       .reduceOption(_.unionByName(_, allowMissingColumns = true))
       .map(df => keyFilter.fold(df)(kf => df.join(
         broadcast(kf.toDF(MetaCols.RecordKey)), Seq(MetaCols.RecordKey),
         "left_semi")))
-      .getOrElse {
-        // every slice is fileless (deletes emptied the groups): a legal
-        // empty state, not an error
-        emptyLike(spark, basePath, tl)
-      }
+      .getOrElse(emptyLike(spark, tl, asOf)) // every slice is fileless
   }
 }
 
@@ -272,35 +214,9 @@ object IncrementalReader {
       col(MetaCols.CommitTime) <= toInclusive
     if (touched.isEmpty) {
       // Degenerate empty range, metadata-first: the snapshot is never
-      // planned. The schema comes from the newest commit ≤ `to` that
-      // recorded one (O(1) metadata; newest writer schema is the current
-      // table schema under add-only evolution) — falling back to ONE
-      // slice's footers on pre-schema-recording tables — and the result is
-      // an empty relation, so no data file enters the plan (inputFiles is
-      // empty; asserted in MorSpec).
-      timeline.latestSchemaJson(Some(toInclusive)) match {
-        case Some(sj) =>
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            SnapshotReader.tableSchemaFromJson(sj))
-        case None =>
-          val slices = timeline.latestSlices(Some(toInclusive)).values
-          require(slices.nonEmpty,
-            s"empty table (no slices) at $basePath as of $toInclusive")
-          val newest = slices.maxBy(sl =>
-            (sl.deltas.map(_.commitTs) :+ sl.commitTs).max)
-          val paths = (newest.relPath.toSeq ++ newest.deltas.map(_.relPath))
-            .map(rp => s"$basePath/$rp")
-          if (paths.isEmpty) // newest slice fileless (deletes emptied it)
-            SnapshotReader.emptyLike(spark, basePath, timeline)
-          else {
-            val schema = org.apache.spark.sql.types.StructType(
-              SnapshotReader.evolvedRead(spark, paths).schema
-                .filterNot(_.name == SnapshotReader.IsDeleted))
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-          }
-      }
+      // planned and no data file enters the plan (inputFiles is empty;
+      // asserted in MorSpec).
+      SnapshotReader.emptyLike(spark, timeline, Some(toInclusive))
     } else {
       val slices = timeline.latestSlices(Some(toInclusive))
         .collect { case (fid, slice) if touched(fid) => slice }.toSeq

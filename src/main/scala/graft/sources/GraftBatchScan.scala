@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.format.{FileSlice, MetaCols}
+import graft.read.GraftFileIndex
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, Literal, Pmod, Predicate => CatalystPredicate, TimeZoneAwareExpression, UnsafeProjection, XxHash64}
@@ -74,9 +75,10 @@ private[sources] trait GraftScanPruning extends SupportsRuntimeFiltering {
 
   protected def spark: SparkSession = SparkSession.active
 
-  /** bucket id a writer stamped into a fileId (`<partition>-<bucket>`). */
+  /** bucket id a writer stamped into a fileId (`<partition>-<bucket>`);
+    * planning declines any slice without one before a scan exists. */
   protected def bucketOf(sl: FileSlice): Int =
-    sl.fileId.substring(sl.fileId.lastIndexOf('-') + 1).toInt
+    GraftFileIndex.bucketOfFileId(sl.fileId, buckets).get
 
   // runtime filters narrow these; None = no constraint (superset-safe)
   @volatile private var allowedPartitions: Option[Set[String]] = None
@@ -140,7 +142,7 @@ private[sources] trait GraftScanPruning extends SupportsRuntimeFiltering {
     def and[A](cur: Option[Set[A]], s: Set[A]): Option[Set[A]] =
       Some(cur.fold(s)(_ intersect s))
     def bucketIn(r: String): Int =
-      GraftBucketFunction.bucketOf(UTF8String.fromString(r), buckets)
+      GraftFileIndex.keyBucket(UTF8String.fromString(r), buckets)
     filters.foreach {
       case In(a, vs) if resolver(a, partCol) =>
         val rendered = vs.filter(_ != null).map(renderAs(_, partCol))
@@ -495,14 +497,6 @@ private[graft] object GraftBucketFunction extends UnboundFunction {
     require(renderable(kt), s"unsupported bucket key type $kt")
     GraftBucketBound(kt)
   }
-
-  /** Executor-grade bucket arithmetic shared with runtime filtering. */
-  private[graft] def bucketOf(key: UTF8String, n: Int): Int = {
-    val h = org.apache.spark.sql.catalyst.expressions.XXH64
-      .hashUnsafeBytes(key.getBaseObject, key.getBaseOffset,
-        key.numBytes(), 42L)
-    (((h % n) + n) % n).toInt
-  }
 }
 
 private[graft] final case class GraftBucketBound(keyType: DataType)
@@ -524,6 +518,6 @@ private[graft] final case class GraftBucketBound(keyType: DataType)
       case other => throw new IllegalStateException(
         s"unbindable bucket key type $other")
     }
-    GraftBucketFunction.bucketOf(rendered, n)
+    GraftFileIndex.keyBucket(rendered, n)
   }
 }

@@ -563,13 +563,7 @@ private[graft] final class GraftV2Table(ident: String, val path: String,
 
   /** Full table schema (meta columns + payload) from commit metadata —
     * present from the very first commit (creation or first insert). */
-  private[sources] def fullSchema: StructType =
-    timeline.latestSchemaJson(asOf).map(SnapshotReader.tableSchemaFromJson)
-      .getOrElse(throw new IllegalStateException(
-        s"graft table at $path records no schema" +
-          asOf.fold("")(t => s" as of $t") +
-          " (pre-schema-recording table; read it via " +
-          """spark.read.format("graft"))"""))
+  private[sources] def fullSchema: StructType = timeline.tableSchema(asOf)
 
   override def name(): String = ident
 
@@ -984,8 +978,7 @@ private[graft] final class GraftV2Table(ident: String, val path: String,
     * table serves zero rows of the recorded schema. */
   private[graft] def snapshotDf(spark: SparkSession): DataFrame =
     if (timeline.latestSlices(asOf).isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(fullSchema.filterNot(_.name == MetaCols.IsDeleted)))
+      SnapshotReader.emptyLike(spark, timeline, asOf)
     else SnapshotReader.read(spark, path, asOf)
 
   override def newScanBuilder(
@@ -1300,9 +1293,8 @@ private final class GraftScanBuilder(table: GraftV2Table,
     if (!GraftBucketFunction.renderable(keyField.dataType))
       return Left(s"key column `$key` of type " +
         s"${keyField.dataType.simpleString} has no bucket rendering")
-    slices.find(sl => !(sl.fileId.lastIndexOf('-') > 0 &&
-      sl.fileId.drop(sl.fileId.lastIndexOf('-') + 1).toIntOption
-        .exists(b => b >= 0 && b < buckets)))
+    slices.find(sl => GraftFileIndex.bucketOfFileId(sl.fileId, buckets)
+        .isEmpty)
       .foreach(sl => return Left(s"file group ${sl.fileId} carries no " +
         s"bucket id below $buckets"))
     if (slices.forall(s => s.deltas.isEmpty && s.relPath.nonEmpty)) {
@@ -1338,17 +1330,11 @@ private final class GraftScanBuilder(table: GraftV2Table,
     val live = slices.filter(s => s.relPath.nonEmpty || s.deltas.nonEmpty)
     val anyBase = live.exists(_.relPath.nonEmpty)
     val anyDelta = live.exists(_.deltas.nonEmpty)
-    def parse(j: String): StructType =
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[StructType]
-    val baseSchema = tl.latestSchemaJson(table.asOfOpt,
-      Some(graft.format.Instant.CommitAction)).map(parse)
-    val deltaSchema = tl.latestSchemaJson(table.asOfOpt,
-      Some(graft.format.Instant.DeltaCommitAction)).map(parse)
-    if (anyBase && baseSchema.isEmpty)
-      return Left("base files predate schema recording")
-    if (anyDelta && deltaSchema.isEmpty)
-      return Left("delta files predate schema recording")
+    // a base file implies a base commit ≤ asOf, a delta file a deltacommit
+    val baseSchema =
+      tl.schema(table.asOfOpt, Some(graft.format.Instant.CommitAction))
+    val deltaSchema =
+      tl.schema(table.asOfOpt, Some(graft.format.Instant.DeltaCommitAction))
     if (anyDelta && !deltaSchema.exists(_.fields.exists(
         _.name == MetaCols.IsDeleted)))
       return Left("delta schema records no delete marker")

@@ -340,9 +340,7 @@ private[graft] object GraftDml {
       tl.metadata(i.ts).operationType == "INSERT_OVERWRITE_TABLE")
       .map(_.ts).getOrElse("")
     instants.filter(_.ts >= floor)
-      .flatMap(i => tl.metadata(i.ts).schemaJson)
-      .flatMap(sj => org.apache.spark.sql.types.DataType.fromJson(sj)
-        .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames)
+      .flatMap(i => tl.metadata(i.ts).schema.toSeq.flatMap(_.fieldNames))
       .toSet
   }
 
@@ -770,14 +768,10 @@ private[graft] object SchemaEvolution {
   def addColumns(spark: SparkSession, basePath: String,
       cols: Seq[org.apache.spark.sql.types.StructField],
       what: String): Unit = {
-    import org.apache.spark.sql.types.{DataType, StructType}
+    import org.apache.spark.sql.types.StructType
     val resolver = spark.sessionState.conf.resolver
     val tl = Timeline(spark.sessionState.newHadoopConf(), basePath)
-    val current = tl.latestSchemaJson(None).map(sj =>
-      DataType.fromJson(sj).asInstanceOf[StructType]).getOrElse(
-      throw new IllegalStateException(
-        s"table $what has no commit-recorded schema to evolve " +
-          "(empty or pre-schema-recording table)"))
+    val current = tl.tableSchema(None)
     val historical = GraftDml.historicalColumnNames(tl)
     cols.foreach { f =>
       require(!MetaCols.all.contains(f.name) && f.name != MetaCols.IsDeleted,
@@ -799,10 +793,10 @@ private[graft] object SchemaEvolution {
     require(cols.map(_.name.toLowerCase(java.util.Locale.ROOT)).distinct.size == cols.size,
       "duplicate column names in ADD COLUMNS")
     // base ("commit") action: the recorded schema keeps the MOR delete
-    // marker off, like every base-file commit (delta commits re-add it)
+    // marker off (the table schema has none), like every base-file commit
+    // (delta commits re-add it)
     val evolved = MetaCols.canonicalSchema(StructType(
-      current.fields.filterNot(_.name == MetaCols.IsDeleted) ++
-        cols.map(_.copy(nullable = true))))
+      current.fields ++ cols.map(_.copy(nullable = true))))
     publishEvolution(tl, evolved)
   }
 
@@ -813,16 +807,12 @@ private[graft] object SchemaEvolution {
   def dropColumns(spark: SparkSession, basePath: String,
       names: Seq[String], ifExists: Boolean,
       declared: Map[String, String], what: String): Seq[String] = {
-    import org.apache.spark.sql.types.{DataType, StructType}
+    import org.apache.spark.sql.types.StructType
     val resolver = spark.sessionState.conf.resolver
     val tl = Timeline(spark.sessionState.newHadoopConf(), basePath)
-    val current = tl.latestSchemaJson(None).map(sj =>
-      DataType.fromJson(sj).asInstanceOf[StructType]).getOrElse(
-      throw new IllegalStateException(
-        s"table $what has no commit-recorded schema to evolve " +
-          "(empty or pre-schema-recording table)"))
+    val current = tl.tableSchema(None)
     val protectedCols: Map[String, String] = (
-      (MetaCols.all :+ MetaCols.IsDeleted).map(_ -> "engine meta column") ++
+      MetaCols.all.map(_ -> "engine meta column") ++
       WriteContract.namedColumns(tl, declared)).toMap
     val present = names.filter { n =>
       val exists = current.fields.exists(e => resolver(e.name, n))
@@ -839,8 +829,7 @@ private[graft] object SchemaEvolution {
     if (present.isEmpty) return Seq.empty
     val dropped = present.toSet
     val narrowed = MetaCols.canonicalSchema(StructType(
-      current.fields.filterNot(f => f.name == MetaCols.IsDeleted ||
-        dropped.exists(d => resolver(f.name, d)))))
+      current.fields.filterNot(f => dropped.exists(d => resolver(f.name, d)))))
     publishEvolution(tl, narrowed)
     present
   }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider, StreamSinkProvider, StreamSourceProvider}
 import org.apache.spark.sql.streaming.OutputMode
-import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** `spark.readStream.format("graft").load(tablePath)` — the table
   * change-stream as a FIRST-CLASS Structured Streaming source (registered
@@ -130,29 +130,15 @@ final class GraftSourceProvider extends StreamSourceProvider
       val to = parameters.getOrElse("to",
         timeline.completedInstants().lastOption.map(_.ts).getOrElse(
           throw new IllegalArgumentException(s"empty table at $basePath")))
+      // Schemas from commit metadata (the writers keep the newest record a
+      // superset of every live file's schema, and the range plan's columns
+      // equal that union minus the delete marker)
       if (cdc)
         return new graft.read.GraftChangeFeedRelation(spark, basePath,
-          from, to,
-          timeline.latestSchemaJson(Some(to))
-            .map(sj => org.apache.spark.sql.types.StructType(
-              SnapshotReader.tableSchemaFromJson(sj).fields.toSeq :+
-                org.apache.spark.sql.types.StructField(
-                  graft.read.ChangeFeed.ChangeType, StringType) :+
-                org.apache.spark.sql.types.StructField(
-                  graft.read.ChangeFeed.ChangeCommitTs, StringType)))
-            .getOrElse(graft.read.ChangeFeed
-              .read(spark, basePath, from, to, cdcPre).schema),
+          from, to, graft.read.ChangeFeed.schema(timeline, to),
           preImages = cdcPre)
-      // Schema from commit metadata when recorded (O(1) — the writers keep
-      // the newest record a superset of every live file's schema, and the
-      // range plan's columns equal that union minus the delete marker);
-      // pre-schema-recording tables fall back to planning the range once.
-      val schema = timeline.latestSchemaJson(Some(to))
-        .map(SnapshotReader.tableSchemaFromJson)
-        .getOrElse(graft.read.IncrementalReader
-          .read(spark, basePath, from, to).schema)
       return new graft.read.GraftIncrementalRelation(spark, basePath,
-        from, to, schema)
+        from, to, timeline.tableSchema(Some(to)))
     }
     val listed = timeline.latestSlices(asOf).values.toSeq
     val slices =
@@ -163,14 +149,9 @@ final class GraftSourceProvider extends StreamSourceProvider
         .groupBy(_.partitionPath).toSeq.sortBy(_._1)
         .map { case (p, ss) => p -> ss.flatMap(_.relPath)
           .map(rp => s"$basePath/$rp") }
-      // Schema from commit metadata (O(1)); pre-schema-recording tables fall
-      // back to a footer merge over the planned slices — same policy as
-      // SnapshotReader.
+      // base-file schema from commit metadata, as in SnapshotReader
       val schema = timeline
-        .latestSchemaJson(asOf, Some(graft.format.Instant.CommitAction))
-        .map(sj => DataType.fromJson(sj).asInstanceOf[StructType])
-        .getOrElse(SnapshotReader.evolvedRead(spark,
-          partFiles.flatMap(_._2)).schema)
+        .schema(asOf, Some(graft.format.Instant.CommitAction)).get
       GraftFileIndex.relation(spark, basePath, partFiles, schema,
         fileStats = timeline.fileColStats(slices),
         buckets = SnapshotReader.recordedBuckets(timeline, asOf))
@@ -180,10 +161,7 @@ final class GraftSourceProvider extends StreamSourceProvider
       // partition-column-last layout the delta-free FileIndex relation
       // reports, so a catalog table's stored schema stays valid as the
       // table moves between delta-free and delta-carrying states.
-      val resolved = timeline.latestSchemaJson(asOf)
-        .map(SnapshotReader.tableSchemaFromJson)
-        .getOrElse(StructType(SnapshotReader
-          .merge(spark, basePath, slices, Some(timeline), asOf).schema))
+      val resolved = timeline.tableSchema(asOf)
       val schema = StructType(
         resolved.filterNot(_.name == graft.format.MetaCols.PartitionPath) ++
           resolved.filter(_.name == graft.format.MetaCols.PartitionPath))
@@ -246,16 +224,10 @@ object GraftSourceProvider {
     parameters.getOrElse("path", throw new IllegalArgumentException(
       "graft source requires a table path: .load(tablePath)"))
 
-  /** Current table schema (without the MOR delete-marker column): O(1)
-    * from commit metadata when recorded, else the snapshot's resolved
-    * schema. */
-  private def tableSchema(spark: SparkSession, basePath: String): StructType = {
-    val tl = Timeline(spark.sessionState.newHadoopConf(), basePath)
-    tl.latestSchemaJson(None) match {
-      case Some(sj) => SnapshotReader.tableSchemaFromJson(sj)
-      case None => SnapshotReader.read(spark, basePath).schema
-    }
-  }
+  /** Current table schema (without the MOR delete-marker column), from
+    * commit metadata. */
+  private def tableSchema(spark: SparkSession, basePath: String): StructType =
+    Timeline(spark.sessionState.newHadoopConf(), basePath).tableSchema(None)
 }
 
 /** V1 streaming offset carrying a commit timestamp (json == the ts).

@@ -95,12 +95,10 @@ final class CowWriter private[write] (
       .map(rp => s"$basePath/$rp").toSeq
 
     // Old-slice schema from commit metadata (newest commit bounds every
-    // current slice under add-only evolution); footer merge only for
-    // pre-schema-recording tables.
+    // current slice under add-only evolution).
     val old = if (oldPaths.nonEmpty)
-      Some(timeline.latestSchemaJson(None)
-        .fold(graft.read.SnapshotReader.evolvedRead(spark, oldPaths))(
-          sj => graft.read.SnapshotReader.schemaRead(spark, oldPaths, sj)))
+      Some(graft.read.SnapshotReader.schemaRead(spark, oldPaths,
+        timeline.tableSchema(None)))
     else None
 
     // Keys being replaced or removed in this commit.
@@ -187,9 +185,13 @@ final class CowWriter private[write] (
 
     // Groups fully emptied by deletes produce no file: a 0-row stat keeps
     // their prevCommit + numDeletes visible to the delete view.
+    // Inserts: the group's fresh rows that replaced no old row (with
+    // precombine, the fresh winners that had no old row).
     saveCommit(ts, groupStats(written, prevByFid,
         superseded = prevByFid.values.filterNot(s => writtenByFid.contains(s.fileId)),
-        deleted = deletedPerFid, updated = updatedPerFid),
+        deleted = deletedPerFid, updated = updatedPerFid,
+        inserted = (fid, _) =>
+          writtenByFid(fid).fresh - updatedPerFid.getOrElse(fid, 0L)),
       totalDeleted = deletedPerFid.values.sum,
       op = "UPSERT", schema = newData.drop(FidCol).schema, extra = extra,
       readPoint = readPoint)

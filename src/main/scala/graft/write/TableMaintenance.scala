@@ -126,13 +126,11 @@ object TableMaintenance {
       totalRecordsDeleted = 0,
       totalRecordsWritten = 0,
       // carry the schema forward: a later schema resolution landing on
-      // this commit must not lose the table shape. Strip the MOR delete
+      // this commit must not lose the table shape. Without the MOR delete
       // marker — the newest recorder may be a DELTACOMMIT whose schema
       // carries it, and re-recording it under a base action would leak
       // the marker column into every later base-side schema resolution.
-      schemaJson = tl.latestSchemaJson(None).map(sj =>
-        MetaCols.canonicalSchema(
-          graft.read.SnapshotReader.tableSchemaFromJson(sj)).json)),
+      schemaJson = Some(MetaCols.canonicalSchema(tl.tableSchema(None)).json)),
       readPoint = readPoint)
     live.map(_.fileId).sorted
   }

@@ -301,11 +301,9 @@ object TableWriter {
     * outside the add-only contract. */
   private[graft] def monotonicSchema(timeline: Timeline, action: String,
       schema: StructType): StructType = {
-    val unioned = timeline.latestSchemaJson(None) match {
+    val unioned = timeline.schema(None) match {
       case None => schema
-      case Some(prevJson) =>
-        val prev = org.apache.spark.sql.types.DataType.fromJson(prevJson)
-          .asInstanceOf[StructType]
+      case Some(prev) =>
         val newNames = schema.fieldNames.toSet
         StructType(schema.fields ++ prev.fields.filterNot(f => newNames(f.name)))
     }

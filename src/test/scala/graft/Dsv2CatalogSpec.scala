@@ -731,7 +731,7 @@ class Dsv2CatalogSpec extends SparkSpec {
       val viaFn = GraftBucketBound(org.apache.spark.sql.types.LongType)
         .produceResult(org.apache.spark.sql.catalyst.InternalRow(8, k))
       assert(viaFn.toLong == expected, s"key $k")
-      val viaHelper = GraftBucketFunction.bucketOf(
+      val viaHelper = graft.read.GraftFileIndex.keyBucket(
         org.apache.spark.unsafe.types.UTF8String.fromString(k.toString), 8)
       assert(viaHelper.toLong == expected, s"helper key $k")
     }

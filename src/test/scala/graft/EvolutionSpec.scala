@@ -126,10 +126,8 @@ class EvolutionSpec extends SparkSpec {
       .isEmpty, "narrow-frame rows must read the added column as null")
     // the recorded deltacommit schema is the running union
     val tl = graft.format.Timeline(spark.sessionState.newHadoopConf(), dir)
-    val recorded = org.apache.spark.sql.types.DataType
-      .fromJson(tl.latestSchemaJson(None,
-        Some(graft.format.Instant.DeltaCommitAction)).get)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val recorded =
+      tl.schema(None, Some(graft.format.Instant.DeltaCommitAction)).get
     assert(recorded.fieldNames.contains("o_note"))
   }
 }

@@ -142,7 +142,7 @@ class FileIndexSpec extends SparkSpec {
       val schemaPathJobs = jobs
       // positive control on the same files: the footer-merge path DOES run
       // a job, so a silent-listener false negative can't pass
-      SnapshotReader.evolvedRead(spark, snap.inputFiles.toSeq)
+      graft.read.WindowMergeReference.evolvedRead(spark, snap.inputFiles.toSeq)
       Thread.sleep(800)
       assert(jobs > schemaPathJobs,
         "control failed: mergeSchema read should run a footer job")
@@ -527,9 +527,7 @@ class FileIndexSpec extends SparkSpec {
     val dir = cowTable("orders_schema_order")
     val tl = graft.format.Timeline(
       spark.sessionState.newHadoopConf(), dir)
-    val recorded = org.apache.spark.sql.types.DataType
-      .fromJson(tl.latestSchemaJson(None).get)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val recorded = tl.schema(None).get
     assert(SnapshotReader.read(spark, dir).schema == recorded)
   }
 
@@ -581,7 +579,7 @@ class FileIndexSpec extends SparkSpec {
     // exactly the raw scan's rows
     val median = orders.agg(min($"o_totalprice")).head().getDouble(0) + 1000
     val sel = snap.filter($"o_totalprice" < median)
-    val raw = SnapshotReader.evolvedRead(spark, snap.inputFiles.toSeq)
+    val raw = graft.read.WindowMergeReference.evolvedRead(spark, snap.inputFiles.toSeq)
       .filter($"o_totalprice" < median)
     assert(sel.count() == raw.count())
   }
@@ -608,7 +606,7 @@ class FileIndexSpec extends SparkSpec {
     // selective decimal range is skipping-correct vs the raw scan
     val cut = new java.math.BigDecimal("1000.00")
     val sel = snap.filter($"o_price_dec" < cut)
-    val raw = SnapshotReader.evolvedRead(spark, snap.inputFiles.toSeq)
+    val raw = graft.read.WindowMergeReference.evolvedRead(spark, snap.inputFiles.toSeq)
       .filter($"o_price_dec" < cut)
     assert(sel.count() == raw.count() && plannedFiles(sel) <= total)
     // every file recorded an exact decimal sum; their fold == the scan sum

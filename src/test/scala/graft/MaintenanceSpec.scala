@@ -249,9 +249,7 @@ class MaintenanceSpec extends SparkSpec {
       col("o_orderkey"), col("o_orderstatus"), C3)
 
     val tl = Timeline(spark.sessionState.newHadoopConf(), dir)
-    val recorded = org.apache.spark.sql.types.DataType
-      .fromJson(tl.latestSchemaJson(None).get)
-      .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSet
+    val recorded = tl.schema(None).get.fieldNames.toSet
     assert(recorded.contains("col_a") && recorded.contains("col_b"),
       s"newest recorded schema lost a concurrent column: $recorded")
 

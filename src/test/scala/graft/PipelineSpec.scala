@@ -1141,6 +1141,21 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("dupNgramPermille: a doc of ~2.2M repeated tokens scores the " +
+      "exact integer per-mille (no int overflow past 2^31 / 1000)") {
+    val tokensN = 2200000
+    val doc = Seq.fill(tokensN)("ab").mkString(" ")
+    val df = Seq((1L, doc)).toDF("id", "text")
+    for (n <- Seq(1, 3)) {
+      val w = (tokensN - n + 1).toLong // windows; all but one repeats
+      val expected = (w - 1L) * 1000L / w
+      assert((w - 1L) * 1000L > Int.MaxValue)
+      val got = df.select(TextAnalysis.dupNgramPermille($"text", n))
+        .head().getLong(0)
+      assert(got == expected, s"n=$n")
+    }
+  }
+
   test("bigramCoverage: full / zero / single-token docs score " +
       "1000 / 0 / 0 permille") {
     val ref = Seq((100L, "a b c")).toDF("id", "txt")

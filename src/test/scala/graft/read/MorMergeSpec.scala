@@ -108,12 +108,11 @@ class MorMergeSpec extends SparkSpec {
     val t = tl(dir)
     val slices = t.latestSlices(None)
     val schema = org.apache.spark.sql.types.StructType(
-      SnapshotReader.tableSchemaFromJson(t.latestSchemaJson(None).get)
-        .fields :+ org.apache.spark.sql.types.StructField(
-          MetaCols.IsDeleted, org.apache.spark.sql.types.BooleanType))
+      t.tableSchema(None).fields :+ org.apache.spark.sql.types.StructField(
+        MetaCols.IsDeleted, org.apache.spark.sql.types.BooleanType))
     val fs = t.fs
     val stats = ids.groupBy { i =>
-      s"p${i % 2}-" + graft.sources.GraftBucketFunction.bucketOf(
+      s"p${i % 2}-" + GraftFileIndex.keyBucket(
         org.apache.spark.unsafe.types.UTF8String.fromString(i.toString),
         buckets)
     }.toSeq.map { case (fid, gids) =>

@@ -22,6 +22,14 @@ object WindowMergeReference {
 
   private val IsDeleted = MetaCols.IsDeleted
 
+  /** Multi-path parquet read whose schema comes from the files' footers
+    * (`mergeSchema` unions them; files written before a column appeared
+    * read it as null) — the footer-sampling CONTROL for specs that pin
+    * the engine's commit-metadata schema resolution: it plans a footer
+    * job, and it shares no schema code with the engine. */
+  def evolvedRead(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.option("mergeSchema", "true").parquet(paths: _*)
+
   /** The reference snapshot (or time travel via `asOf`) of a whole table:
     * its latest slices merged by [[merge]]. */
   def read(spark: SparkSession, basePath: String,
@@ -37,24 +45,24 @@ object WindowMergeReference {
       tl: Timeline, asOf: Option[String]): DataFrame = {
     def abs(rel: String) = s"$basePath/$rel"
     val (withDeltas, baseOnly) = slices.partition(_.deltas.nonEmpty)
-    val baseSchema = tl.latestSchemaJson(asOf, Some(Instant.CommitAction))
-    val deltaSchema =
-      tl.latestSchemaJson(asOf, Some(Instant.DeltaCommitAction))
-    def readWith(schema: Option[String], paths: Seq[String]): DataFrame =
-      schema.fold(SnapshotReader.evolvedRead(spark, paths))(
-        SnapshotReader.schemaRead(spark, paths, _))
+    // writer schemas from commit metadata: a base file implies a base
+    // commit ≤ asOf, a delta file a deltacommit
+    def readWith(action: String, paths: Seq[String]): DataFrame =
+      SnapshotReader.schemaRead(spark, paths, tl.schema(asOf, Some(action)).get)
 
     val basePaths = baseOnly.flatMap(_.relPath).map(abs)
     val plain =
-      if (basePaths.isEmpty) None else Some(readWith(baseSchema, basePaths))
+      if (basePaths.isEmpty) None
+      else Some(readWith(Instant.CommitAction, basePaths))
 
     val merged = if (withDeltas.isEmpty) None else {
       val mergeBase = withDeltas.flatMap(_.relPath).map(abs)
-      val deltas = readWith(deltaSchema,
+      val deltas = readWith(Instant.DeltaCommitAction,
         withDeltas.flatMap(_.deltas.map(d => abs(d.relPath))))
       val cols = deltas.columns.filter(_ != IsDeleted)
       val all = ((if (mergeBase.nonEmpty)
-        Seq(readWith(baseSchema, mergeBase).withColumn(IsDeleted, lit(false)))
+        Seq(readWith(Instant.CommitAction, mergeBase)
+          .withColumn(IsDeleted, lit(false)))
         else Seq.empty) :+ deltas)
         .reduce(_.unionByName(_, allowMissingColumns = true))
       val pcCol = tl.recordedExtraAsOf(
@@ -83,6 +91,6 @@ object WindowMergeReference {
 
     (plain.toSeq ++ merged.toSeq)
       .reduceOption(_.unionByName(_, allowMissingColumns = true))
-      .getOrElse(SnapshotReader.emptyLike(spark, basePath, tl))
+      .getOrElse(SnapshotReader.emptyLike(spark, tl, asOf))
   }
 }

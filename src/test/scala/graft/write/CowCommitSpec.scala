@@ -26,13 +26,16 @@ class CowCommitSpec extends SparkSpec {
   private def rows(keys: Seq[Long], v: Long, ver: Long = 0L): DataFrame =
     keys.map(k => (k, s"p${k % 3}", v, ver)).toDF("k", "p", "v", "ver")
 
-  /** Per-group (deleted, updated) as the existence join counts them over
-    * the pre-commit snapshot's touched groups, with delete-wins: a key in
-    * both frames is a delete only. With `precombine`, an update counts
-    * only when the incoming row won (it carries the commit's ts after). */
+  /** Per-group (deleted, updated, inserted) as the existence join counts
+    * them over the pre-commit snapshot's touched groups, with delete-wins:
+    * a key in both frames is a delete only. With `precombine`, an update
+    * counts only when the incoming row won (it carries the commit's ts
+    * after). Inserted: the rows the commit stamped that replaced no old
+    * row. */
   private def joinForm(before: DataFrame, after: DataFrame,
       ups: Option[DataFrame], dels: Option[DataFrame], ts: String,
-      precombine: Boolean): (Map[String, Long], Map[String, Long]) = {
+      precombine: Boolean)
+      : (Map[String, Long], Map[String, Long], Map[String, Long]) = {
     def keyed(df: DataFrame) = df.select(keyCol.cast("string").as("key"),
       fidOf(keyCol.cast("string"), partCol.cast("string")).as("fid"))
     val touched = (ups.toSeq ++ dels).map(keyed(_).select("fid"))
@@ -55,7 +58,12 @@ class CowCommitSpec extends SparkSpec {
         .join(uk, Seq("key"), "left_semi")
         .join(old, Seq("key")))
     }
-    (deleted, updated)
+    val stamped = countBy(after.filter(col(MetaCols.CommitTime) === ts)
+      .select(fidOf(col(MetaCols.RecordKey), col(MetaCols.PartitionPath))
+        .as("fid")))
+    val inserted = stamped.map { case (fid, n) =>
+      fid -> (n - updated.getOrElse(fid, 0L)) }
+    (deleted, updated, inserted)
   }
 
   /** Run one commit and pin every group's counters, the commit total and
@@ -66,7 +74,7 @@ class CowCommitSpec extends SparkSpec {
     val before = SnapshotReader.read(spark, dir).localCheckpoint(true)
     w.commit(ups, dels, keyCol, partCol, ts)
     val after = SnapshotReader.read(spark, dir)
-    val (deleted, updated) =
+    val (deleted, updated, inserted) =
       joinForm(before, after, ups, dels, ts, precombine)
     val meta = Timeline(spark.sessionState.newHadoopConf(), dir).metadata(ts)
     val stats = meta.allStats.map(_._2)
@@ -75,9 +83,11 @@ class CowCommitSpec extends SparkSpec {
         s"$ts numDeletes of ${s.fileId}")
       assert(s.numUpdateWrites == updated.getOrElse(s.fileId, 0L),
         s"$ts numUpdateWrites of ${s.fileId}")
-      assert(s.numInserts == 0L, s"$ts numInserts of ${s.fileId}")
+      assert(s.numInserts == inserted.getOrElse(s.fileId, 0L),
+        s"$ts numInserts of ${s.fileId}")
     }
-    assert((deleted.keySet ++ updated.keySet).subsetOf(stats.map(_.fileId).toSet))
+    assert((deleted.keySet ++ updated.keySet ++ inserted.keySet)
+      .subsetOf(stats.map(_.fileId).toSet))
     assert(meta.totalRecordsDeleted == deleted.values.sum, s"$ts total")
     assert(DeleteView(spark, dir, ts).toDF().count() ==
       meta.totalRecordsDeleted, s"$ts delete view")

@@ -25,11 +25,12 @@ class SliceStatsSpec extends SparkSpec {
     "f" -> FloatType, "db" -> DoubleType, "dc" -> DecimalType(10, 2),
     "dw" -> DecimalType(38, 2))
   // partition values Spark escapes ('%', '=') or must not unescape ('+',
-  // ' '); non-ASCII ones are left out — they need a UTF-8 JVM file-name
-  // encoding, which Spark's own writer needs as well
-  private val Parts: Seq[String] = Seq("p0", "p1", "x%y=z", "a+b c", null, "")
+  // ' '), and a non-ASCII one (its path needs a UTF-8 JVM file-name
+  // encoding, which the build sets for forked runs)
+  private val Parts: Seq[String] =
+    Seq("p0", "p1", "x%y=z", "a+b c", "ü-β", null, "")
 
-  /** Seeded rows over six partition values (incl. null and empty) × 2
+  /** Seeded rows over seven partition values (incl. null and empty) × 2
     * file groups, every payload column nullable; one group's `dc` is all
     * null. ONE input partition, so the aggregate's partial and final
     * steps see each group's rows in the order the write does (equal
@@ -112,9 +113,9 @@ class SliceStatsSpec extends SparkSpec {
         }
         assert(written.values.map(_.rows).sum == 600)
         // the partition values in play: escaped characters, '+', a space,
-        // and null/empty under the default name
+        // non-ASCII, and null/empty under the default name
         assert(written.keySet.map(_._1) == Set("p0", "p1", "x%y=z", "a+b c",
-          ExternalCatalogUtils.DEFAULT_PARTITION_NAME))
+          "ü-β", ExternalCatalogUtils.DEFAULT_PARTITION_NAME))
         assert(written.values.exists(_.colStats("dc").sum.isEmpty))
       } finally data.unpersist()
     }
