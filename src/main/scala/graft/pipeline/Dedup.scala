@@ -12,10 +12,13 @@ import org.apache.spark.sql.functions._
   *  - Exact dedup is a single hash shuffle on the fingerprint (Spark 4's
   *    WindowGroupLimit pushes the rank-1 filter below the exchange, so only
   *    one candidate row per (fingerprint, partition) shuffles).
-  *  - MinHash signatures come from ONE native aggregate (MinHashAgg:
-  *    map-side partial aggregation, elementwise-min merge; one shuffle
-  *    keyed by doc id) — NOT nested array lambdas, which Catalyst's
-  *    CollapseProject would re-inline once per band and evaluate interpreted.
+  *  - MinHash signatures are computed in-row from each document's shingle
+  *    array (MinHashSignature: one native expression, projected once per
+  *    doc next to the shingles) — no explode, no doc-id shuffle, no join
+  *    back onto the shingle rows. The band slices read the projected
+  *    `sig` attribute; an expression referenced by all 16 slices (nested
+  *    array lambdas were) would be re-inlined once per band by
+  *    CollapseProject and evaluated 16 times.
   *  - Fuzzy variants never do an O(n²) cross join: candidates come from
   *    LSH band buckets (MinHash), 15-bit chunk buckets (SimHash —
   *    pigeonhole guarantees FULL recall for hamming ≤ 3 over 4 chunks),
@@ -78,37 +81,13 @@ object Dedup {
       materialize: Boolean = true): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val rows = numHashes / bands
-    // ONE shingle pass feeds both the signature aggregate and the
+    // ONE shingle pass feeds both the in-row signature and the
     // array-based verification (scoped persist, released on materialize —
     // spill-safe MEMORY_AND_DISK; at 100 TB this is the standard
     // "shingle once" stage).
-    val base = graft.util.ParallelScan.widen(
-        df.select(id.cast("long").as("id"), text.as("__text"))
-          .filter(col("__text").isNotNull))
-      .select(col("id"), shingleSet(col("__text"), n).as("shingles"))
-    // explode_outer: see the object-level note above minhashPairs.
-    val exploded = base.select(col("id"),
-      explode_outer(col("shingles")).as("sh"))
-    // ONE native aggregate yields the whole signature array (map-side
-    // combined, elementwise-min merge — see functions.MinHashAgg).
-    // r17 note: persisting `sigs` for the bucket self-join was tried and
-    // MEASURED SLOWER (+0.15 s isolated) — ReuseExchange already shares
-    // the signature aggregate's exchange between the self-join's sides,
-    // so the cache only added a materialization barrier. Left unpinned.
-    val sigs = exploded.groupBy("id").agg(
-      graft.functions.MinHashAgg.minhashSig(col("sh"), numHashes).as("sig"))
+    val base = signed(df, id, text, n, numHashes)
     scoped(materialize, base) {
-      // Band bucket = hash of the band's signature slice (+ band index). The
-      // sig is an aggregate OUTPUT attribute, so the per-band slices reference
-      // the materialized array — nothing recomputes upstream work per band.
-      val bandCols = (0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          xxhash64(slice(col("sig"), b * rows + 1, rows), lit(b)).as("bucket"))
-      }
-      val bucketed = sigs
-        .select(col("id"), explode(array(bandCols: _*)).as("bc"))
-        .select(col("id"), col("bc.band").as("band"), col("bc.bucket").as("bucket"))
-      val cand = candidatePairs(bucketed, maxBucket)
+      val cand = candidatePairs(banded(base, bands, rows), maxBucket)
       verifyJaccardArrays(cand, base, thresholdPermille)
     }
   }
@@ -1478,76 +1457,86 @@ object Dedup {
       numBuckets: Int = 8, ts: Option[String] = None): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val rows = numHashes / bands
-    val base = graft.util.ParallelScan.widen(
-        batch.select(id.cast("long").as("id"), text.as("__text"))
-          .filter(col("__text").isNotNull))
-      .select(col("id"), shingleSet(col("__text"), n).as("shingles"))
-    base.persist()
-    try {
-      // explode_outer: see the object-level note above minhashPairs.
-      val exploded = base.select(col("id"),
-        explode_outer(col("shingles")).as("sh"))
-      val sigs = exploded.groupBy("id").agg(
-        graft.functions.MinHashAgg.minhashSig(col("sh"), numHashes).as("sig"))
-      val batchRows = sigs.join(base, "id") // (id, sig, shingles)
-      val tl = graft.format.Timeline(
-        spark.sessionState.newHadoopConf(), indexDir)
-      // catalog read (r13): the index is MOR; the catalog's native MOR
-      // scan merges per file group inside the task (the same reader every
-      // snapshot read uses), so reading history costs input bytes only
-      val seen =
-        if (tl.completedInstants().nonEmpty)
-          graft.util.CatalogMount.table(spark, indexDir)
-            .select(col("doc_id").as("id"), col("sig"), col("shingles"))
-        else batchRows.select("id", "sig", "shingles").limit(0)
-      // One banding pass over seen ∪ batch — identical bucket function to
-      // minhashPairs, so candidate recall is the same measured property.
-      val union = batchRows.select("id", "sig", "shingles").unionByName(seen)
-      val bandCols = (0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          xxhash64(slice(col("sig"), b * rows + 1, rows), lit(b)).as("bucket"))
-      }
-      val bucketed = union
-        .select(col("id"), explode(array(bandCols: _*)).as("bc"))
-        .select(col("id"), col("bc.band").as("band"),
-          col("bc.bucket").as("bucket"))
-      // Only pairs whose LATER member is in this batch matter (history is
-      // already settled); the earlier member may be anywhere.
-      val cand = candidatePairs(bucketed, maxBucket)
-        .join(batchRows.select(col("id").as("id_b")), Seq("id_b"), "leftsemi")
-      val drops = verifyJaccardArrays(cand,
-          union.select(col("id"), col("shingles")), thresholdPermille)
-        .select(col("id_b").as("__drop")).distinct()
-      // not materialized: the delete-free, counter-free delta append below
-      // reads its frame exactly once (its write measures the files itself)
-      val out = batchRows
-        .join(drops, col("id") === col("__drop"), "left")
-        .select(col("id").as("doc_id"), col("sig"), col("shingles"),
-          col("__drop").isNull.as("kept"))
-        .withColumn("pt", lit("all"))
-      // MOR + deltaCounters=off (r13): every batch's ids hash across all
-      // buckets, so COW appends rewrote the WHOLE index per batch and the
-      // exact-live-count existence join re-read it — this is an internal
-      // state table consumed by scans/joins, never metadata COUNT(*)
-      val writer = out.write.format("graft")
-        .option("key", "doc_id").option("partition", "pt")
-        .option("type", "mor")
-        .option("deltaCounters", "off")
-        .option("buckets", numBuckets.toString)
-        .mode(org.apache.spark.sql.SaveMode.Append)
-      ts.fold(writer)(t => writer.option("ts", t)).save(indexDir)
-    } finally base.unpersist(blocking = true)
+    // The batch is shingled and signed ONCE: (id, sig, shingles) is
+    // checkpointed eagerly, so the banding union, the id_b semi-join, the
+    // verification arrays and the written rows all read the same
+    // materialized blocks instead of re-planning the batch per consumer.
+    val batchRows = signed(batch, id, text, n, numHashes)
+      .localCheckpoint(eager = true)
+    val tl = graft.format.Timeline(
+      spark.sessionState.newHadoopConf(), indexDir)
+    // catalog read (r13): the index is MOR; the catalog's native MOR
+    // scan merges per file group inside the task (the same reader every
+    // snapshot read uses), so reading history costs input bytes only
+    val seen =
+      if (tl.completedInstants().nonEmpty)
+        graft.util.CatalogMount.table(spark, indexDir)
+          .select(col("doc_id").as("id"), col("sig"), col("shingles"))
+      else batchRows.limit(0)
+    // One banding pass over seen ∪ batch — identical bucket function to
+    // minhashPairs, so candidate recall is the same measured property.
+    val union = batchRows.unionByName(seen)
+    // Only pairs whose LATER member is in this batch matter (history is
+    // already settled); the earlier member may be anywhere.
+    val cand = candidatePairs(banded(union, bands, rows), maxBucket)
+      .join(batchRows.select(col("id").as("id_b")), Seq("id_b"), "leftsemi")
+    val drops = verifyJaccardArrays(cand,
+        union.select(col("id"), col("shingles")), thresholdPermille)
+      .select(col("id_b").as("__drop")).distinct()
+    // not materialized: the delete-free, counter-free delta append below
+    // reads its frame exactly once (its write measures the files itself)
+    val out = batchRows
+      .join(drops, col("id") === col("__drop"), "left")
+      .select(col("id").as("doc_id"), col("sig"), col("shingles"),
+        col("__drop").isNull.as("kept"))
+      .withColumn("pt", lit("all"))
+    // MOR + deltaCounters=off (r13): every batch's ids hash across all
+    // buckets, so COW appends rewrote the WHOLE index per batch and the
+    // exact-live-count existence join re-read it — this is an internal
+    // state table consumed by scans/joins, never metadata COUNT(*)
+    val writer = out.write.format("graft")
+      .option("key", "doc_id").option("partition", "pt")
+      .option("type", "mor")
+      .option("deltaCounters", "off")
+      .option("buckets", numBuckets.toString)
+      .mode(org.apache.spark.sql.SaveMode.Append)
+    ts.fold(writer)(t => writer.option("ts", t)).save(indexDir)
     graft.read.SnapshotReader.read(spark, indexDir)
   }
 
   // ---- shared internals ----
+
+  /** (id, sig, shingles) of every row with non-null text: the distinct
+    * shingle set and its in-row MinHash signature, projected once per doc
+    * (the band slices read `sig` as an attribute — see the object note). */
+  private def signed(df: DataFrame, id: Column, text: Column, n: Int,
+      numHashes: Int): DataFrame =
+    graft.util.ParallelScan.widen(
+        df.select(id.cast("long").as("id"), text.as("__text"))
+          .filter(col("__text").isNotNull))
+      .select(col("id"), shingleSet(col("__text"), n).as("shingles"))
+      .select(col("id"), graft.functions.MinHashSignature.of(
+        col("shingles"), numHashes).as("sig"), col("shingles"))
+
+  /** LSH band buckets (id, band, bucket) of an (id, sig) frame: bucket =
+    * hash of the band's `rows`-long signature slice, seeded by the band
+    * index. */
+  private def banded(sigs: DataFrame, bands: Int, rows: Int): DataFrame = {
+    val bandCols = (0 until bands).map { b =>
+      struct(lit(b).as("band"),
+        xxhash64(slice(col("sig"), b * rows + 1, rows), lit(b)).as("bucket"))
+    }
+    sigs.select(col("id"), explode(array(bandCols: _*)).as("bc"))
+      .select(col("id"), col("bc.band").as("band"),
+        col("bc.bucket").as("bucket"))
+  }
 
   /** Exact-Jaccard verification of candidate pairs against the per-doc
     * shingle ARRAYS (a doc-count-sized side — broadcast below the
     * autoBroadcast threshold, hash-shuffled by id beyond it), intersected
     * in-row: cost |cand|·O(sz). PPJoin's verify step — an exploded-stream
     * re-join would instead push |cand|·avg_sz ROWS through a shuffle. */
-  private def verifyJaccardArrays(cand: DataFrame, arrays: DataFrame,
+  private[graft] def verifyJaccardArrays(cand: DataFrame, arrays: DataFrame,
       thresholdPermille: Int): DataFrame =
     cand
       .join(arrays.select(col("id").as("id_a"), col("shingles").as("__sa")),

@@ -54,6 +54,22 @@ class PipelineSpec extends SparkSpec {
     assert(brute.exceptAll(lsh).isEmpty, "LSH missed a true pair")
   }
 
+  test("minhash LSH evaluates the in-row signature once per doc, in both " +
+    "materialize modes (no copy inlined into the band slices)") {
+    def sigCalls(plan: String): Int =
+      "minhash_signature\\(".r.findAllMatchIn(plan).size
+    val lazyPlan = Dedup.minhashPairs(docs, $"doc_id", $"text",
+      materialize = false).queryExecution.optimizedPlan.toString
+    assert(sigCalls(lazyPlan) == 1, lazyPlan)
+    // materialize = true checkpoints: read the inner plan via PlanProbe
+    val inner = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    graft.util.PlanProbe.install((_, plan) => inner.add(plan))
+    try Dedup.minhashPairs(docs, $"doc_id", $"text").count()
+    finally graft.util.PlanProbe.uninstall()
+    assert(inner.size == 1)
+    assert(sigCalls(inner.peek) == 1, inner.peek)
+  }
+
   test("prefix-filtered ngram pairs == full inverted index (lossless filter)") {
     for (t <- Seq(200, 500, 800)) {
       val pref = Dedup.ngramJaccardPairs(docs, $"doc_id", $"text",
