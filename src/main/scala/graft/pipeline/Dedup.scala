@@ -52,14 +52,14 @@ object Dedup {
     graft.functions.TextHashes.distinctShingleHashes(
       TextAnalysis.tokens(text), n)
 
-  /** Why every shingle explode below is `explode_outer`, NOT `explode`:
-    * plain explode makes Catalyst infer a `size(shingles) > 0` filter
-    * (InferFiltersFromGenerate) whose predicate embeds the whole shingle
-    * expression, and predicate pushdown then evaluates it BELOW the widening
-    * exchange — i.e. the full shingling of every document runs serially
-    * inside the scan task, per action. Shingle arrays are never empty (even
-    * "" yields one shingle), so outer explode is row-identical and dodges
-    * the inferred filter. */
+  // Why every shingle explode below is `explode_outer`, NOT `explode`:
+  // plain explode makes Catalyst infer a `size(shingles) > 0` filter
+  // (InferFiltersFromGenerate) whose predicate embeds the whole shingle
+  // expression, and predicate pushdown then evaluates it BELOW the widening
+  // exchange — i.e. the full shingling of every document runs serially
+  // inside the scan task, per action. Shingle arrays are never empty (even
+  // "" yields one shingle), so outer explode is row-identical and dodges
+  // the inferred filter.
 
   /** Near-duplicate pairs via MinHash + LSH banding, verified with the exact
     * Jaccard similarity of the shingle sets (integer per-mille, floor).
@@ -314,15 +314,6 @@ object Dedup {
         .select(col("__e.id").as("id"), col("block"), col("fp"),
           col("__e.p").cast("long").as("sz"))
     }
-  }
-
-  /** REFERENCE form of [[winnowPrefix]]'s dfCap stage (the r17 rank
-    * window) — kept for the bit-identity pin in DedupProps. */
-  private[graft] def winnowPrefixCapViaWindow(prefix0: DataFrame,
-      cap: Int): DataFrame = {
-    val wCap = Window.partitionBy("block", "fp").orderBy(col("id").asc)
-    prefix0.withColumn("__pn", row_number().over(wCap))
-      .filter(col("__pn") <= cap).drop("__pn")
   }
 
   /** Candidate pairs from a (possibly pinned) [[winnowPrefix]] frame. */
@@ -1039,32 +1030,17 @@ object Dedup {
     val toks = graft.util.ParallelScan.widen(
       df.select(id.cast("long").as("doc_id"),
         TextAnalysis.tokens(text).as("t")))
-    // Window start positions 0..len-w; empty when the doc is shorter
-    // than w (such docs are kept whole). sequence() must be guarded: with
-    // start > stop it would COUNT DOWN, fabricating negative positions.
-    val posSeq = when(size(col("t")) >= w,
-      sequence(lit(0), size(col("t")) - w))
-      .otherwise(array().cast("array<int>"))
-    // Phase 1 inlined (substrSpans keeps the unarmored helper). The
-    // count frames stay UNCACHED — each has ONE full consumer (its semi
-    // join), hot discovery samples occurrences instead of reading exact
-    // counts, and uncached count sides keep their small-data broadcasts
-    // (see [[hotTop]]).
-    val winHashes = toks.select(col("doc_id"),
-      transform(posSeq, p => xxhash64(winAt(col("t"), p, w))).as("hs"))
-    val wins = winHashes
-      .select(col("doc_id"), posexplode_outer(col("hs")).as(Seq("pos", "h")))
-      .filter(col("h").isNotNull)
-    val dupH = wins.groupBy("h").count()
-      .filter(col("count") >= minDupCount).select("h")
-    def candPlain: DataFrame = wins.join(dupH, Seq("h"), "left_semi")
-      .join(toks, Seq("doc_id"))
-      .select(col("doc_id"), col("pos"),
-        winAt(col("t"), col("pos"), w).as("win"))
+    // The count frames stay UNCACHED — each has ONE full consumer (its
+    // semi join), hot discovery samples occurrences instead of reading
+    // exact counts, and uncached count sides keep their small-data
+    // broadcasts (see [[hotTop]]).
+    val (wins, dupH) = substrHashes(toks, w, minDupCount)
     if (!materialize) {
       // lazy composition mode: fully declarative, armor off (discovery
       // is eager) — the historical plan, verdict-identical
-      val marked = substrMarked(candPlain, minDupCount)
+      val marked = substrMarked(
+          substrWindows(wins.join(dupH, Seq("h"), "left_semi"), toks, w),
+          minDupCount)
         .groupBy("doc_id")
         .agg(sort_array(collect_set(col("pos"))).as("mpos"))
       dropCoveredTokens(toks, marked, w)
@@ -1083,7 +1059,7 @@ object Dedup {
       var inner: Seq[DataFrame] = Nil
       try {
         val positions = toks.select(col("doc_id"), col("t"),
-            explode_outer(posSeq).as("pos"))
+            explode_outer(winStarts(col("t"), w)).as("pos"))
           .filter(col("pos").isNotNull)
         val hotW: Seq[String] = hotTop(positions.select(col("doc_id"),
             col("pos"), winAt(col("t"), col("pos"), w).as("win")),
@@ -1100,10 +1076,8 @@ object Dedup {
           else wins.filter(col("h").isInCollection(hotH)).groupBy("h")
             .agg(count(lit(1)).as("c")).filter(col("c") >= minDupCount)
             .collect().map(r => Long.box(r.getLong(0))).toSeq
-        val cand = semiArmoredWith(wins, dupH, "h", hotH, dupHotH)
-          .join(toks, Seq("doc_id"))
-          .select(col("doc_id"), col("pos"),
-            winAt(col("t"), col("pos"), w).as("win"))
+        val cand = substrWindows(
+          semiArmoredWith(wins, dupH, "h", hotH, dupHotH), toks, w)
         cand.persist(); inner = Seq(cand)
         val dupW = cand.groupBy("win").count()
           .filter(col("count") >= minDupCount).select("win")
@@ -1123,38 +1097,49 @@ object Dedup {
     }
   }
 
-  /** ExactSubstr phases 1–2 (shared by [[substrDedup]] and
-    * [[substrSpans]]): candidate (doc_id, pos, win) rows — positions
-    * whose 8-byte window HASH is duplicated, with the window string
-    * re-materialized for exact verification. */
   /** The `w`-token window STRING starting at 0-based `pos` — the ONE
-    * window definition shared by the batch pass ([[substrCandidates]])
-    * and the incremental ingest ([[substrIngest]]). They must stay
-    * bit-identical: the arrival-order contract compares window strings
-    * counted by different code paths, so a drifting copy would silently
-    * split counts for the same span. */
+    * window definition shared by the batch pass ([[substrHashes]],
+    * [[substrWindows]]) and the incremental ingest ([[substrIngest]]).
+    * They must stay bit-identical: the arrival-order contract compares
+    * window strings counted by different code paths, so a drifting copy
+    * would silently split counts for the same span. */
   private def winAt(t: Column, pos: Column, w: Int): Column =
     concat_ws(" ", slice(t, pos + 1, lit(w)))
 
-  private def substrCandidates(toks: DataFrame, posSeq: Column,
-      w: Int, minDupCount: Int): DataFrame = {
-    def winAt(t: Column, pos: Column): Column = Dedup.winAt(t, pos, w)
-    // Phase 1: (doc_id, pos, h) — hashes computed BEFORE the explode so
-    // the generator output (and the count shuffle) never carries the token
-    // array or the window string.
+  /** Window start positions 0..len−w of the token array `t`; empty when
+    * the doc is shorter than `w` (such docs are kept whole). The guard is
+    * required: with start > stop, sequence() would COUNT DOWN,
+    * fabricating negative positions. */
+  private def winStarts(t: Column, w: Int): Column =
+    when(size(t) >= w, sequence(lit(0), size(t) - w))
+      .otherwise(array().cast("array<int>"))
+
+  /** ExactSubstr phase 1, shared by [[substrDedup]] (both modes) and
+    * [[substrSpans]]: (doc_id, pos, h) rows — hashes computed BEFORE the
+    * explode so the generator output (and the count shuffle) never
+    * carries the token array or the window string — and the hashes `h`
+    * seen at least `minDupCount` times. */
+  private def substrHashes(toks: DataFrame, w: Int,
+      minDupCount: Int): (DataFrame, DataFrame) = {
     val winHashes = toks.select(col("doc_id"),
-      transform(posSeq, p => xxhash64(winAt(col("t"), p))).as("hs"))
+      transform(winStarts(col("t"), w),
+        p => xxhash64(winAt(col("t"), p, w))).as("hs"))
     val wins = winHashes
       .select(col("doc_id"), posexplode_outer(col("hs")).as(Seq("pos", "h")))
       .filter(col("h").isNotNull)
     val dupH = wins.groupBy("h").count()
       .filter(col("count") >= minDupCount).select("h")
-    // Phase 2: re-materialize candidate windows and verify by string.
-    wins.join(dupH, Seq("h"), "left_semi")
-      .join(toks, Seq("doc_id"))
-      .select(col("doc_id"), col("pos"),
-        winAt(col("t"), col("pos")).as("win"))
+    (wins, dupH)
   }
+
+  /** ExactSubstr phase 2: candidate (doc_id, pos, win) rows — the
+    * positions `pos` (duplicated hashes) re-join their token array and
+    * re-materialize the window string for exact verification. */
+  private def substrWindows(pos: DataFrame, toks: DataFrame,
+      w: Int): DataFrame =
+    pos.join(toks, Seq("doc_id"))
+      .select(col("doc_id"), col("pos"),
+        winAt(col("t"), col("pos"), w).as("win"))
 
   /** Candidate positions whose window STRING reaches `minDupCount`
     * occurrences — the exact-string verdicts. */
@@ -1183,10 +1168,8 @@ object Dedup {
     val toks = graft.util.ParallelScan.widen(
       df.select(id.cast("long").as("doc_id"),
         TextAnalysis.tokens(text).as("t")))
-    val posSeq = when(size(col("t")) >= w,
-      sequence(lit(0), size(col("t")) - w))
-      .otherwise(array().cast("array<int>"))
-    val cand = substrCandidates(toks, posSeq, w, minDupCount)
+    val (wins, dupH) = substrHashes(toks, w, minDupCount)
+    val cand = substrWindows(wins.join(dupH, Seq("h"), "left_semi"), toks, w)
     scoped(materialize, toks, cand) {
       val marked = substrMarked(cand, minDupCount)
       val byDoc = Window.partitionBy("doc_id").orderBy(col("pos"))
@@ -1273,134 +1256,35 @@ object Dedup {
           TextAnalysis.tokens(text).as("t")))
       .persist()
     try {
-      val posSeq = when(size(col("t")) >= w,
-        sequence(lit(0), size(col("t")) - w))
-        .otherwise(array().cast("array<int>"))
-      // window definition SHARED with the batch pass ([[winAt]]) — the
-      // arrival-order contract needs both to stay bit-identical
+      val ix = openCountIndex(spark, dir, WindowIndex,
+        Map(IngestUnitKey -> s"window:$w",
+          IngestMinDupKey -> minDupCount.toString))
+      if (!ix.boot && assertNewDocs)
+        assertUningested(spark, ix.docsDir, toks.select(col("doc_id")))
       // The batch materializes its window STRINGS directly (batch-sized
       // ×w — the price of never re-reading history text).
       val wins = toks.select(col("doc_id"),
-          transform(posSeq, p =>
+          transform(winStarts(col("t"), w), p =>
             struct(p.as("pos"), winAt(col("t"), p, w).as("win"))).as("ws"))
         .select(col("doc_id"), explode_outer(col("ws")).as("pw"))
         .filter(col("pw").isNotNull)
         .select(col("doc_id"), col("pw.pos").as("pos"),
           col("pw.win").as("win"))
       val bCounts = wins.groupBy("win").agg(count(lit(1)).as("bcnt"))
-      val idxDir = s"$dir/windex"
-      val docsDir = s"$dir/docs"
-      val tl = graft.format.Timeline(
-        spark.sessionState.newHadoopConf(), idxDir)
-      val boot = tl.completedInstants().isEmpty
-      // unit contract: recorded at bootstrap, required to match after —
-      // a drifting window width would mix units in the count index
-      val contract = Map(IngestUnitKey -> s"window:$w",
-        IngestMinDupKey -> minDupCount.toString)
-      if (!boot) assertIngestContract(tl, idxDir, contract)
-      if (!boot && assertNewDocs)
-        assertUningested(spark, docsDir, toks.select(col("doc_id")))
-      // materialized ONCE: read again by the dup filter and the txn's
-      // touched/write passes (see the ingest-soak job-count note)
-      val totals =
-        if (boot)
-          bCounts.select(col("win"), col("bcnt").as("cnt"))
-            .localCheckpoint(true)
-        else {
-          // barrier: bCounts' groupBy leaves a 32-partition hash
-          // partitioning that outbids the index's 8-partition key-grouped
-          // spec in EnsureRequirements' side selection — Spark would then
-          // re-shuffle the INDEX to hash(32) (index-sized exchange, the
-          // exact cost this join exists to avoid). The checkpoint drops
-          // the reusable spec so the scan side's layout wins; it also
-          // pins the batch counts for the dup filter re-read.
-          val bc = bCounts.localCheckpoint(true)
-          // ISOLATED session for the storage-partitioned join (r14): the
-          // SPJ needs spark.sql.sources.v2.bucketing{,.shuffle}.enabled;
-          // flipping them on the CALLER's session leaked into concurrent
-          // queries during the eager checkpoint, and two interleaved
-          // ingests could restore each other's stale values. newSession
-          // shares the SparkContext (and re-applies builder-time
-          // options) but owns its SQLConf, so the flip is invisible
-          // outside this block; frames cross sessions as materialized
-          // RDDs (batch-counts-sized both ways). Runtime-set confs are
-          // NOT inherited — the sizing conf the join cares about is
-          // copied explicitly.
-          val iso = spark.newSession()
-          iso.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-          iso.conf.set(
-            "spark.sql.sources.v2.bucketing.shuffle.enabled", "true")
-          iso.conf.set("spark.sql.shuffle.partitions",
-            spark.conf.get("spark.sql.shuffle.partitions"))
-          // storage-partitioned join: the windex DSv2 scan (catalog
-          // mount, the table's own bucket key `k` as join key) reports
-          // bucket(n, k); with the shuffle conf only the BATCH side
-          // exchanges, into the index's bucket layout
-          val hist = graft.util.CatalogMount.table(iso, idxDir)
-            .select(col("k"), col("cnt").as("hcnt"))
-          val bcIso = org.apache.spark.sql.graft.Bridge
-            .sinkBatchDataFrame(iso, bc)
-          val joined = bcIso.withColumnRenamed("win", "k")
-            .join(hist, Seq("k"), "left")
-            .select(col("k").as("win"),
-              (col("bcnt") + coalesce(col("hcnt"), lit(0L))).as("cnt"))
-            .localCheckpoint(true) // eager: the plan runs under iso's conf
-          org.apache.spark.sql.graft.Bridge.sinkBatchDataFrame(
-            spark, joined)
-        }
-      // hot-key armored mark join (totals is checkpointed, so hot
-      // discovery is an exact local re-scan) — bounds the batch's
-      // largest semi-join task by the hottest cold key
-      val hotRows =
-        if (hotN <= 0) Nil
-        else totals.filter(col("cnt") >= hotMinCount)
-          .orderBy(col("cnt").desc, col("win").asc).limit(hotN)
-          .collect().toSeq
-      val marked = semiArmoredWith(wins,
-          totals.filter(col("cnt") >= minDupCount).select("win"),
-          "win", hotRows.map(_.getString(0)),
-          hotRows.filter(_.getLong(1) >= minDupCount)
-            .map(_.getString(0)))
-        .groupBy("doc_id")
-        .agg(sort_array(collect_set(col("pos"))).as("mpos"))
-      val cleaned = dropCoveredTokens(toks, marked, w).localCheckpoint(true)
-      val idxRows = totals
-        .withColumn("k", col("win")).withColumn("p", lit("all"))
-      val docRows = cleaned
-        .withColumn("k", col("doc_id").cast("string"))
-        .withColumn("p", lit("all"))
-      if (boot) {
-        // docs first, windex last: the boot gate above tests windex, so a
-        // crash between the creates leaves a retryable half, never a wedge.
-        // Both tables are MOR (r13): every batch touches every bucket
-        // (window hashes are uniform), so COW upserts rewrote the WHOLE
-        // index per batch — index-sized shuffle however small the batch.
-        // MOR appends are batch-sized delta commits; snapshots and the
-        // storage-partitioned index join merge deltas natively
-        // (GraftMorBatchScan), and maintenance compaction amortizes the
-        // rewrite on the operator's schedule instead of every batch's.
-        // deltaCounters=off: these are internal state tables consumed by
-        // joins, never by metadata COUNT(*) — the per-delta live-count
-        // existence join (snapshot-keys-sized however small the batch)
-        // buys nothing here. The ingest contract rides the creation
-        // commit's extras (the buckets mechanism) on the index table.
-        def create(df: DataFrame, path: String,
-            extra: Map[String, String]): Unit =
-          graft.write.FormatWriter.append(spark, path,
-            Map("key" -> "k", "partition" -> "p", "type" -> "mor",
-              "deltaCounters" -> "off",
-              "buckets" -> numBuckets.toString) ++ ts.map("ts" -> _),
-            df, extra)
-        create(docRows, docsDir, Map.empty)
-        create(idxRows, idxDir, contract)
-      } else {
-        graft.write.MultiTableTxn.commit(spark, Seq(
-          graft.write.MultiTableTxn.TableWrite(idxDir,
-            updates = Some(idxRows)),
-          graft.write.MultiTableTxn.TableWrite(docsDir,
-            updates = Some(docRows)))): Unit
+      ingestCounts(spark, ix, bCounts.withColumnRenamed("win", "k"),
+        Seq(col("k").as("win"),
+          (col("bcnt") + coalesce(col("hcnt"), lit(0L))).as("cnt")),
+        numBuckets, ts, hotN, hotMinCount) { (totals, hot) =>
+        // hot-key armored mark join — bounds the batch's largest
+        // semi-join task by the hottest cold key
+        val marked = semiArmoredWith(wins,
+            totals.filter(col("cnt") >= minDupCount).select("win"),
+            "win", hot.map(_.getString(0)),
+            hot.filter(_.getLong(1) >= minDupCount).map(_.getString(0)))
+          .groupBy("doc_id")
+          .agg(sort_array(collect_set(col("pos"))).as("mpos"))
+        dropCoveredTokens(toks, marked, w)
       }
-      cleaned
     } finally toks.unpersist(blocking = true)
   }
 
@@ -1588,45 +1472,6 @@ object Dedup {
       finally intermediates.foreach(_.unpersist(blocking = true))
     }
 
-  /** Corpus-wide duplicated-SEGMENT removal (the "line dedup" pass of
-    * RefinedWeb/CCNet-style pipelines, Penedo et al. 2023 §3.3 — drop the
-    * boilerplate lines that repeat across documents, keeping documents
-    * otherwise intact). Two segment units ([[segSplit]]): the default
-    * fixed-width NON-OVERLAPPING token window, and — `delim = Some("\n")`
-    * — the paper's literal line mode, where a segment is the exact
-    * delimiter-split substring (same plan, different cut; gated
-    * separately as q_seg_dedup / q_seg_dedup_lines).
-    *
-    * Semantics (integer/string-exact, so the DuckDB oracle hash-matches):
-    * tokenize ([[TextAnalysis.tokens]] — trim/lower/split, the repo-wide
-    * convention), cut ⌊n/width⌋ segments of `width` tokens plus an
-    * always-kept tail; a segment OCCURRENCE is dropped iff its segment
-    * string occurs ≥ `minDupCount` times corpus-wide and (when `keepFirst`)
-    * it is not the canonical first occurrence (min (doc_id, pos)).
-    * Documents are reassembled from kept segments in order + tail; the
-    * output text is the NORMALIZED token stream (same contract as
-    * [[substrDedup]]).
-    *
-    * Returns (doc_id, text_dedup, segs_total, segs_removed), one row per
-    * input document (zero-segment docs pass through with their tail).
-    *
-    * Scale shape (100 TB): two shuffles — (1) segment-keyed: the distinct
-    * count is map-side combined, so the exchange carries distinct segments
-    * per mapper, and the occurrence↔count join reuses the same key; (2)
-    * doc-keyed regroup bounded by document size. Never all-pairs, no
-    * window over the corpus. Skew (one mega-duplicated boilerplate
-    * segment) concentrates that key's OCCURRENCES in one reducer — AQE
-    * skew-join splits it, and the keep-decision is a per-row predicate, so
-    * no quadratic blowup is possible. */
-  /** Re-ingest guard shared by the incremental ingest paths: the
-    * arrival-order contract requires each doc id to arrive AT MOST ONCE —
-    * a re-ingested id would silently upsert its settled docs row while
-    * DOUBLE-COUNTING its windows/segments in the count index, permanently
-    * skewing every later verdict. One key-only scan of the docs table
-    * (column-pruned to the record key) probed by the batch's distinct ids
-    * (broadcast — batch-sized); refuses loudly on the first hit. The
-    * docs-key scan is the per-batch price; callers that enforce arrival
-    * uniqueness upstream can switch it off via `assertNewDocs`. */
   /** The incremental indexes' INGEST CONTRACT, persisted in the index
     * table's CREATION commit extras exactly like `buckets`
     * ([[graft.write.WriteContract.BucketsKey]]) and required to MATCH on
@@ -1654,12 +1499,33 @@ object Dedup {
       }
     }
 
+  /** A batch's ids as DISTINCT docs-table record keys `k`. */
+  private def probeIds(idFrame: DataFrame): DataFrame =
+    idFrame.toDF("__i").select(col("__i").cast("string").as("k")).distinct()
+
+  /** The ONE docs-presence probe under every count-index guard
+    * ([[assertUningested]], [[assertAllIngested]], [[streamBatchSettled]],
+    * [[streamDeleteSettled]]; each keeps its own policy and message):
+    * the docs table's keys among the [[probeIds]] `ids` — a key-only scan
+    * (column-pruned to the record key) ⋈ the broadcast ids (batch-sized).
+    * The table is mounted only once a guard needs its hits: an empty
+    * micro-batch or a bootstrap never mounts it. */
+  private def docsHits(spark: org.apache.spark.sql.SparkSession,
+      docsDir: String, ids: DataFrame): DataFrame =
+    graft.util.CatalogMount.table(spark, docsDir)
+      .select(col("k")).join(broadcast(ids), Seq("k"))
+
+  /** Re-ingest guard shared by the incremental ingest paths: the
+    * arrival-order contract requires each doc id to arrive AT MOST ONCE —
+    * a re-ingested id would silently upsert its settled docs row while
+    * DOUBLE-COUNTING its windows/segments in the count index, permanently
+    * skewing every later verdict. One [[docsHits]] probe; refuses loudly
+    * on the first hit. The docs-key scan is the per-batch price; callers
+    * that enforce arrival uniqueness upstream can switch it off via
+    * `assertNewDocs`. */
   private def assertUningested(spark: org.apache.spark.sql.SparkSession,
       docsDir: String, ids: DataFrame): Unit = {
-    val probe = ids.select(col("doc_id").cast("string").as("k")).distinct()
-    val dup = graft.util.CatalogMount.table(spark, docsDir)
-      .select(col("k")).join(broadcast(probe), Seq("k"))
-      .limit(1).collect()
+    val dup = docsHits(spark, docsDir, probeIds(ids)).limit(1).collect()
     require(dup.isEmpty,
       s"ingest: doc id ${if (dup.isEmpty) "" else dup.head.getString(0)} " +
         "was already ingested — each id must arrive at most once " +
@@ -1670,14 +1536,13 @@ object Dedup {
   /** The takedown twin of [[assertUningested]]: every doc id in a DELETE
     * batch must be PRESENT in the docs table — subtracting a never-
     * ingested doc's counts would corrupt the index, so an unknown id
-    * refuses loudly. Key-only docs probe, batch-sized broadcast. */
+    * refuses loudly. One [[docsHits]] probe (docs keys are unique, so
+    * the hits count the present ids). */
   private def assertAllIngested(spark: org.apache.spark.sql.SparkSession,
       docsDir: String, ids: DataFrame, what: String): Unit = {
-    val probe = ids.select(col("doc_id").cast("string").as("k")).distinct()
+    val probe = probeIds(ids)
     val n = probe.count()
-    val present = graft.util.CatalogMount.table(spark, docsDir)
-      .select(col("k")).join(broadcast(probe), Seq("k"))
-      .distinct().count()
+    val present = docsHits(spark, docsDir, probe).count()
     require(present == n,
       s"$what: ${n - present} of $n doc ids were never ingested into " +
         s"$docsDir — deleting an unknown doc would subtract counts it " +
@@ -1867,6 +1732,36 @@ object Dedup {
         .select(occ.columns.map(col).toIndexedSeq: _*))
     }
 
+  /** Corpus-wide duplicated-SEGMENT removal (the "line dedup" pass of
+    * RefinedWeb/CCNet-style pipelines, Penedo et al. 2023 §3.3 — drop the
+    * boilerplate lines that repeat across documents, keeping documents
+    * otherwise intact). Two segment units ([[segSplit]]): the default
+    * fixed-width NON-OVERLAPPING token window, and — `delim = Some("\n")`
+    * — the paper's literal line mode, where a segment is the exact
+    * delimiter-split substring (same plan, different cut; gated
+    * separately as q_seg_dedup / q_seg_dedup_lines).
+    *
+    * Semantics (integer/string-exact, so the DuckDB oracle hash-matches):
+    * tokenize ([[TextAnalysis.tokens]] — trim/lower/split, the repo-wide
+    * convention), cut ⌊n/width⌋ segments of `width` tokens plus an
+    * always-kept tail; a segment OCCURRENCE is dropped iff its segment
+    * string occurs ≥ `minDupCount` times corpus-wide and (when `keepFirst`)
+    * it is not the canonical first occurrence (min (doc_id, pos)).
+    * Documents are reassembled from kept segments in order + tail; the
+    * output text is the NORMALIZED token stream (same contract as
+    * [[substrDedup]]).
+    *
+    * Returns (doc_id, text_dedup, segs_total, segs_removed), one row per
+    * input document (zero-segment docs pass through with their tail).
+    *
+    * Scale shape (100 TB): two shuffles — (1) segment-keyed: the distinct
+    * count is map-side combined, so the exchange carries distinct segments
+    * per mapper, and the occurrence↔count join reuses the same key; (2)
+    * doc-keyed regroup bounded by document size. Never all-pairs, no
+    * window over the corpus. Skew (one mega-duplicated boilerplate
+    * segment) concentrates that key's OCCURRENCES in one reducer — AQE
+    * skew-join splits it, and the keep-decision is a per-row predicate, so
+    * no quadratic blowup is possible. */
   def segmentDedup(df: DataFrame, id: Column, text: Column,
       width: Int = 5, minDupCount: Int = 2,
       keepFirst: Boolean = true, materialize: Boolean = true,
@@ -1908,40 +1803,6 @@ object Dedup {
     }
   }
 
-  /** Incremental [[segmentDedup]]: arrival-order ingest against a
-    * maintained SEGMENT-COUNT index. An arriving document is cleaned
-    * against everything seen up to and INCLUDING its own batch —
-    * an occurrence is dropped iff its segment's cumulative count
-    * (history + this batch) reaches `minDupCount` and (when `keepFirst`)
-    * it is not the ARRIVAL-first occurrence (the stored first if the
-    * segment is historical, else the batch's min (doc_id, pos)).
-    * Settled documents are never retro-edited ([[ingestDedup]]'s
-    * convention), so a later batch re-duplicating old text drops only
-    * its own copies.
-    *
-    * State under `dir/`: `segindex` — one graft row per DISTINCT segment
-    * string (record key IS the segment — exact-string verdicts) with its
-    * count and first occurrence; `docs` — cleaned outputs keyed by doc
-    * id. Both MOR with deltaCounters=off; every post-bootstrap batch
-    * commits BOTH in one [[graft.write.MultiTableTxn]]. Per batch: one
-    * count-by-segment shuffle of the batch plus one STORAGE-PARTITIONED
-    * index join (the segindex DSv2 scan reports bucket(n, k); only the
-    * batch-side counts exchange — the same batch-bounded shape, conf
-    * isolation, and checkpoint barrier as [[substrIngest]], documented
-    * there). Per-batch cost tracks the BATCH however large the index
-    * grows; history text is never re-read.
-    *
-    * Returns the batch's cleaned rows (doc_id, text_dedup, segs_total,
-    * segs_removed) exactly as recorded in `dir/docs`. `ts` pins the
-    * bootstrap commits only. Each doc id must arrive at most once —
-    * ENFORCED by [[assertUningested]] (a key-only docs-table probe per
-    * post-bootstrap batch; `assertNewDocs = false` skips it).
-    * `delim` switches the segment unit exactly as in [[segmentDedup]];
-    * the unit parameters (`width`/`delim`/`minDupCount`/`keepFirst`)
-    * are RECORDED in the index's creation-commit extras and ENFORCED on
-    * every later batch ([[assertIngestContract]]) — a drifting caller
-    * refuses loudly instead of silently mixing segment units in the
-    * count index. */
   /** STREAMING-driven [[segIngest]] — the `foreachBatch` body that makes
     * a `readStream.format("graft")`-tailed corpus maintain the segment
     * index EXACTLY-ONCE per micro-batch:
@@ -1971,8 +1832,8 @@ object Dedup {
       numBuckets: Int = 8, delim: Option[String] = None,
       hotN: Int = 64,
       hotMinCount: Long = HotEngageCount): Option[DataFrame] =
-    if (streamBatchSettled(spark, "segIngestBatch", s"$dir/segindex",
-        s"$dir/docs", batch.select(id.cast("long")))) None
+    if (streamBatchSettled(spark, "segIngestBatch", dir, SegmentIndex,
+        batch.select(id.cast("long")))) None
     else Some(segIngest(spark, dir, batch, id, text, width, minDupCount,
       keepFirst, numBuckets, ts = None, delim,
       assertNewDocs = false, // the probe above already decided
@@ -1987,8 +1848,8 @@ object Dedup {
       dir: String, batch: DataFrame, id: Column, text: Column, w: Int,
       minDupCount: Int = 2, numBuckets: Int = 8, hotN: Int = 64,
       hotMinCount: Long = HotEngageCount): Option[DataFrame] =
-    if (streamBatchSettled(spark, "substrIngestBatch", s"$dir/windex",
-        s"$dir/docs", batch.select(id.cast("long")))) None
+    if (streamBatchSettled(spark, "substrIngestBatch", dir, WindowIndex,
+        batch.select(id.cast("long")))) None
     else Some(substrIngest(spark, dir, batch, id, text, w, minDupCount,
       numBuckets, ts = None,
       assertNewDocs = false, // the probe above already decided
@@ -2024,7 +1885,8 @@ object Dedup {
       width: Int = 5, delim: Option[String] = None): Option[Long] =
     if (streamDeleteSettled(spark, "segDeleteBatch", s"$dir/docs",
         batch.select(id.cast("long")))) None
-    else Some(segDelete(spark, dir, batch, id, text, width, delim))
+    else Some(segSubtract(spark, dir, batch, id, text, width, delim,
+      guard = false)) // the probe above already decided
 
   /** [[segDeleteBatch]]'s ExactSubstr twin — the CDC-takedown
     * `foreachBatch` body for a window-count index. */
@@ -2033,7 +1895,8 @@ object Dedup {
       w: Int): Option[Long] =
     if (streamDeleteSettled(spark, "substrDeleteBatch", s"$dir/docs",
         batch.select(id.cast("long")))) None
-    else Some(substrDelete(spark, dir, batch, id, text, w))
+    else Some(substrSubtract(spark, dir, batch, id, text, w,
+      guard = false)) // the probe above already decided
 
   /** The streaming replay decision of the *DeleteBatch verbs — the
     * ingest probe inverted: true = the micro-batch is empty or NONE of
@@ -2044,12 +1907,10 @@ object Dedup {
   private def streamDeleteSettled(
       spark: org.apache.spark.sql.SparkSession, verb: String,
       docsDir: String, idFrame: DataFrame): Boolean = {
-    val ids = idFrame.toDF("__i")
-      .select(col("__i").cast("string").as("k")).distinct()
+    val ids = probeIds(idFrame)
     val nIds = ids.count()
     if (nIds == 0) return true // empty micro-batch: nothing to remove
-    val nPresent = graft.util.CatalogMount.table(spark, docsDir)
-      .select(col("k")).join(broadcast(ids), Seq("k")).count()
+    val nPresent = docsHits(spark, docsDir, ids).count()
     if (nPresent == 0L) true // fully-landed replay
     else {
       require(nPresent == nIds,
@@ -2066,20 +1927,17 @@ object Dedup {
     * committed before the crash that forced the engine's replay) —
     * skip; false = no id has landed — ingest. A PARTIAL overlap can
     * only mean two writers or re-used doc ids (the txn is
-    * all-or-nothing): refuse loudly. One key-only docs probe per
-    * micro-batch (column-pruned scan ⋈ broadcast batch ids). */
+    * all-or-nothing): refuse loudly. One [[docsHits]] probe per
+    * micro-batch. */
   private def streamBatchSettled(spark: org.apache.spark.sql.SparkSession,
-      verb: String, idxDir: String, docsDir: String,
+      verb: String, dir: String, kind: CountKind,
       idFrame: DataFrame): Boolean = {
-    val ids = idFrame.toDF("__i")
-      .select(col("__i").cast("string").as("k")).distinct()
+    val ids = probeIds(idFrame)
     val nIds = ids.count()
     if (nIds == 0) return true // empty micro-batch: nothing to land
-    val tl = graft.format.Timeline(
-      spark.sessionState.newHadoopConf(), idxDir)
-    if (tl.completedInstants().isEmpty) return false // bootstrap
-    val nPresent = graft.util.CatalogMount.table(spark, docsDir)
-      .select(col("k")).join(broadcast(ids), Seq("k")).count()
+    val ix = openCountIndex(spark, dir, kind, Map.empty)
+    if (ix.boot) return false
+    val nPresent = docsHits(spark, ix.docsDir, ids).count()
     if (nPresent == nIds) true
     else {
       require(nPresent == 0L,
@@ -2091,6 +1949,40 @@ object Dedup {
     }
   }
 
+  /** Incremental [[segmentDedup]]: arrival-order ingest against a
+    * maintained SEGMENT-COUNT index. An arriving document is cleaned
+    * against everything seen up to and INCLUDING its own batch —
+    * an occurrence is dropped iff its segment's cumulative count
+    * (history + this batch) reaches `minDupCount` and (when `keepFirst`)
+    * it is not the ARRIVAL-first occurrence (the stored first if the
+    * segment is historical, else the batch's min (doc_id, pos)).
+    * Settled documents are never retro-edited ([[ingestDedup]]'s
+    * convention), so a later batch re-duplicating old text drops only
+    * its own copies.
+    *
+    * State under `dir/`: `segindex` — one graft row per DISTINCT segment
+    * string (record key IS the segment — exact-string verdicts) with its
+    * count and first occurrence; `docs` — cleaned outputs keyed by doc
+    * id. Both MOR with deltaCounters=off; every post-bootstrap batch
+    * commits BOTH in one [[graft.write.MultiTableTxn]]. Per batch: one
+    * count-by-segment shuffle of the batch plus one STORAGE-PARTITIONED
+    * index join (the segindex DSv2 scan reports bucket(n, k); only the
+    * batch-side counts exchange — the batch-bounded shape, conf
+    * isolation and checkpoint barrier of [[joinIndexCounts]], shared
+    * with [[substrIngest]]). Per-batch cost tracks the BATCH however
+    * large the index grows; history text is never re-read.
+    *
+    * Returns the batch's cleaned rows (doc_id, text_dedup, segs_total,
+    * segs_removed) exactly as recorded in `dir/docs`. `ts` pins the
+    * bootstrap commits only. Each doc id must arrive at most once —
+    * ENFORCED by [[assertUningested]] (a key-only docs-table probe per
+    * post-bootstrap batch; `assertNewDocs = false` skips it).
+    * `delim` switches the segment unit exactly as in [[segmentDedup]];
+    * the unit parameters (`width`/`delim`/`minDupCount`/`keepFirst`)
+    * are RECORDED in the index's creation-commit extras and ENFORCED on
+    * every later batch ([[assertIngestContract]]) — a drifting caller
+    * refuses loudly instead of silently mixing segment units in the
+    * count index. */
   def segIngest(spark: org.apache.spark.sql.SparkSession, dir: String,
       batch: DataFrame, id: Column, text: Column, width: Int = 5,
       minDupCount: Int = 2, keepFirst: Boolean = true,
@@ -2102,22 +1994,14 @@ object Dedup {
     val (rawBase, segArr, joiner) = segSplit(batch, id, text, width, delim)
     val base = graft.util.ParallelScan.widen(rawBase).persist()
     try {
-      val idxDir = s"$dir/segindex"
-      val docsDir = s"$dir/docs"
-      val tl = graft.format.Timeline(
-        spark.sessionState.newHadoopConf(), idxDir)
-      val boot = tl.completedInstants().isEmpty
-      // unit contract: recorded at bootstrap, required to match after —
-      // mixed units in one count index corrupt every later verdict.
-      // Checked BEFORE the eager occ checkpoint so a refused batch does
-      // no distributed work.
-      val contract = Map(
-        IngestUnitKey -> delim.fold(s"token:$width")(d => s"delim:$d"),
-        IngestMinDupKey -> minDupCount.toString,
-        IngestKeepFirstKey -> keepFirst.toString)
-      if (!boot) assertIngestContract(tl, idxDir, contract)
-      if (!boot && assertNewDocs)
-        assertUningested(spark, docsDir, base.select(col("doc_id")))
+      // opened and guarded BEFORE the eager occ checkpoint, so a refused
+      // batch does no distributed work
+      val ix = openCountIndex(spark, dir, SegmentIndex,
+        Map(IngestUnitKey -> segUnit(width, delim),
+          IngestMinDupKey -> minDupCount.toString,
+          IngestKeepFirstKey -> keepFirst.toString))
+      if (!ix.boot && assertNewDocs)
+        assertUningested(spark, ix.docsDir, base.select(col("doc_id")))
       // batch-sized; read by the count aggregate AND the keep join
       val occ = base.select(col("doc_id"), posexplode_outer(segArr)
           .as(Seq("pos", "seg")))
@@ -2125,83 +2009,25 @@ object Dedup {
         .localCheckpoint(true)
       val bAgg = occ.groupBy("seg").agg(count(lit(1)).as("bcnt"),
         min(struct(col("doc_id"), col("pos"))).as("bfirst"))
-      val totals =
-        if (boot)
-          bAgg.select(col("seg"), col("bcnt").as("cnt"),
-              col("bfirst.doc_id").as("fdoc"),
-              col("bfirst.pos").as("fpos"))
-            .localCheckpoint(true)
-        else {
-          // checkpoint barrier + isolated session: see [[substrIngest]]'s
-          // in-line notes — identical machinery, different key
-          val bc = bAgg.localCheckpoint(true)
-          val iso = spark.newSession()
-          iso.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-          iso.conf.set(
-            "spark.sql.sources.v2.bucketing.shuffle.enabled", "true")
-          iso.conf.set("spark.sql.shuffle.partitions",
-            spark.conf.get("spark.sql.shuffle.partitions"))
-          val hist = graft.util.CatalogMount.table(iso, idxDir)
-            .select(col("k"), col("cnt").as("hcnt"),
-              col("fdoc").as("hfdoc"), col("fpos").as("hfpos"))
-          val bcIso = org.apache.spark.sql.graft.Bridge
-            .sinkBatchDataFrame(iso, bc)
-          // ARRIVAL-first: a historical segment keeps its stored first
-          // forever; only brand-new segments adopt the batch's min
-          val joined = bcIso.withColumnRenamed("seg", "k")
-            .join(hist, Seq("k"), "left")
-            .select(col("k").as("seg"),
-              (col("bcnt") + coalesce(col("hcnt"), lit(0L))).as("cnt"),
-              coalesce(col("hfdoc"), col("bfirst.doc_id")).as("fdoc"),
-              coalesce(col("hfpos"), col("bfirst.pos")).as("fpos"))
-            .localCheckpoint(true)
-          org.apache.spark.sql.graft.Bridge.sinkBatchDataFrame(
-            spark, joined)
-        }
-      // totals is checkpointed, so hot discovery is an exact local
-      // re-scan (no sampling needed — and no cache-stats side effects,
-      // totals is materialized for the txn anyway); the armor bounds the
-      // batch join's largest task by the hottest cold key
-      val hotStats =
-        if (hotN <= 0) Nil
-        else totals.filter(col("cnt") >= hotMinCount)
-          .orderBy(col("cnt").desc, col("seg").asc).limit(hotN)
-          .collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-            r.getInt(3))).toSeq
-      val kept = segKeepJoin(occ, totals, keepFirst, minDupCount,
-        hotStats)
-      val cleaned = segAssemble(base, kept, joiner)
-        .localCheckpoint(true)
-      val idxRows = totals
-        .withColumn("k", col("seg")).withColumn("p", lit("all"))
-      val docRows = cleaned
-        .withColumn("k", col("doc_id").cast("string"))
-        .withColumn("p", lit("all"))
-      if (boot) {
-        // docs first, segindex last — the boot gate tests segindex, so a
-        // crash between creates leaves a retryable half, never a wedge.
-        // The ingest contract rides the creation commit's extras (the
-        // buckets mechanism), on the index table whose keys it governs.
-        def create(df: DataFrame, path: String,
-            extra: Map[String, String]): Unit =
-          graft.write.FormatWriter.append(spark, path,
-            Map("key" -> "k", "partition" -> "p", "type" -> "mor",
-              "deltaCounters" -> "off",
-              "buckets" -> numBuckets.toString) ++ ts.map("ts" -> _),
-            df, extra)
-        create(docRows, docsDir, Map.empty)
-        create(idxRows, idxDir, contract)
-      } else {
-        graft.write.MultiTableTxn.commit(spark, Seq(
-          graft.write.MultiTableTxn.TableWrite(idxDir,
-            updates = Some(idxRows)),
-          graft.write.MultiTableTxn.TableWrite(docsDir,
-            updates = Some(docRows)))): Unit
+      // ARRIVAL-first: a historical segment keeps its stored first
+      // forever; only brand-new segments adopt the batch's min
+      ingestCounts(spark, ix, bAgg.withColumnRenamed("seg", "k"),
+        Seq(col("k").as("seg"),
+          (col("bcnt") + coalesce(col("hcnt"), lit(0L))).as("cnt"),
+          coalesce(col("hfdoc"), col("bfirst.doc_id")).as("fdoc"),
+          coalesce(col("hfpos"), col("bfirst.pos")).as("fpos")),
+        numBuckets, ts, hotN, hotMinCount) { (totals, hot) =>
+        val hotStats = hot.map(r =>
+          (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3)))
+        segAssemble(base,
+          segKeepJoin(occ, totals, keepFirst, minDupCount, hotStats), joiner)
       }
-      cleaned
     } finally base.unpersist(blocking = true)
   }
+
+  /** The segment unit recorded in the ingest contract. */
+  private def segUnit(width: Int, delim: Option[String]): String =
+    delim.fold(s"token:$width")(d => s"delim:$d")
 
   // ---- index takedown (r17) ---------------------------------------------
   //
@@ -2234,49 +2060,21 @@ object Dedup {
     * storage-partitioned join ingest uses), never an index rewrite. */
   def segDelete(spark: org.apache.spark.sql.SparkSession, dir: String,
       docs: DataFrame, id: Column, text: Column, width: Int = 5,
-      delim: Option[String] = None): Long = {
+      delim: Option[String] = None): Long =
+    segSubtract(spark, dir, docs, id, text, width, delim, guard = true)
+
+  /** [[segDelete]]'s body; `guard = false` skips the all-ingested probe
+    * when the caller ([[segDeleteBatch]]) already made it. */
+  private def segSubtract(spark: org.apache.spark.sql.SparkSession,
+      dir: String, docs: DataFrame, id: Column, text: Column, width: Int,
+      delim: Option[String], guard: Boolean): Long = {
     val (rawBase, segArr, _) = segSplit(docs, id, text, width, delim)
     val base = rawBase.localCheckpoint(true)
-    val idxDir = s"$dir/segindex"
-    val docsDir = s"$dir/docs"
-    val tl = graft.format.Timeline(
-      spark.sessionState.newHadoopConf(), idxDir)
-    require(tl.completedInstants().nonEmpty,
-      s"segDelete: no segment index at $idxDir")
-    assertIngestContract(tl, idxDir,
-      Map(IngestUnitKey -> delim.fold(s"token:$width")(d => s"delim:$d")))
-    assertAllIngested(spark, docsDir, base.select(col("doc_id")),
-      "segDelete")
     val dAgg = base.select(posexplode_outer(segArr).as(Seq("pos", "seg")))
       .filter(col("seg").isNotNull)
       .groupBy("seg").agg(count(lit(1)).as("dcnt"))
-    val joined = joinIndexCounts(spark, idxDir,
-      dAgg.withColumnRenamed("seg", "k"),
-      Seq(col("cnt").as("hcnt"), col("fdoc"), col("fpos")))
-    val bad = joined
-      .filter(col("hcnt").isNull || col("hcnt") < col("dcnt"))
-      .limit(1).collect()
-    require(bad.isEmpty,
-      s"segDelete: segment '${bad.headOption.map(_.getString(0))
-        .getOrElse("")}' would underflow (stored " +
-        s"${bad.headOption.map(_.get(2)).orNull} < subtracted " +
-        s"${bad.headOption.map(_.get(1)).orNull}) — the supplied text " +
-        "differs from what was ingested; delete exactly the rows as " +
-        "ingested")
-    val upd = joined.filter(col("hcnt") > col("dcnt"))
-      .select(col("k").as("seg"),
-        (col("hcnt") - col("dcnt")).as("cnt"),
-        col("fdoc"), col("fpos"), col("k"), lit("all").as("p"))
-    val dels = joined.filter(col("hcnt") === col("dcnt"))
-      .select(col("k"), lit("all").as("p"))
-    val docDels = base
-      .select(col("doc_id").cast("string").as("k"), lit("all").as("p"))
-    graft.write.MultiTableTxn.commit(spark, Seq(
-      graft.write.MultiTableTxn.TableWrite(idxDir,
-        updates = Some(upd), deletes = Some(dels)),
-      graft.write.MultiTableTxn.TableWrite(docsDir,
-        deletes = Some(docDels)))): Unit
-    base.count()
+    subtractCounts(spark, "segDelete", dir, SegmentIndex,
+      segUnit(width, delim), base, guard, dAgg)
   }
 
   /** Remove documents from a [[substrIngest]] index — the window-count
@@ -2285,78 +2083,220 @@ object Dedup {
     * rows + the docs rows in one transaction. Same guards: persisted
     * unit contract, all-ingested probe, underflow refusal. */
   def substrDelete(spark: org.apache.spark.sql.SparkSession, dir: String,
-      docs: DataFrame, id: Column, text: Column, w: Int): Long = {
+      docs: DataFrame, id: Column, text: Column, w: Int): Long =
+    substrSubtract(spark, dir, docs, id, text, w, guard = true)
+
+  /** [[substrDelete]]'s body; `guard` as in [[segSubtract]]. */
+  private def substrSubtract(spark: org.apache.spark.sql.SparkSession,
+      dir: String, docs: DataFrame, id: Column, text: Column, w: Int,
+      guard: Boolean): Long = {
     require(w >= 1, s"window width must be >= 1 token (got $w)")
     val toks = docs.select(id.cast("long").as("doc_id"),
         TextAnalysis.tokens(text).as("t"))
       .localCheckpoint(true)
-    val idxDir = s"$dir/windex"
-    val docsDir = s"$dir/docs"
-    val tl = graft.format.Timeline(
-      spark.sessionState.newHadoopConf(), idxDir)
-    require(tl.completedInstants().nonEmpty,
-      s"substrDelete: no window index at $idxDir")
-    assertIngestContract(tl, idxDir, Map(IngestUnitKey -> s"window:$w"))
-    assertAllIngested(spark, docsDir, toks.select(col("doc_id")),
-      "substrDelete")
-    val posSeq = when(size(col("t")) >= w,
-      sequence(lit(0), size(col("t")) - w))
-      .otherwise(array().cast("array<int>"))
     val dAgg = toks
-      .select(explode_outer(transform(posSeq,
+      .select(explode_outer(transform(winStarts(col("t"), w),
         p => winAt(col("t"), p, w))).as("win"))
       .filter(col("win").isNotNull)
       .groupBy("win").agg(count(lit(1)).as("dcnt"))
-    val joined = joinIndexCounts(spark, idxDir,
-      dAgg.withColumnRenamed("win", "k"),
-      Seq(col("cnt").as("hcnt")))
+    subtractCounts(spark, "substrDelete", dir, WindowIndex, s"window:$w",
+      toks, guard, dAgg)
+  }
+
+  // ---- count-index core -------------------------------------------------
+  //
+  // substrIngest/segIngest, their takedowns and the four streaming twins
+  // maintain ONE design with two keys: a bucketed count index (`windex`
+  // keyed by window string, `segindex` by segment string) plus a `docs`
+  // table of cleaned rows keyed by doc id, both MOR graft tables under
+  // `dir`. The pieces below are that design's only copy — the open step,
+  // the docs probe (above), the index join, the ingest commit and the
+  // count subtraction; each verb keeps just its key extraction, its
+  // first-occurrence columns and its cleaned-row assembly.
+
+  /** One count index's fixed shape: its table under `dir`, its key
+    * column, the noun its keys are named by in refusals, and the columns
+    * a batch join reads from it (index column → alias; `cnt` first).
+    * `namesCounts`: the underflow refusal also names the stored and
+    * subtracted counts. */
+  private final case class CountKind(table: String, key: String,
+      noun: String, hist: Seq[(String, String)], namesCounts: Boolean)
+  private val WindowIndex =
+    CountKind("windex", "win", "window", Seq("cnt" -> "hcnt"), false)
+  private val SegmentIndex = CountKind("segindex", "seg", "segment",
+    Seq("cnt" -> "hcnt", "fdoc" -> "hfdoc", "fpos" -> "hfpos"), true)
+
+  /** An opened count index: both table paths, whether the index has no
+    * commit yet (the bootstrap batch), and the unit contract it was
+    * opened under. */
+  private final case class CountIndex(kind: CountKind, idxDir: String,
+      docsDir: String, boot: Boolean, contract: Map[String, String])
+
+  /** The open step: the index Timeline, the bootstrap test, and — on an
+    * existing index — the persisted ingest contract check. */
+  private def openCountIndex(spark: org.apache.spark.sql.SparkSession,
+      dir: String, kind: CountKind,
+      contract: Map[String, String]): CountIndex = {
+    val idxDir = s"$dir/${kind.table}"
+    val tl = graft.format.Timeline(spark.sessionState.newHadoopConf(), idxDir)
+    val boot = tl.completedInstants().isEmpty
+    if (!boot) assertIngestContract(tl, idxDir, contract)
+    CountIndex(kind, idxDir, s"$dir/docs", boot, contract)
+  }
+
+  /** One ingest batch after its guards: `batch` = (k, bcnt, …) per-key
+    * batch aggregate; `totals` projects the cumulative index row from it
+    * and the index's `hist` aliases (all null at bootstrap, when there is
+    * no index yet). The totals are checkpointed ONCE — re-read by the hot
+    * pick, the caller's mark join and the commit — and the hot pick
+    * (top `hotN` keys by count, at least `hotMinCount`) is an exact local
+    * re-scan of them. `clean(totals, hot)` assembles the batch's cleaned
+    * rows, returned exactly as recorded in `docs`.
+    *
+    * Commit: the bootstrap creates docs first and the index last — the
+    * boot gate tests the index, so a crash between the creates leaves a
+    * retryable half, never a wedge — and the ingest contract rides the
+    * index's creation-commit extras (the buckets mechanism). Every later
+    * batch commits BOTH tables in ONE [[graft.write.MultiTableTxn]].
+    * Both tables are MOR (r13): every batch touches every bucket (key
+    * hashes are uniform), so COW upserts rewrote the WHOLE index per
+    * batch; MOR appends are batch-sized delta commits that snapshots and
+    * the storage-partitioned join merge natively (GraftMorBatchScan),
+    * and maintenance compaction amortizes the rewrite on the operator's
+    * schedule. deltaCounters=off: these state tables feed joins, never
+    * metadata COUNT(*), so the per-delta live-count existence join
+    * (snapshot-keys-sized however small the batch) buys nothing. */
+  private def ingestCounts(spark: org.apache.spark.sql.SparkSession,
+      ix: CountIndex, batch: DataFrame, totals: Seq[Column],
+      numBuckets: Int, ts: Option[String], hotN: Int, hotMinCount: Long)(
+      clean: (DataFrame, Seq[org.apache.spark.sql.Row]) => DataFrame)
+      : DataFrame = {
+    val tot =
+      if (ix.boot)
+        batch.select(col("*") +: ix.kind.hist.map(h => lit(null).as(h._2)): _*)
+          .select(totals: _*).localCheckpoint(true)
+      else joinIndexCounts(spark, ix, batch, totals)
+    val hot =
+      if (hotN <= 0) Nil
+      else tot.filter(col("cnt") >= hotMinCount)
+        .orderBy(col("cnt").desc, col(ix.kind.key).asc).limit(hotN)
+        .collect().toSeq
+    val cleaned = clean(tot, hot).localCheckpoint(true)
+    val idxRows = tot
+      .withColumn("k", col(ix.kind.key)).withColumn("p", lit("all"))
+    val docRows = cleaned
+      .withColumn("k", col("doc_id").cast("string"))
+      .withColumn("p", lit("all"))
+    if (ix.boot)
+      Seq((docRows, ix.docsDir, Map.empty[String, String]),
+          (idxRows, ix.idxDir, ix.contract)).foreach { case (df, path, extra) =>
+        graft.write.FormatWriter.append(spark, path,
+          Map("key" -> "k", "partition" -> "p", "type" -> "mor",
+            "deltaCounters" -> "off",
+            "buckets" -> numBuckets.toString) ++ ts.map("ts" -> _),
+          df, extra)
+      }
+    else
+      graft.write.MultiTableTxn.commit(spark, Seq(
+        graft.write.MultiTableTxn.TableWrite(ix.idxDir,
+          updates = Some(idxRows)),
+        graft.write.MultiTableTxn.TableWrite(ix.docsDir,
+          updates = Some(docRows)))): Unit
+    cleaned
+  }
+
+  /** One takedown after its key extraction: `counts` = (key, dcnt) of
+    * the deleted `rows` (checkpointed, with `doc_id`). Opens the index
+    * under the `unit` contract, runs the all-ingested guard (unless the
+    * caller already probed), joins the counts to the index, refuses an
+    * underflow naming the key BEFORE any commit, then subtracts in ONE
+    * transaction: index rows above zero update, rows reaching zero and
+    * the docs rows delete. Returns the number of rows removed. */
+  private def subtractCounts(spark: org.apache.spark.sql.SparkSession,
+      verb: String, dir: String, kind: CountKind, unit: String,
+      rows: DataFrame, guard: Boolean, counts: DataFrame): Long = {
+    val ix = openCountIndex(spark, dir, kind, Map(IngestUnitKey -> unit))
+    require(!ix.boot, s"$verb: no ${kind.noun} index at ${ix.idxDir}")
+    if (guard)
+      assertAllIngested(spark, ix.docsDir, rows.select(col("doc_id")), verb)
+    val joined = joinIndexCounts(spark, ix,
+      counts.withColumnRenamed(kind.key, "k"), Seq(col("*")))
     val bad = joined
       .filter(col("hcnt").isNull || col("hcnt") < col("dcnt"))
       .limit(1).collect()
-    require(bad.isEmpty,
-      s"substrDelete: window '${bad.headOption.map(_.getString(0))
-        .getOrElse("")}' would underflow — the supplied text differs " +
-        "from what was ingested; delete exactly the rows as ingested")
+    require(bad.isEmpty, {
+      val r = bad.head
+      val stored =
+        if (kind.namesCounts) s" (stored ${r.get(2)} < subtracted ${r.get(1)})"
+        else ""
+      s"$verb: ${kind.noun} '${r.getString(0)}' would underflow$stored — " +
+        "the supplied text differs from what was ingested; delete " +
+        "exactly the rows as ingested"
+    })
     val upd = joined.filter(col("hcnt") > col("dcnt"))
-      .select(col("k").as("win"),
-        (col("hcnt") - col("dcnt")).as("cnt"),
-        col("k"), lit("all").as("p"))
+      .select(Seq(col("k").as(kind.key),
+        (col("hcnt") - col("dcnt")).as("cnt")) ++
+        kind.hist.tail.map { case (c, a) => col(a).as(c) } ++
+        Seq(col("k"), lit("all").as("p")): _*)
     val dels = joined.filter(col("hcnt") === col("dcnt"))
       .select(col("k"), lit("all").as("p"))
-    val docDels = toks
+    val docDels = rows
       .select(col("doc_id").cast("string").as("k"), lit("all").as("p"))
     graft.write.MultiTableTxn.commit(spark, Seq(
-      graft.write.MultiTableTxn.TableWrite(idxDir,
+      graft.write.MultiTableTxn.TableWrite(ix.idxDir,
         updates = Some(upd), deletes = Some(dels)),
-      graft.write.MultiTableTxn.TableWrite(docsDir,
+      graft.write.MultiTableTxn.TableWrite(ix.docsDir,
         deletes = Some(docDels)))): Unit
-    toks.count()
+    rows.count()
   }
 
-  /** Batch-counts ↔ index join on the index's OWN bucket layout — the
-    * storage-partitioned-join machinery the ingest paths use (isolated
-    * session so the v2-bucketing confs never leak; only the BATCH side
-    * exchanges, the index partitions are read co-located). `batch` is
-    * `(k, dcnt)`; returns `(k, dcnt, <histCols>)` left-joined and
-    * eagerly checkpointed (re-read by the caller's validation + both
-    * txn frames). */
+  /** Batch ↔ index join on the index's OWN bucket layout — the only
+    * index join of the count indexes. `batch` is keyed by `k`; the
+    * result is `out` projected over (k, batch columns, the index's
+    * `hist` aliases), left-joined and eagerly checkpointed.
+    *
+    * Storage-partitioned: the index's DSv2 scan (catalog mount, the
+    * table's own bucket key `k` as join key) reports bucket(n, k)
+    * KeyGroupedPartitioning, and with the v2-bucketing shuffle conf only
+    * the BATCH side exchanges, into the index's bucket layout — the index
+    * partitions are read co-located, never shuffled, so per-batch
+    * exchange bytes track the batch however large the index grows
+    * (SOAK_r13 gates it). (r12 joined through the format-level reader,
+    * which re-shuffled the full index every batch.)
+    *
+    * Checkpoint barrier: a batch aggregate leaves a shuffle-partitions
+    * hash partitioning that outbids the index's key-grouped spec in
+    * EnsureRequirements' side selection — Spark would then re-shuffle the
+    * INDEX (index-sized exchange, the exact cost this join exists to
+    * avoid). Checkpointing the batch — AFTER its key is renamed to `k` —
+    * drops the reusable spec so the scan side's layout wins.
+    *
+    * ISOLATED session (r14): the join needs
+    * spark.sql.sources.v2.bucketing{,.shuffle}.enabled; flipping them on
+    * the CALLER's session leaked into concurrent queries during the eager
+    * checkpoint, and two interleaved ingests could restore each other's
+    * stale values. newSession shares the SparkContext (and re-applies
+    * builder-time options) but owns its SQLConf, so the flip is invisible
+    * outside; frames cross sessions as materialized RDDs (batch-sized both
+    * ways). Runtime-set confs are NOT inherited — the sizing conf the join
+    * cares about is copied explicitly. */
   private def joinIndexCounts(spark: org.apache.spark.sql.SparkSession,
-      idxDir: String, batch: DataFrame,
-      histCols: Seq[Column]): DataFrame = {
+      ix: CountIndex, batch: DataFrame, out: Seq[Column]): DataFrame = {
     val bc = batch.localCheckpoint(true)
     val iso = spark.newSession()
     iso.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     iso.conf.set("spark.sql.sources.v2.bucketing.shuffle.enabled", "true")
     iso.conf.set("spark.sql.shuffle.partitions",
       spark.conf.get("spark.sql.shuffle.partitions"))
-    val hist = graft.util.CatalogMount.table(iso, idxDir)
-      .select(col("k") +: histCols: _*)
-    val bcIso = org.apache.spark.sql.graft.Bridge
+    val hist = graft.util.CatalogMount.table(iso, ix.idxDir)
+      .select(col("k") +: ix.kind.hist.map { case (c, a) => col(c).as(a) }: _*)
+    val joined = org.apache.spark.sql.graft.Bridge
       .sinkBatchDataFrame(iso, bc)
-    val joined = bcIso.join(hist, Seq("k"), "left")
+      .join(hist, Seq("k"), "left").select(out: _*)
       .localCheckpoint(true) // eager: the plan runs under iso's conf
     org.apache.spark.sql.graft.Bridge.sinkBatchDataFrame(spark, joined)
   }
+
 
   /** (id_a, id_b, inter) + per-doc set sizes → integer-exact Jaccard
     * per-mille: floor(inter·1000 / (sz_a + sz_b − inter)). */
@@ -2370,40 +2310,6 @@ object Dedup {
           (col("sz_a") + col("sz_b") - col("inter"))).cast("long"))
       .filter(col("jaccard_permille") >= thresholdPermille)
       .select("id_a", "id_b", "jaccard_permille")
-
-  /** Cap bucket membership: keep the `maxBucket` smallest ids per bucket
-    * (deterministic; overflow rows rely on their other bands). */
-  /** r16 form of the bucket cap, kept as the property-test reference for
-    * the aggregate form below: `row_number() OVER (PARTITION BY band,
-    * bucket ORDER BY id) <= maxBucket`. */
-  private[graft] def capBucketsViaWindow(bucketed: DataFrame,
-      maxBucket: Int): DataFrame = {
-    val w = Window.partitionBy("band", "bucket").orderBy(col("id").asc)
-    bucketed.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= maxBucket).drop("__rn")
-  }
-
-  /** r16 pair generators over a capped bucket stream, kept as the
-    * property-test reference for [[candidatePairs]] /
-    * [[candidatePairsHomeProbe]]. */
-  private[graft] def candidatePairsViaSelfJoin(bucketed: DataFrame,
-      maxBucket: Int): DataFrame =
-    capBucketsViaWindow(bucketed, maxBucket).as("x")
-      .join(capBucketsViaWindow(bucketed, maxBucket).as("y"),
-        Seq("band", "bucket"))
-      .filter(col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .distinct()
-
-  private[graft] def candidatePairsHomeProbeViaSelfJoin(
-      bucketed: DataFrame, maxBucket: Int): DataFrame =
-    capBucketsViaWindow(bucketed, maxBucket).as("x")
-      .join(capBucketsViaWindow(bucketed, maxBucket).as("y"),
-        Seq("band", "bucket"))
-      .filter(col("x.id") < col("y.id") &&
-        (col("x.p") === 0 || col("y.p") === 0))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .distinct()
 
   /** Capped co-bucket membership in ONE map-side-combined aggregate
     * (r17, guide §2.2/§2.5): each (band, bucket) group folds to its

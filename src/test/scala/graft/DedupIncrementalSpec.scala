@@ -256,6 +256,30 @@ class DedupIncrementalSpec extends SparkSpec {
     assert(counts == ((2, 2)))
   }
 
+  /** Two count indexes (window and segment) bootstrapped on doc 1, and
+    * the non-bootstrap batch of each verb that runs the index join:
+    * both ingests of doc 2, then both takedowns of it. */
+  private def countIndexVerbs(name: String): Seq[(String, () => Any)] = {
+    val sub = freshDir(s"${name}_substr")
+    val seg = freshDir(s"${name}_seg")
+    val d1 = docs((1L, "one two three four five six seven eight nine"))
+    val d2 = docs((2L, "ten eleven twelve thirteen fourteen fifteen " +
+      "sixteen seventeen eighteen"))
+    graft.pipeline.Dedup.substrIngest(spark, sub, d1, $"doc_id", $"text",
+      w = 8, ts = Some(C1))
+    graft.pipeline.Dedup.segIngest(spark, seg, d1, $"doc_id", $"text",
+      width = 3, ts = Some(C1))
+    Seq(
+      "substrIngest" -> (() => graft.pipeline.Dedup.substrIngest(spark, sub,
+        d2, $"doc_id", $"text", w = 8).collect()),
+      "segIngest" -> (() => graft.pipeline.Dedup.segIngest(spark, seg, d2,
+        $"doc_id", $"text", width = 3).collect()),
+      "substrDelete" -> (() => graft.pipeline.Dedup.substrDelete(spark, sub,
+        d2, $"doc_id", $"text", w = 8)),
+      "segDelete" -> (() => graft.pipeline.Dedup.segDelete(spark, seg, d2,
+        $"doc_id", $"text", width = 3)))
+  }
+
   test("substrIngest's SPJ conf flips are invisible to the caller's " +
       "session, even DURING the ingest (isolated-session window)") {
     val keys = Seq("spark.sql.sources.v2.bucketing.enabled",
@@ -265,34 +289,93 @@ class DedupIncrementalSpec extends SparkSpec {
     // final value (the interleaved-restore bug class)
     keys.foreach(k => spark.conf.set(k, "false"))
     try {
-      val dir = freshDir("substr_inc_conf")
-      graft.pipeline.Dedup.substrIngest(spark, dir,
-        docs((1L, "one two three four five six seven eight nine")),
-        $"doc_id", $"text", w = 8, ts = Some(C1))
-      @volatile var leaked: Option[String] = None
-      @volatile var stop = false
-      val poller = new Thread(() => {
-        while (!stop) {
-          keys.foreach { k =>
-            if (spark.conf.get(k) == "true") leaked = Some(k)
+      // every verb's non-bootstrap batch runs the index join under the
+      // flipped confs (an eager checkpoint, a real execution window)
+      countIndexVerbs("count_conf").foreach { case (verb, run) =>
+        @volatile var leaked: Option[String] = None
+        @volatile var stop = false
+        val poller = new Thread(() => {
+          while (!stop) {
+            keys.foreach { k =>
+              if (spark.conf.get(k) == "true") leaked = Some(k)
+            }
+            Thread.sleep(1)
           }
-          Thread.sleep(1)
-        }
-      })
-      poller.setDaemon(true)
-      poller.start()
-      try
-        // non-bootstrap batch: this is the path that runs the SPJ under
-        // the flipped confs (an eager checkpoint, a real execution window)
-        graft.pipeline.Dedup.substrIngest(spark, dir,
-          docs((2L, "ten eleven twelve thirteen fourteen fifteen " +
-            "sixteen seventeen eighteen")), $"doc_id", $"text", w = 8)
-      finally { stop = true; poller.join(1000) }
-      assert(leaked.isEmpty, s"conf ${leaked.getOrElse("")} leaked to " +
-        "the outer session during ingest")
-      assert(keys.forall(spark.conf.get(_) == "false"),
-        "outer-session conf values changed across the ingest")
+        })
+        poller.setDaemon(true)
+        poller.start()
+        try run()
+        finally { stop = true; poller.join(1000) }
+        assert(leaked.isEmpty, s"$verb: conf ${leaked.getOrElse("")} " +
+          "leaked to the outer session")
+        assert(keys.forall(spark.conf.get(_) == "false"),
+          s"$verb: outer-session conf values changed")
+      }
     } finally keys.foreach(spark.conf.unset)
+  }
+
+  /** The plan lines from `node` up to the root of a formatted final plan
+    * tree: each line's parent is the nearest line above it whose node
+    * starts further left. */
+  private def ancestry(tree: Seq[String], node: Int): Seq[String] = {
+    def indent(l: String): Int = l.indexWhere(c => !" :+-".contains(c))
+    tree.take(node).reverse.foldLeft(Seq(tree(node))) { (up, l) =>
+      if (indent(l) < indent(up.last)) up :+ l else up
+    }
+  }
+
+  test("the count-index join shuffles only the batch side: no Exchange " +
+      "between the index scan and the join in a non-bootstrap batch of " +
+      "substrIngest, segIngest, substrDelete and segDelete") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+    import org.apache.spark.sql.graft.{Bridge, NewSessionConf}
+    // small test indexes would be broadcast to the join; the isolated
+    // join session starts from the context conf, so switch broadcasts off
+    // there to see the partitioned join the sizes of production take
+    NewSessionConf.withValue(spark, "spark.sql.autoBroadcastJoinThreshold",
+        "-1") {
+      countIndexVerbs("count_plan").foreach { case (verb, run) =>
+        val sc = spark.sparkContext
+        Bridge.waitForListeners(sc)
+        // each execution's latest plan: the start event's, replaced by
+        // every adaptive update (the last one is the final plan)
+        val plans = new java.util.concurrent.ConcurrentHashMap[Long, String]
+        val l = new SparkListener {
+          override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+            case s: SparkListenerSQLExecutionStart =>
+              plans.put(s.executionId, s.physicalPlanDescription)
+            case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+              plans.put(u.executionId, u.physicalPlanDescription)
+            case _ =>
+          }
+        }
+        sc.addSparkListener(l)
+        try { run(); Bridge.waitForListeners(sc) }
+        finally sc.removeSparkListener(l)
+        import scala.jdk.CollectionConverters._
+        val index = if (verb.startsWith("seg")) "segindex" else "windex"
+        val joins = plans.values.asScala.toSeq.map(p =>
+            p.split("\n").toSeq
+              .dropWhile(!_.contains("== Final Plan =="))
+              .takeWhile(!_.contains("== Initial Plan ==")))
+          .filter(_.exists(_.contains(s"BatchScan $index")))
+        assert(joins.size == 1, s"$verb: one index join execution, got " +
+          joins.map(_.mkString("\n")).mkString("\n\n"))
+        val tree = joins.head
+        val up = ancestry(tree, tree.indexWhere(_.contains("BatchScan")))
+        val below = up.takeWhile(!_.contains("Join"))
+        assert(up.exists(_.contains("SortMergeJoin")),
+          s"$verb: the index scan feeds no partitioned join:\n" +
+            tree.mkString("\n"))
+        assert(!below.exists(n => n.contains("Exchange") ||
+            n.contains("QueryStage") || n.contains("AQEShuffleRead")),
+          s"$verb: the index side is exchanged:\n" + tree.mkString("\n"))
+        assert(tree.exists(_.contains("Exchange")),
+          s"$verb: the batch side never shuffles into the index layout:\n" +
+            tree.mkString("\n"))
+      }
+    }
   }
 
   test("segIngest: arrival-first survives, later duplicates drop their " +

@@ -1,6 +1,8 @@
 package graft
 
 import graft.pipeline.Dedup
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.Prop.propBoolean
@@ -127,6 +129,15 @@ object DedupProps extends Properties("Dedup.ngramJaccard") {
           s"cap >= corpus size must be lossless: $inactive vs $lossless")
     }
 
+  /** REFERENCE form of [[Dedup.winnowPrefix]]'s dfCap stage (the r17
+    * rank window) — kept for the bit-identity pin below. */
+  private def winnowPrefixCapViaWindow(prefix0: DataFrame,
+      cap: Int): DataFrame = {
+    val wCap = Window.partitionBy("block", "fp").orderBy(col("id").asc)
+    prefix0.withColumn("__pn", row_number().over(wCap))
+      .filter(col("__pn") <= cap).drop("__pn")
+  }
+
   /** r18: the dfCap posting truncation moved from a rank window to the
     * bounded MinKAgg heap aggregate — the kept (id, block, fp, sz) rows
     * must be IDENTICAL to the window form (ids unique per posting, so
@@ -144,7 +155,7 @@ object DedupProps extends Properties("Dedup.ngramJaccard") {
         d.select(col("id"), col("block").cast("long"), col("fp"), col("sz"))
           .as[(Long, Long, Long, Long)].collect().toSet
       val agg = rows(Dedup.winnowPrefix(base, minShared, None, Some(cap)))
-      val win = rows(Dedup.winnowPrefixCapViaWindow(
+      val win = rows(winnowPrefixCapViaWindow(
         Dedup.winnowPrefix(base, minShared, None, None), cap))
       (agg == win) :| s"aggregate cap $agg != window cap $win"
     }
@@ -180,6 +191,38 @@ object DedupProps extends Properties("Dedup.ngramJaccard") {
         (got == want) :| s"got $got, want $want"
     }
 
+  /** r16 form of the bucket cap, the reference for
+    * [[Dedup.cappedIds]]: keep the `maxBucket` smallest ids per
+    * (band, bucket) — `row_number() OVER (PARTITION BY band, bucket
+    * ORDER BY id) <= maxBucket`. */
+  private def capBucketsViaWindow(bucketed: DataFrame,
+      maxBucket: Int): DataFrame = {
+    val w = Window.partitionBy("band", "bucket").orderBy(col("id").asc)
+    bucketed.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") <= maxBucket).drop("__rn")
+  }
+
+  /** r16 pair generators over a capped bucket stream, the references for
+    * [[Dedup.candidatePairs]] / [[Dedup.candidatePairsHomeProbe]]. */
+  private def candidatePairsViaSelfJoin(bucketed: DataFrame,
+      maxBucket: Int): DataFrame =
+    capBucketsViaWindow(bucketed, maxBucket).as("x")
+      .join(capBucketsViaWindow(bucketed, maxBucket).as("y"),
+        Seq("band", "bucket"))
+      .filter(col("x.id") < col("y.id"))
+      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
+      .distinct()
+
+  private def candidatePairsHomeProbeViaSelfJoin(
+      bucketed: DataFrame, maxBucket: Int): DataFrame =
+    capBucketsViaWindow(bucketed, maxBucket).as("x")
+      .join(capBucketsViaWindow(bucketed, maxBucket).as("y"),
+        Seq("band", "bucket"))
+      .filter(col("x.id") < col("y.id") &&
+        (col("x.p") === 0 || col("y.p") === 0))
+      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
+      .distinct()
+
   /** r17: the MinKAgg bucket-cap + in-row pair explosion must reproduce
     * the r16 rank-window + self-join pair set exactly, in both the plain
     * and the home/probe variant (random co-bucket streams, small caps so
@@ -207,11 +250,11 @@ object DedupProps extends Properties("Dedup.ngramJaccard") {
         .toDF("id", "band", "bucket", "p")
       val gotPlain = Dedup.candidatePairs(df, cap)
         .as[(Long, Long)].collect().toSet
-      val refPlain = Dedup.candidatePairsViaSelfJoin(df, cap)
+      val refPlain = candidatePairsViaSelfJoin(df, cap)
         .as[(Long, Long)].collect().toSet
       val gotHp = Dedup.candidatePairsHomeProbe(df, cap)
         .as[(Long, Long)].collect().toSet
-      val refHp = Dedup.candidatePairsHomeProbeViaSelfJoin(df, cap)
+      val refHp = candidatePairsHomeProbeViaSelfJoin(df, cap)
         .as[(Long, Long)].collect().toSet
       ((gotPlain == refPlain) :| s"plain: got $gotPlain want $refPlain") &&
         ((gotHp == refHp) :| s"homeProbe: got $gotHp want $refHp")
