@@ -1222,17 +1222,11 @@ object Dedup {
     * travel, OCC, and cleaning for free.
     *
     * Scale: per batch, one count-by-window shuffle of the batch's own
-    * windows plus one STORAGE-PARTITIONED join against the index: the
-    * windex is a bucketed graft table, so its DSv2 scan reports
-    * `bucket(n, k)` KeyGroupedPartitioning and (with the v2-bucketing
-    * shuffle conf, set around the join) Spark shuffles ONLY the
-    * batch-side counts into the index's bucket layout — the index
-    * partitions are read co-located, never shuffled. Per-batch exchange
-    * bytes therefore track the BATCH's window count however large the
-    * index grows (SOAK_r13 gates it); the already-ingested corpus text
-    * is never re-read. (r12 joined through the format-level reader,
-    * which re-shuffled the full index every batch — the sharded-suffix-
-    * array merge cost class, now strictly better.)
+    * windows plus one STORAGE-PARTITIONED join against the index
+    * ([[joinIndexCounts]]): only the batch-side counts exchange, into the
+    * windex's bucket layout, so per-batch exchange bytes track the
+    * BATCH's window count however large the index grows (SOAK_r13 gates
+    * it); the already-ingested corpus text is never re-read.
     *
     * Returns the batch's cleaned rows (doc_id, kept_text, n_tokens,
     * removed_tokens), exactly as recorded in `dir/docs`. `ts` pins the
@@ -2296,7 +2290,6 @@ object Dedup {
       .localCheckpoint(true) // eager: the plan runs under iso's conf
     org.apache.spark.sql.graft.Bridge.sinkBatchDataFrame(spark, joined)
   }
-
 
   /** (id_a, id_b, inter) + per-doc set sizes → integer-exact Jaccard
     * per-mille: floor(inter·1000 / (sz_a + sz_b − inter)). */
